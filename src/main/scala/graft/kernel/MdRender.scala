@@ -8,9 +8,9 @@ import BboxScale.{kernelError, pyIntOf}
   *
   * Category contract (prompts.py:7-13): Formula text is LaTeX, Table text is
   * HTML (passed through), everything else Markdown; Picture has no text and
-  * embeds a crop data-URI — we emit a deterministic placeholder URI instead
-  * of a raster crop (documented deviation; the reference itself does not
-  * parse picture content, README.md:1218).
+  * embeds a crop data-URI: a real PNG crop of the page raster when the page
+  * carries one ([[Raster]]), else a deterministic placeholder URI (pages
+  * without a raster — every HTML page — have nothing to crop).
   */
 object MdRender {
 
@@ -95,7 +95,8 @@ object MdRender {
   }
 
   /** Deterministic stand-in for the reference's base64 PNG crop embed
-    * (format_transformer.py:169-172) — we do not rasterize. */
+    * (format_transformer.py:169-172) on pages that carry no raster, and
+    * on rasters neither decode path can read. */
   def picturePlaceholder(x1: BigInt, y1: BigInt, x2: BigInt, y2: BigInt): String = {
     val payload = s"crop:$x1,$y1,$x2,$y2"
     val b64 = java.util.Base64.getEncoder.encodeToString(payload.getBytes("UTF-8"))
@@ -108,8 +109,7 @@ object MdRender {
     * (the per-cell rendering is independent of the noPageHf flag). */
   def renderSegments(cells: Vector[JValue], textKey: String = "text",
       raster: Option[scala.collection.immutable.ArraySeq[Byte]] = None): Vector[(String, String)] = {
-    val hfSkipped = layoutJsonToMdImpl(cells, textKey, noPageHf = false, raster)
-    hfSkipped
+    layoutJsonToMdImpl(cells, textKey, noPageHf = false, raster)
   }
 
   def segmentsToMd(segments: Vector[(String, String)], noPageHf: Boolean): String = {
@@ -120,19 +120,24 @@ object MdRender {
   /** layoutjson2md (format_transformer.py:145-180). Raises [[BboxScale.KernelError]]
     * exactly where the reference's Python would raise. */
   def layoutJsonToMd(cells: Vector[JValue], textKey: String = "text", noPageHf: Boolean = false,
-      raster: Option[scala.collection.immutable.ArraySeq[Byte]] = None): String = {
-    if (!noPageHf) return segmentsToMd(layoutJsonToMdImpl(cells, textKey, noPageHf = false, raster), noPageHf = false)
-    // noPageHf skips hf cells BEFORE rendering them — preserve exactly
-    segmentsToMd(layoutJsonToMdImpl(cells, textKey, noPageHf = true, raster), noPageHf = false)
-  }
+      raster: Option[scala.collection.immutable.ArraySeq[Byte]] = None): String =
+    // noPageHf skips hf cells BEFORE rendering them (the reference's
+    // order), so the flag goes to the renderer, not to segmentsToMd
+    segmentsToMd(layoutJsonToMdImpl(cells, textKey, noPageHf, raster), noPageHf = false)
 
-  private def layoutJsonToMdImpl(cells: Vector[JValue], textKey: String, noPageHf: Boolean,
-      raster: Option[scala.collection.immutable.ArraySeq[Byte]] = None): Vector[(String, String)] = {
+  /** `decodePage` is the direct-path page decode; tests pass a counting
+    * wrapper to pin that it runs at most once per page. */
+  private[kernel] def layoutJsonToMdImpl(cells: Vector[JValue], textKey: String, noPageHf: Boolean,
+      raster: Option[scala.collection.immutable.ArraySeq[Byte]],
+      decodePage: Array[Byte] => Option[Raster.RgbRows] = Raster.decodeRgb): Vector[(String, String)] = {
     // decode the page raster at most once, and only if a Picture cell
     // actually renders — pages without Picture cells never pay the decode
     lazy val rasterBytes: Option[Array[Byte]] = raster.map(_.toArray)
     lazy val rasterHeader: Option[(Int, Int, Boolean)] =
       rasterBytes.flatMap(b => try Raster.headerInfo(b) catch { case _: Exception => None })
+    // direct PNG crop path first; the ImageIO decode below runs only for
+    // rasters (or boxes) the direct path declines
+    lazy val pageRows: Option[Raster.RgbRows] = rasterBytes.flatMap(decodePage)
     lazy val pageImg: Option[java.awt.image.BufferedImage] =
       rasterBytes.flatMap { b =>
         try Some(Raster.decode(b)) catch { case _: Exception => None }
@@ -180,12 +185,13 @@ object MdRender {
             if (fullBleed) {
               val b = rasterBytes.get
               s"data:${rasterMime(b)};base64," + java.util.Base64.getEncoder.encodeToString(b)
-            } else pageImg match {
-              case Some(img) =>
-                try Raster.pngDataUri(Raster.pilCrop(img, x1.toInt, y1.toInt, x2.toInt, y2.toInt))
-                catch { case _: Exception => picturePlaceholder(x1, y1, x2, y2) }
-              case None => picturePlaceholder(x1, y1, x2, y2)
-            }
+            } else pageRows.flatMap(_.cropDataUri(x1.toInt, y1.toInt, x2.toInt, y2.toInt))
+              .getOrElse(pageImg match {
+                case Some(img) =>
+                  try Raster.pngDataUri(Raster.pilCrop(img, x1.toInt, y1.toInt, x2.toInt, y2.toInt))
+                  catch { case _: Exception => picturePlaceholder(x1, y1, x2, y2) }
+                case None => picturePlaceholder(x1, y1, x2, y2)
+              })
           items += ((categoryStr, s"![]($uri)"))
         } else if (categoryStr == "Formula") {
           text match {

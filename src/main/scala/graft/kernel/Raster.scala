@@ -2,12 +2,28 @@ package graft.kernel
 
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.util.zip.{CRC32, DataFormatException, Deflater, Inflater}
 import javax.imageio.ImageIO
 
 /** Minimal raster kernel for the Picture-crop embed: decode the page PNG,
   * crop a cell bbox with PIL semantics, re-encode as a base64 PNG data URI
   * (reference: `image.crop((x1,y1,x2,y2))` + `PILimage_to_base64`,
   * format_transformer.py:169-172 / image_utils.py:67-71).
+  *
+  * Two paths produce the same bytes:
+  *  - the DIRECT path ([[decodeRgb]] + [[RgbRows.cropDataUri]]) inflates
+  *    the page once into packed RGB rows, copies each box out of them and
+  *    writes the crop PNG itself. It accepts only a non-interlaced 8-bit
+  *    RGB/RGBA PNG made of IHDR, IDAT and IEND chunks, every CRC valid,
+  *    whose zlib stream ends at exactly `H × (1 + stride)` bytes with every
+  *    filter byte in 0–4. It writes the crop the way JDK 17's
+  *    `PNGImageWriter` writes a `TYPE_INT_RGB` image: IHDR colour type 2
+  *    depth 8, filter None on every row, one `Deflater(4)` stream, IDAT
+  *    split at 32 KiB, IEND.
+  *  - the ImageIO path ([[decode]] + [[pilCrop]] + [[pngDataUri]]) takes
+  *    every input the direct path declines (gray, palette, 16-bit,
+  *    interlaced, ancillary chunks, JPEG, damaged streams) and is the
+  *    reference the direct path is tested against byte for byte.
   *
   * Lives in `graft.kernel` (not `graft.ops.MultimodalOps.Codec`, its
   * sibling) so the kernel keeps a one-way dependency on nothing above it.
@@ -19,11 +35,11 @@ object Raster {
 
   // ImageIO's default scratch cache is FILE-backed: every read/write over
   // a stream stages through a temp file on disk (FileCacheImageInput/
-  // OutputStream). In-memory payloads gain nothing from that and pay a
-  // file create+write+delete per Picture crop — executor thread samples
-  // put the raster path at ~24% of extraction kernel time. Memory staging
-  // is byte-identical output, just without the syscalls. (JVM-global;
-  // MultimodalOps.Codec sets it too — either may class-load first.)
+  // OutputStream). In-memory payloads gain nothing from that and would pay
+  // a file create+write+delete per fallback crop and per image-branch
+  // decode. Memory staging is byte-identical output, just without the
+  // syscalls. (JVM-global; MultimodalOps.Codec sets it too — either may
+  // class-load first.)
   ImageIO.setUseCache(false)
 
   /** (width, height, opaque) from the PNG IHDR / JPEG SOF header WITHOUT
@@ -142,5 +158,200 @@ object Raster {
     val bos = new ByteArrayOutputStream()
     ImageIO.write(img, "png", bos)
     "data:image/png;base64," + java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
+  }
+
+  // JDK 17 PNGImageWriter constants for a TYPE_INT_RGB image
+  private val PngSignature = Array[Byte](0x89.toByte, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
+  private val WriterDeflateLevel = 4
+  private val WriterIdatChunk = 32768
+  // raw (unfiltered) sizes above this take the ImageIO path, which then
+  // behaves exactly as before on such inputs
+  private val MaxRawBytes = 1L << 28
+
+  /** A page raster decoded by the direct path: `height` rows of
+    * `1 + 3 × width` bytes, a spare leading byte then packed 8-bit RGB. */
+  final class RgbRows private[Raster] (width: Int, height: Int, rows: Array[Byte]) {
+    private val rowLen = 1 + 3 * width
+
+    /** The crop's `data:image/png;base64,...` URI, byte-identical to
+      * `pngDataUri(pilCrop(decode(png), x1, y1, x2, y2))`; None for a
+      * degenerate or oversized box, which the ImageIO path then handles. */
+    def cropDataUri(x1: Int, y1: Int, x2: Int, y2: Int): Option[String] = {
+      val w = x2.toLong - x1; val h = y2.toLong - y1
+      if (w <= 0 || h <= 0 || w > MaxRawBytes || h > MaxRawBytes || (1 + 3 * w) * h > MaxRawBytes)
+        return None
+      val outLen = 1 + 3 * w.toInt
+      // filter byte 0 on every row; out-of-bounds pixels stay zero (PIL)
+      val raw = new Array[Byte](outLen * h.toInt)
+      val sx1 = math.max(x1, 0); val sx2 = math.min(x2, width)
+      val sy1 = math.max(y1, 0); val sy2 = math.min(y2, height)
+      if (sx2 > sx1 && sy2 > sy1) {
+        val n = 3 * (sx2 - sx1)
+        var y = sy1
+        while (y < sy2) {
+          System.arraycopy(rows, y * rowLen + 1 + 3 * sx1,
+            raw, (y - y1) * outLen + 1 + 3 * (sx1 - x1), n)
+          y += 1
+        }
+      }
+      Some("data:image/png;base64," +
+        java.util.Base64.getEncoder.encodeToString(encodeRgbPng(w.toInt, h.toInt, raw)))
+    }
+  }
+
+  /** Direct-path decode (see the object doc for the accept rule); None
+    * for any other input, which the ImageIO path then handles. */
+  def decodeRgb(png: Array[Byte]): Option[RgbRows] =
+    try decodeStrict(png) catch { case _: DataFormatException => None }
+
+  private def decodeStrict(b: Array[Byte]): Option[RgbRows] = {
+    val n = b.length
+    if (n < 8 || !java.util.Arrays.equals(b, 0, 8, PngSignature, 0, 8)) return None
+    def be32(i: Int): Int =
+      ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) | ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
+    def isType(i: Int, t: String): Boolean =
+      b(i) == t(0) && b(i + 1) == t(1) && b(i + 2) == t(2) && b(i + 3) == t(3)
+    val crc = new CRC32
+    var width, height, bpp = 0
+    var raw: Array[Byte] = null
+    var filled = 0
+    val probe = new Array[Byte](1)
+    val inf = new Inflater()
+    try {
+      var p = 8
+      var seenIdat, seenIend = false
+      while (p < n) {
+        if (seenIend || n - p < 12) return None
+        val len = be32(p)
+        if (len < 0 || len > n - p - 12) return None
+        crc.reset(); crc.update(b, p + 4, len + 4)
+        if (crc.getValue.toInt != be32(p + 8 + len)) return None
+        val d = p + 8
+        if (p == 8) {
+          // IHDR: colour type 2 (RGB) or 6 (RGBA), depth 8, no interlace
+          if (!isType(p + 4, "IHDR") || len != 13) return None
+          width = be32(d); height = be32(d + 4)
+          val colorType = b(d + 9)
+          bpp = if (colorType == 2) 3 else if (colorType == 6) 4 else 0
+          if (width <= 0 || height <= 0 || b(d + 8) != 8 || bpp == 0 ||
+            b(d + 10) != 0 || b(d + 11) != 0 || b(d + 12) != 0) return None
+          val rawLen = height.toLong * (1 + bpp.toLong * width)
+          if (rawLen > MaxRawBytes) return None
+          raw = new Array[Byte](rawLen.toInt)
+        } else if (isType(p + 4, "IDAT")) {
+          if (inf.finished()) return None // IDAT data past the zlib stream's end
+          seenIdat = true
+          inf.setInput(b, d, len)
+          while (!inf.finished() && !inf.needsInput()) {
+            val k =
+              if (filled < raw.length) inf.inflate(raw, filled, raw.length - filled)
+              else if (inf.inflate(probe) > 0) return None // more than H × (1 + stride)
+              else 0 // the stream's end-of-block code and Adler-32 trailer
+            if (k == 0 && !inf.finished() && !inf.needsInput()) return None // dictionary
+            filled += k
+          }
+        } else if (isType(p + 4, "IEND")) {
+          if (len != 0 || !seenIdat) return None
+          seenIend = true
+        } else return None
+        p += 12 + len
+      }
+      if (!seenIend || !inf.finished() || inf.getRemaining != 0 || filled != raw.length) return None
+    } finally inf.end()
+    if (!unfilter(raw, width, height, bpp)) return None
+    if (bpp == 4) {
+      // RGBA → RGB in place: every write index trails its read index
+      var y = 0
+      while (y < height) {
+        var s = y * (1 + 4 * width) + 1
+        var t = y * (1 + 3 * width) + 1
+        val end = s + 4 * width
+        while (s < end) {
+          raw(t) = raw(s); raw(t + 1) = raw(s + 1); raw(t + 2) = raw(s + 2)
+          s += 4; t += 3
+        }
+        y += 1
+      }
+    }
+    Some(new RgbRows(width, height, raw))
+  }
+
+  /** Undo the five PNG row filters in place; false on a filter byte > 4. */
+  private def unfilter(raw: Array[Byte], width: Int, height: Int, bpp: Int): Boolean = {
+    val stride = bpp * width
+    var y = 0
+    while (y < height) {
+      val s = y * (1 + stride) + 1 // this row's first data byte
+      val u = s - 1 - stride       // previous row's (only read when y > 0)
+      (raw(s - 1): Int) match {
+        case 0 =>
+        case 1 =>
+          var i = bpp
+          while (i < stride) { raw(s + i) = (raw(s + i) + raw(s + i - bpp)).toByte; i += 1 }
+        case 2 =>
+          if (y > 0) {
+            var i = 0
+            while (i < stride) { raw(s + i) = (raw(s + i) + raw(u + i)).toByte; i += 1 }
+          }
+        case 3 =>
+          var i = 0
+          while (i < stride) {
+            val a = if (i >= bpp) raw(s + i - bpp) & 0xff else 0
+            val up = if (y > 0) raw(u + i) & 0xff else 0
+            raw(s + i) = (raw(s + i) + ((a + up) >>> 1)).toByte
+            i += 1
+          }
+        case 4 =>
+          var i = 0
+          while (i < stride) {
+            val a = if (i >= bpp) raw(s + i - bpp) & 0xff else 0
+            val up = if (y > 0) raw(u + i) & 0xff else 0
+            val c = if (i >= bpp && y > 0) raw(u + i - bpp) & 0xff else 0
+            val pa = math.abs(up - c); val pb = math.abs(a - c); val pc = math.abs(a + up - 2 * c)
+            val pred = if (pa <= pb && pa <= pc) a else if (pb <= pc) up else c
+            raw(s + i) = (raw(s + i) + pred).toByte
+            i += 1
+          }
+        case _ => return false
+      }
+      y += 1
+    }
+    true
+  }
+
+  /** PNG bytes of a `width`×`height` RGB image whose rows (each led by its
+    * filter byte 0) are `raw`, laid out as JDK 17's PNGImageWriter does. */
+  private def encodeRgbPng(width: Int, height: Int, raw: Array[Byte]): Array[Byte] = {
+    val deflater = new Deflater(WriterDeflateLevel)
+    var z = new Array[Byte](raw.length / 4 + 64)
+    var zLen = 0
+    try {
+      deflater.setInput(raw)
+      deflater.finish()
+      while (!deflater.finished()) {
+        if (zLen == z.length) z = java.util.Arrays.copyOf(z, z.length * 2)
+        zLen += deflater.deflate(z, zLen, z.length - zLen)
+      }
+    } finally deflater.end()
+    val nIdat = (zLen + WriterIdatChunk - 1) / WriterIdatChunk
+    val out = java.nio.ByteBuffer.allocate(8 + 25 + 12 * nIdat + zLen + 12).put(PngSignature)
+    val crc = new CRC32
+    def chunk(tpe: String, data: Array[Byte], off: Int, len: Int): Unit = {
+      val start = out.position()
+      out.putInt(len).put(tpe.getBytes("US-ASCII")).put(data, off, len)
+      crc.reset(); crc.update(out.array(), start + 4, len + 4)
+      out.putInt(crc.getValue.toInt)
+    }
+    // depth 8, colour type 2 (RGB); compression, filter and interlace 0
+    val ihdr = java.nio.ByteBuffer.allocate(13).putInt(width).putInt(height).put(8: Byte).put(2: Byte)
+    chunk("IHDR", ihdr.array(), 0, 13)
+    var off = 0
+    while (off < zLen) {
+      val k = math.min(WriterIdatChunk, zLen - off)
+      chunk("IDAT", z, off, k)
+      off += k
+    }
+    chunk("IEND", z, 0, 0)
+    out.array()
   }
 }

@@ -148,6 +148,32 @@ class Layout2MdGoldenSpec extends AnyFunSuite {
     assert(mdNoRaster.contains(MdRender.picturePlaceholder(10, 20, 70, 60)))
   }
 
+  test("two partial Picture cells on one raster: both crops pixel-exact, page inflated once") {
+    import scala.collection.immutable.ArraySeq
+    val img = graft.gen.InputGen.corpusImage(300, 400, 11L)
+    val png = graft.ops.MultimodalOps.Codec.encodePng(img)
+    val boxes = Vector((55, 94, 244, 266), (8, 280, 120, 390))
+    val cells = boxes.map { case (a, b, c, d) =>
+      JObject("bbox" -> JArray(Vector(a, b, c, d).map(i => JInt(BigInt(i)))),
+        "category" -> JString("Picture"))
+    } :+ JObject("bbox" -> JArray(Vector(8, 392, 290, 398).map(i => JInt(BigInt(i)))),
+      "category" -> JString("Caption"), "text" -> JString("two figures"))
+    var decodes = 0
+    val segs = MdRender.layoutJsonToMdImpl(cells, "text", noPageHf = false,
+      Some(ArraySeq.unsafeWrapArray(png)),
+      decodePage = b => { decodes += 1; Raster.decodeRgb(b) })
+    assert(decodes == 1, "the page raster is inflated once, not once per cell")
+    assert(segs == MdRender.renderSegments(cells, raster = Some(ArraySeq.unsafeWrapArray(png))))
+    val prefix = "![](data:image/png;base64,"
+    boxes.zip(segs).foreach { case ((x1, y1, x2, y2), (category, md)) =>
+      assert(category == "Picture" && md.startsWith(prefix) && md.endsWith(")"))
+      val crop = Raster.decode(java.util.Base64.getDecoder.decode(md.substring(prefix.length, md.length - 1)))
+      assert(crop.getWidth == x2 - x1 && crop.getHeight == y2 - y1, "crop dims = bbox dims")
+      for (y <- y1 until y2; x <- x1 until x2)
+        assert((crop.getRGB(x - x1, y - y1) & 0xffffff) == (img.getRGB(x, y) & 0xffffff), s"pixel ($x,$y)")
+    }
+  }
+
   test("raster crop: out-of-bounds region zero-fills (PIL semantics); undecodable raster falls back to placeholder") {
     import scala.collection.immutable.ArraySeq
     val img = graft.ops.MultimodalOps.patternImage(50, 50, 3L)
