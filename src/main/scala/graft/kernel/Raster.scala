@@ -13,17 +13,19 @@ import javax.imageio.ImageIO
   * Two paths produce the same bytes:
   *  - the DIRECT path ([[decodeRgb]] + [[RgbRows.cropDataUri]]) inflates
   *    the page once into packed RGB rows, copies each box out of them and
-  *    writes the crop PNG itself. It accepts only a non-interlaced 8-bit
-  *    RGB/RGBA PNG made of IHDR, IDAT and IEND chunks, every CRC valid,
-  *    whose zlib stream ends at exactly `H × (1 + stride)` bytes with every
-  *    filter byte in 0–4. It writes the crop the way JDK 17's
-  *    `PNGImageWriter` writes a `TYPE_INT_RGB` image: IHDR colour type 2
-  *    depth 8, filter None on every row, one `Deflater(4)` stream, IDAT
-  *    split at 32 KiB, IEND.
+  *    writes the crop PNG itself. It accepts only what the page-raster
+  *    writer (`MultimodalOps.Codec.encodePng` of a `TYPE_INT_RGB` image)
+  *    produces: a non-interlaced 8-bit RGB PNG (colour type 2) made of
+  *    IHDR, IDAT and IEND chunks, every CRC valid, whose zlib stream ends
+  *    at exactly `H × (1 + 3W)` bytes with filter byte 0 on every row. It
+  *    writes the crop the way JDK 17's `PNGImageWriter` writes a
+  *    `TYPE_INT_RGB` image: IHDR colour type 2 depth 8, filter None on
+  *    every row, one `Deflater(4)` stream, IDAT split at 32 KiB, IEND.
   *  - the ImageIO path ([[decode]] + [[pilCrop]] + [[pngDataUri]]) takes
-  *    every input the direct path declines (gray, palette, 16-bit,
-  *    interlaced, ancillary chunks, JPEG, damaged streams) and is the
-  *    reference the direct path is tested against byte for byte.
+  *    every input the direct path declines (RGBA, gray, palette, 16-bit,
+  *    interlaced, filtered rows, ancillary chunks, JPEG, damaged streams)
+  *    and is the reference the direct path is tested against byte for
+  *    byte.
   *
   * Lives in `graft.kernel` (not `graft.ops.MultimodalOps.Codec`, its
   * sibling) so the kernel keeps a one-way dependency on nothing above it.
@@ -164,12 +166,12 @@ object Raster {
   private val PngSignature = Array[Byte](0x89.toByte, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
   private val WriterDeflateLevel = 4
   private val WriterIdatChunk = 32768
-  // raw (unfiltered) sizes above this take the ImageIO path, which then
+  // raw (inflated) sizes above this take the ImageIO path, which then
   // behaves exactly as before on such inputs
   private val MaxRawBytes = 1L << 28
 
   /** A page raster decoded by the direct path: `height` rows of
-    * `1 + 3 × width` bytes, a spare leading byte then packed 8-bit RGB. */
+    * `1 + 3 × width` bytes, the PNG filter byte (0) then packed 8-bit RGB. */
   final class RgbRows private[Raster] (width: Int, height: Int, rows: Array[Byte]) {
     private val rowLen = 1 + 3 * width
 
@@ -212,7 +214,7 @@ object Raster {
     def isType(i: Int, t: String): Boolean =
       b(i) == t(0) && b(i + 1) == t(1) && b(i + 2) == t(2) && b(i + 3) == t(3)
     val crc = new CRC32
-    var width, height, bpp = 0
+    var width, height = 0
     var raw: Array[Byte] = null
     var filled = 0
     val probe = new Array[Byte](1)
@@ -228,14 +230,12 @@ object Raster {
         if (crc.getValue.toInt != be32(p + 8 + len)) return None
         val d = p + 8
         if (p == 8) {
-          // IHDR: colour type 2 (RGB) or 6 (RGBA), depth 8, no interlace
+          // IHDR: colour type 2 (RGB), depth 8, no interlace
           if (!isType(p + 4, "IHDR") || len != 13) return None
           width = be32(d); height = be32(d + 4)
-          val colorType = b(d + 9)
-          bpp = if (colorType == 2) 3 else if (colorType == 6) 4 else 0
-          if (width <= 0 || height <= 0 || b(d + 8) != 8 || bpp == 0 ||
+          if (width <= 0 || height <= 0 || b(d + 8) != 8 || b(d + 9) != 2 ||
             b(d + 10) != 0 || b(d + 11) != 0 || b(d + 12) != 0) return None
-          val rawLen = height.toLong * (1 + bpp.toLong * width)
+          val rawLen = height.toLong * (1 + 3L * width)
           if (rawLen > MaxRawBytes) return None
           raw = new Array[Byte](rawLen.toInt)
         } else if (isType(p + 4, "IDAT")) {
@@ -258,65 +258,15 @@ object Raster {
       }
       if (!seenIend || !inf.finished() || inf.getRemaining != 0 || filled != raw.length) return None
     } finally inf.end()
-    if (!unfilter(raw, width, height, bpp)) return None
-    if (bpp == 4) {
-      // RGBA → RGB in place: every write index trails its read index
-      var y = 0
-      while (y < height) {
-        var s = y * (1 + 4 * width) + 1
-        var t = y * (1 + 3 * width) + 1
-        val end = s + 4 * width
-        while (s < end) {
-          raw(t) = raw(s); raw(t + 1) = raw(s + 1); raw(t + 2) = raw(s + 2)
-          s += 4; t += 3
-        }
-        y += 1
-      }
-    }
-    Some(new RgbRows(width, height, raw))
-  }
-
-  /** Undo the five PNG row filters in place; false on a filter byte > 4. */
-  private def unfilter(raw: Array[Byte], width: Int, height: Int, bpp: Int): Boolean = {
-    val stride = bpp * width
+    // filter None on every row, so the inflated rows already are RgbRows'
+    // layout (filter byte, then packed RGB)
+    val rowLen = 1 + 3 * width
     var y = 0
     while (y < height) {
-      val s = y * (1 + stride) + 1 // this row's first data byte
-      val u = s - 1 - stride       // previous row's (only read when y > 0)
-      (raw(s - 1): Int) match {
-        case 0 =>
-        case 1 =>
-          var i = bpp
-          while (i < stride) { raw(s + i) = (raw(s + i) + raw(s + i - bpp)).toByte; i += 1 }
-        case 2 =>
-          if (y > 0) {
-            var i = 0
-            while (i < stride) { raw(s + i) = (raw(s + i) + raw(u + i)).toByte; i += 1 }
-          }
-        case 3 =>
-          var i = 0
-          while (i < stride) {
-            val a = if (i >= bpp) raw(s + i - bpp) & 0xff else 0
-            val up = if (y > 0) raw(u + i) & 0xff else 0
-            raw(s + i) = (raw(s + i) + ((a + up) >>> 1)).toByte
-            i += 1
-          }
-        case 4 =>
-          var i = 0
-          while (i < stride) {
-            val a = if (i >= bpp) raw(s + i - bpp) & 0xff else 0
-            val up = if (y > 0) raw(u + i) & 0xff else 0
-            val c = if (i >= bpp && y > 0) raw(u + i - bpp) & 0xff else 0
-            val pa = math.abs(up - c); val pb = math.abs(a - c); val pc = math.abs(a + up - 2 * c)
-            val pred = if (pa <= pb && pa <= pc) a else if (pb <= pc) up else c
-            raw(s + i) = (raw(s + i) + pred).toByte
-            i += 1
-          }
-        case _ => return false
-      }
+      if (raw(y * rowLen) != 0) return None
       y += 1
     }
-    true
+    Some(new RgbRows(width, height, raw))
   }
 
   /** PNG bytes of a `width`×`height` RGB image whose rows (each led by its
