@@ -67,7 +67,7 @@ final case class RawPage(
     url: String,
     page_no: Int,
     total_pages: Int,
-    payload_kind: String, // "html" | "pdf" | "garbled" | "error"
+    payload_kind: String, // "html" | "pdf" | "image" | "garbled" | "error"
     page_bytes: Array[Byte],
     lang: String)
 

@@ -2,17 +2,24 @@ package graft.kernel
 
 import graft.core._
 import java.nio.charset.StandardCharsets
+import scala.util.control.NonFatal
 
 /** Per-page extraction kernel — the deterministic stand-in for the
   * reference's model call, wrapped in the reference's exact pre/post flow
   * (/root/reference/dots_ocr/parser.py:140-250):
   *
-  *   payload → branch (HTML-DOM | PDF-layout | raw-response)
-  *           → smart_resize input dims (parser.py:163)
+  *   payload → pages ([[pagesOf]]: PDF | image | HTML-DOM | raw-response)
+  *           → per page ([[parse]], one catch site):
+  *             smart_resize input dims (parser.py:163)
   *           → "model response" = classifier cells serialized in INPUT space
   *           → post_process_output (strict parse + rescale | repair chain)
   *           → layoutjson2md ×2 (md, md_nohf; parser.py:223-224)
-  *           → per-page result record
+  *           → per-page result record, or an error row
+  *
+  * Every entry point is built on that one dispatcher and that one tail:
+  * [[parseDoc]] parses a document in place, [[fanOut]] + [[parsePage]]
+  * split it across a shuffle, and the fused web pass reuses the HTML
+  * page's DOM.
   *
   * Everything after the response string is byte-identical to the reference
   * (golden-tested); the classifier branch defines the response contents.
@@ -20,57 +27,87 @@ import java.nio.charset.StandardCharsets
   */
 object ExtractKernel {
 
+  /** One page between the dispatcher ([[pagesOf]]) and the per-page tail
+    * ([[parse]]). It lives in memory only: pages that cross the spread
+    * shuffle travel as [[RawPage]] rows ([[toRawPage]] / [[fromRawPage]]). */
+  private[graft] sealed trait Page
+  /** A document that yields no page (bad gzip, empty payload, PDF parse
+    * failure, empty page range): one error row carrying `message`. */
+  private final case class Failed(message: String) extends Page
+  /** Neither PDF, image nor HTML: the decoded payload is treated as a raw
+    * model response, which drives the OutputRepair chain end to end. */
+  private final case class Garbled(bytes: Array[Byte]) extends Page
+  private final case class Image(bytes: Array[Byte]) extends Page
+  /** HTML bytes. The DOM is built once, on first use inside [[onPage]]'s
+    * catch; the fused web pass (graft.pipeline.WebPipeline) harvests its
+    * links from that same DOM. */
+  private[graft] final case class Html(bytes: Array[Byte]) extends Page {
+    lazy val dom: HtmlDom.Element = HtmlDom.parse(HtmlDom.decodeBytes(bytes))
+  }
+  private final case class Pdf(page: PdfLite.PdfPage) extends Page
+
+  /** The one dispatcher: payload → pages, in the order gunzip → empty →
+    * PDF (real or lite) → image → HTML → garbled.
+    *
+    * Page ranges follow the reference's `load_images_from_pdf(start_page_id,
+    * end_page_id)` (doc_utils.py:42-58) and apply to PDFs only: inclusive
+    * [start, end], end < 0 → last page, end clamped to the page count;
+    * page_no restarts at 0 relative to the slice (parser.py:262-271
+    * enumerates the sliced image list). Pruning happens here, before any
+    * page is parsed, so skipped pages cost nothing. */
+  private[graft] def pagesOf(doc: PageDoc, startPageId: Int, endPageId: Int): Vector[Page] =
+    decodePayload(doc.html) match {
+      // transparent Content-Encoding, strict: a corrupt/truncated gzip body
+      // (or a decompression bomb past the cap) must become a TYPED error
+      // row, never a partial document (a browser refuses a bad CRC too)
+      case Left(err) => Vector(Failed(err))
+      case Right(bytes) if bytes == null || bytes.isEmpty => Vector(Failed("empty payload"))
+      case Right(bytes) if isRealPdf(bytes) || PdfLite.isPdfLite(bytes) =>
+        pdfDocOf(bytes) match {
+          case Left(err) => Vector(Failed(err))
+          case Right(pdf) =>
+            val slice = slicePages(pdf, startPageId, endPageId)
+            if (slice.isEmpty) Vector(Failed(s"empty page range [$startPageId, $endPageId]"))
+            else slice.map(Pdf(_))
+        }
+      // image payload → a single-page document whose page IS the raster
+      // (reference: .jpg/.jpeg/.png route through parse_image,
+      // parser.py:252-256 + :294-312, extensions consts.py:5; parse_image
+      // takes no page range)
+      case Right(bytes) if isImage(bytes) => Vector(Image(bytes))
+      case Right(bytes) if looksLikeHtml(bytes) => Vector(Html(bytes))
+      case Right(bytes) => Vector(Garbled(bytes))
+    }
+
   /** Document fan-out: one input row → pages (reference analog:
     * `load_images_from_pdf` + per-page tasks, parser.py:258-271). */
   def fanOut(doc: PageDoc): Vector[RawPage] = fanOut(doc, 0, -1)
 
-  /** Page-range variant (reference `load_images_from_pdf(start_page_id,
-    * end_page_id)`, doc_utils.py:42-58): inclusive [start, end], end < 0 →
-    * last page, end clamped to page count; page_no restarts at 0 relative
-    * to the slice (parser.py:262-271 enumerates the sliced image list).
-    * Pruning happens HERE, before any page is parsed — skipped pages cost
-    * nothing (the kernel analog of partition pruning). */
+  /** Page-range fan-out into [[RawPage]] rows, for the spread shuffle
+    * (range semantics: [[pagesOf]]). */
   def fanOut(doc: PageDoc, startPageId: Int, endPageId: Int): Vector[RawPage] = {
-    val bytes = decodePayload(doc.html) match {
-      case Right(b) => b
-      case Left(err) =>
-        // transparent Content-Encoding, strict: a corrupt/truncated gzip
-        // body (or a decompression bomb past the cap) must become a TYPED
-        // error row, never a partial document — the byte-identity
-        // discipline (a browser refuses a bad CRC the same way)
-        return Vector(RawPage(doc.url, 0, 1, "error",
-          err.getBytes(StandardCharsets.UTF_8), doc.lang))
+    val pages = pagesOf(doc, startPageId, endPageId)
+    pages.zipWithIndex.map { case (page, i) => toRawPage(doc, i, pages.length, page) }
+  }
+
+  /** Only PDF pages are re-serialized: a page crosses the shuffle as bytes. */
+  private def toRawPage(doc: PageDoc, pageNo: Int, total: Int, page: Page): RawPage = {
+    val (kind, bytes) = page match {
+      case Failed(message) => ("error", message.getBytes(StandardCharsets.UTF_8))
+      case Garbled(b)      => ("garbled", b)
+      case Image(b)        => ("image", b)
+      case Html(b)         => ("html", b)
+      case Pdf(p)          => ("pdf", PdfLite.serialize(PdfLite.PdfDoc(Vector(p))))
     }
-    if (bytes == null || bytes.isEmpty) {
-      Vector(RawPage(doc.url, 0, 1, "error", "empty payload".getBytes(StandardCharsets.UTF_8), doc.lang))
-    } else if (isRealPdf(bytes) || PdfLite.isPdfLite(bytes)) {
-      pdfDocOf(bytes) match {
-        case Left(err) =>
-          Vector(RawPage(doc.url, 0, 1, "error", err.getBytes(StandardCharsets.UTF_8), doc.lang))
-        case Right(pdf) =>
-          val slice = slicePages(pdf, startPageId, endPageId)
-          val total = slice.length
-          if (total == 0)
-            Vector(RawPage(doc.url, 0, 1, "error",
-              s"empty page range [$startPageId, $endPageId]".getBytes(StandardCharsets.UTF_8), doc.lang))
-          else slice.zipWithIndex.map { case (p, i) =>
-            RawPage(doc.url, i, total, "pdf", PdfLite.serialize(PdfLite.PdfDoc(Vector(p))), doc.lang)
-          }
-      }
-    } else if (isImage(bytes)) {
-      // image payload → a single-page document whose page IS the raster
-      // (reference: .jpg/.jpeg/.png route through parse_image,
-      // parser.py:252-256 + :294-312, extensions consts.py:5; page ranges
-      // apply to PDFs only — parse_image takes none — matching the HTML
-      // branch here)
-      Vector(RawPage(doc.url, 0, 1, "image", bytes, doc.lang))
-    } else if (looksLikeHtml(bytes)) {
-      Vector(RawPage(doc.url, 0, 1, "html", bytes, doc.lang))
-    } else {
-      // neither HTML nor PDF-lite nor image: treat the decoded payload as a
-      // raw model response — drives the OutputCleaner repair path end-to-end
-      Vector(RawPage(doc.url, 0, 1, "garbled", bytes, doc.lang))
-    }
+    RawPage(doc.url, pageNo, total, kind, bytes, doc.lang)
+  }
+
+  private def fromRawPage(page: RawPage): Page = page.payload_kind match {
+    case "error"   => Failed(new String(page.page_bytes, StandardCharsets.UTF_8))
+    case "garbled" => Garbled(page.page_bytes)
+    case "pdf"     => Pdf(PdfLite.parse(page.page_bytes).pages.head)
+    case "image"   => Image(page.page_bytes)
+    case _         => Html(page.page_bytes)
   }
 
   /** gzip magic (RFC 1952) — a crawl table can carry
@@ -150,14 +187,14 @@ object ExtractKernel {
     * becomes a 1-page 72-dpi PDF rendered at target dpi, so the INPUT dims
     * derive from the dpi-scaled render (Geometry.renderedPageDims) while
     * bboxes stay in original pixel space. Throws on undecodable bytes —
-    * [[parsePage]] converts that into the typed error row. */
+    * [[onPage]] converts that into the typed error row. */
   def imageToLayout(bytes: Array[Byte], fitzPreprocess: Boolean = false): HtmlExtract.PageLayout = {
     // header-only dims probe (hot path: no pixel decode), gated by a
     // structural trailer check (Raster.trailerOk): a sniffed-but-TRUNCATED
     // payload must not yield a successful Picture row whose full-bleed md
     // embeds broken bytes — the reference's fetch_image decode raises
     // there (PIL errors on truncated files at load), so a missing trailer
-    // THROWS here → parsePage's typed error row. (It must throw, not fall
+    // THROWS here → onPage's typed error row. (It must throw, not fall
     // back to ImageIO: ImageIO silently returns the partial pixels of a
     // truncated JPEG.) Residual weakening vs the reference: pixel-data
     // corruption BEHIND an intact trailer still embeds verbatim (as a
@@ -197,7 +234,7 @@ object ExtractKernel {
         case e: PdfReal.PdfRealError =>
           Left(s"unsupported_format: real PDF payload (${e.getMessage}); " +
             "this build parses the text layer of uncompressed/Flate PDFs, PDF-lite, and HTML")
-        case scala.util.control.NonFatal(e) =>
+        case NonFatal(e) =>
           // I3 never-throw contract: at corpus scale every byte pattern
           // arrives eventually, and an escaped exception fails the task
           // 4x then kills the job — any unanticipated parser path
@@ -207,8 +244,8 @@ object ExtractKernel {
     } else {
       try Right(PdfLite.parse(bytes))
       catch {
-        case e: PdfLite.PdfLiteError            => Left(e.getMessage)
-        case scala.util.control.NonFatal(e)     =>
+        case e: PdfLite.PdfLiteError => Left(e.getMessage)
+        case NonFatal(e) =>
           Left(s"pdf-lite parse failure (${e.getClass.getSimpleName})")
       }
     }
@@ -302,41 +339,32 @@ object ExtractKernel {
     * DuckDB oracle replays independently (parser.py:130-137). */
   def groundingCellRows(doc: PageDoc,
       qbox: (Long, Long, Long, Long)): Vector[GroundingCellRow] =
-    fanOut(doc).flatMap { page =>
-      val anchor = GroundingCellRow(page.url, page.page_no, -1, "",
+    pagesOf(doc, 0, -1).zipWithIndex.flatMap { case (page, pageNo) =>
+      val anchor = GroundingCellRow(doc.url, pageNo, -1, "",
         Double.MaxValue, Double.MaxValue, 0L, 0L, 0L, 0L)
-      try {
-        val layoutOpt = page.payload_kind match {
-          case "pdf"  => Some(PdfLite.pageToLayout(PdfLite.parse(page.page_bytes).pages.head))
-          case "html" => Some(HtmlExtract.extract(page.page_bytes))
-          case _      => None // error rows ⇒ md == "" ⇒ anchor only
-        }
-        layoutOpt match {
-          case None => Vector(anchor)
-          case Some(layout) =>
-            val (ih, iw) = Geometry.smartResize(layout.height, layout.width)
-            val sx = iw.toDouble / layout.width
-            val sy = ih.toDouble / layout.height
-            val q = BboxScale.preProcessBboxes(
-              layout.width, layout.height,
-              Vector(Vector(JInt(qbox._1), JInt(qbox._2), JInt(qbox._3), JInt(qbox._4))),
-              iw, ih).head
-            val cellRows = layout.cells.zipWithIndex.collect {
-              case (o: JObject, ord) if o.has("text") =>
-                val JArray(b) = o.get("bbox").get
-                val cx = (BboxScale.pyFloatOf(b(0)) + BboxScale.pyFloatOf(b(2))) / 2 * sx
-                val cy = (BboxScale.pyFloatOf(b(1)) + BboxScale.pyFloatOf(b(3))) / 2 * sy
-                val text = o.get("text").get match {
-                  case JString(s) => s
-                  case v          => PyJson.pyStr(v)
-                }
-                GroundingCellRow(page.url, page.page_no, ord, text, cx, cy,
-                  q(0).toLong, q(1).toLong, q(2).toLong, q(3).toLong)
+      // error and garbled pages ⇒ md == "" ⇒ anchor only; an image page's
+      // one Picture cell carries no text, so it yields the anchor alone too
+      onPage(page, _ => Vector(anchor), _ => Vector(anchor)) { layout =>
+        val (ih, iw) = Geometry.smartResize(layout.height, layout.width)
+        val sx = iw.toDouble / layout.width
+        val sy = ih.toDouble / layout.height
+        val q = BboxScale.preProcessBboxes(
+          layout.width, layout.height,
+          Vector(Vector(JInt(qbox._1), JInt(qbox._2), JInt(qbox._3), JInt(qbox._4))),
+          iw, ih).head
+        val cellRows = layout.cells.zipWithIndex.collect {
+          case (o: JObject, ord) if o.has("text") =>
+            val JArray(b) = o.get("bbox").get
+            val cx = (BboxScale.pyFloatOf(b(0)) + BboxScale.pyFloatOf(b(2))) / 2 * sx
+            val cy = (BboxScale.pyFloatOf(b(1)) + BboxScale.pyFloatOf(b(3))) / 2 * sy
+            val text = o.get("text").get match {
+              case JString(s) => s
+              case v          => PyJson.pyStr(v)
             }
-            anchor +: cellRows
+            GroundingCellRow(doc.url, pageNo, ord, text, cx, cy,
+              q(0).toLong, q(1).toLong, q(2).toLong, q(3).toLong)
         }
-      } catch {
-        case _: Exception => Vector(anchor)
+        anchor +: cellRows
       }
     }
 
@@ -350,124 +378,86 @@ object ExtractKernel {
         o.get("text").get match { case JString(s) => s; case v => PyJson.pyStr(v) }
     }
 
-  /** Full per-page parse (reference `_parse_single_image`). Never throws:
+  /** Full per-page parse of a shuffled [[RawPage]] (the spread topology). */
+  def parsePage(page: RawPage, mode: PromptMode): ParsedPage =
+    parse(page.url, page.page_no, fromRawPage(page), mode)
+
+  /** Whole-document extraction: [[pagesOf]], then [[parse]] per page. A
+    * multi-page PDF is parsed once and its pages go straight to the tail;
+    * element-wise identical to `fanOut(...).map(parsePage(_, mode))`
+    * (PdfRealSpec; the serialize→reparse round trip is a pinned identity,
+    * PdfLiteSpec `parse(serialize(doc)) == doc`). */
+  def parseDoc(doc: PageDoc, mode: PromptMode,
+      startPageId: Int = 0, endPageId: Int = -1): Vector[ParsedPage] =
+    parseAll(doc.url, pagesOf(doc, startPageId, endPageId), mode)
+
+  private[graft] def parseAll(url: String, pages: Vector[Page], mode: PromptMode): Vector[ParsedPage] =
+    pages.zipWithIndex.map { case (page, pageNo) => parse(url, pageNo, page, mode) }
+
+  /** The per-page tail (reference `_parse_single_image`). Never throws:
     * failures become error rows (the reference writes page_NNN_error.txt,
     * mac/run_ocr_batch.py:405-448). */
-  def parsePage(page: RawPage, mode: PromptMode): ParsedPage = {
-    try {
-      page.payload_kind match {
-        case "error" =>
-          ParsedPage(page.url, page.page_no, 0, 0, 0, 0, "", "", "", "",
-            filtered = false, error = new String(page.page_bytes, StandardCharsets.UTF_8))
-        case "garbled" =>
-          val response = new String(page.page_bytes, StandardCharsets.UTF_8)
-          mode match {
-            case PromptMode.Ocr | _: PromptMode.GroundingOcr =>
-              // non-layout prompt modes pass the raw response through
-              // untouched — the reference only post-processes the layout
-              // trio (parser.py:175,240-242); prompt_ocr md IS the response
-              ParsedPage(page.url, page.page_no, 960, 1280, 960, 1280,
-                cells_json = "", md = response, md_nohf = response,
-                extracted_text = response, filtered = false, error = "")
-            case _ =>
-              // response that never parses cleanly → repair chain → filtered row
-              finishLayout(page, mode, response, 1280, 960, 1280, 960)
-          }
-        case kind =>
-          val layout = kind match {
-            case "pdf"   => PdfLite.pageToLayout(PdfLite.parse(page.page_bytes).pages.head)
-            case "image" =>
-              try imageToLayout(page.page_bytes)
-              catch {
-                case scala.util.control.NonFatal(e) =>
-                  // truncated/undecodable image magic → typed error row
-                  // (never-throw kernel contract, same class as PDF errors)
-                  return ParsedPage(page.url, page.page_no, 0, 0, 0, 0, "", "", "", "",
-                    filtered = false,
-                    error = s"unsupported_format: image payload (${e.getClass.getSimpleName})")
-              }
-            case _       => HtmlExtract.extract(page.page_bytes)
-          }
-          parseLayout(page, mode, layout)
-      }
+  private def parse(url: String, pageNo: Int, page: => Page, mode: PromptMode): ParsedPage =
+    onPage(page, errorRow(url, pageNo, _), response => mode match {
+      case PromptMode.Ocr | _: PromptMode.GroundingOcr =>
+        // non-layout prompt modes pass the raw response through untouched
+        // — the reference only post-processes the layout trio
+        // (parser.py:175,240-242); prompt_ocr md IS the response
+        ParsedPage(url, pageNo, 960, 1280, 960, 1280,
+          cells_json = "", md = response, md_nohf = response,
+          extracted_text = response, filtered = false, error = "")
+      case _ =>
+        // response that never parses cleanly → repair chain → filtered row
+        finishLayout(url, pageNo, mode, response, 1280, 960, 1280, 960)
+    })(parseLayout(url, pageNo, mode, _))
+
+  private def errorRow(url: String, pageNo: Int, error: String): ParsedPage =
+    ParsedPage(url, pageNo, 0, 0, 0, 0, "", "", "", "", filtered = false, error = error)
+
+  /** A page whose markup nests deeper than the recursive DOM walks'
+    * stack. The error's own message is null, so the row gets this one. */
+  private val NestingOverflow = "StackOverflowError: markup nested too deeply"
+
+  /** The kernel's one per-page catch site. Builds the page's layout and
+    * hands it to `render`; a garbled page goes to `garbled` as the raw
+    * response. A failed page, or a throw while building the page, its
+    * layout or the result, becomes `failed(message)`. `page` is by-name
+    * so that decoding a shuffled RawPage fails here too. */
+  private def onPage[A](page: => Page, failed: String => A, garbled: String => A)(
+      render: HtmlExtract.PageLayout => A): A = {
+    // an image payload that does not decode gets its own typed message, as
+    // a PDF parse failure does; any later failure is the generic one
+    var decodingImage = false
+    try page match {
+      case Failed(message) => failed(message)
+      case Garbled(bytes)  => garbled(new String(bytes, StandardCharsets.UTF_8))
+      case Image(bytes) =>
+        decodingImage = true
+        val layout = imageToLayout(bytes)
+        decodingImage = false
+        render(layout)
+      case Pdf(p)  => render(PdfLite.pageToLayout(p))
+      case h: Html => render(HtmlExtract.extractFromDom(h.dom))
     } catch {
-      case e: Exception =>
-        ParsedPage(page.url, page.page_no, 0, 0, 0, 0, "", "", "", "",
-          filtered = false, error = s"${e.getClass.getSimpleName}: ${e.getMessage}")
+      case NonFatal(e) if decodingImage =>
+        failed(s"unsupported_format: image payload (${e.getClass.getSimpleName})")
+      case e: Exception          => failed(s"${e.getClass.getSimpleName}: ${e.getMessage}")
+      case _: StackOverflowError => failed(NestingOverflow)
     }
   }
 
-  /** Fused fan-out + parse for the map-only default path: a multi-page
-    * PDF-lite payload is parsed ONCE and each page's in-memory layout goes
-    * straight to the kernel — skipping the per-page serialize→reparse
-    * round-trip the RawPage byte schema requires when pages cross a
-    * shuffle (spreadPages). Element-wise identical to
-    * `fanOut(...).map(parsePage(_, mode))` (the round-trip is a pinned
-    * identity: PdfLiteSpec `parse(serialize(doc)) == doc`; equivalence
-    * also covered end-to-end by PipelineE2ESpec's spread≡default test). */
-  def parseDoc(doc: PageDoc, mode: PromptMode,
-      startPageId: Int = 0, endPageId: Int = -1): Vector[ParsedPage] = {
-    val bytes = doc.html
-    def viaRawPages(): Vector[ParsedPage] =
-      fanOut(doc, startPageId, endPageId).map(parsePage(_, mode))
-    if (bytes == null || bytes.isEmpty || !(isRealPdf(bytes) || PdfLite.isPdfLite(bytes))) {
-      // non-PDF branches carry no redundant work — share fanOut verbatim
-      viaRawPages()
-    } else {
-      val pdf = pdfDocOf(bytes) match {
-        case Right(d) => d
-        case Left(_)  => return viaRawPages() // error-row path
-      }
-      val slice = slicePages(pdf, startPageId, endPageId)
-      if (slice.isEmpty) viaRawPages() // empty-range error row
-      else slice.zipWithIndex.map { case (p, i) =>
-        val rp = RawPage(doc.url, i, slice.length, "pdf", null, doc.lang)
-        try parseLayout(rp, mode, PdfLite.pageToLayout(p))
-        catch {
-          case e: Exception =>
-            ParsedPage(doc.url, i, 0, 0, 0, 0, "", "", "", "",
-              filtered = false, error = s"${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-      }
-    }
-  }
-
-  /** HTML-branch parse from an already-built DOM — the fused web-pipeline
-    * entry (graft.pipeline.WebPipeline): one `HtmlDom.parse` feeds
-    * extraction AND the link/anchor/robots harvest. Element-wise identical
-    * to `parsePage(RawPage(url, 0, 1, "html", bytes, lang), mode)` when
-    * `root = HtmlDom.parse(HtmlDom.decodeBytes(bytes))` — same layout
-    * pipeline, same generic-catch error row (pinned by WebPipelineSpec).
-    * Caller guarantees the payload dispatched to the HTML branch. */
-  def parseHtmlDoc(doc: PageDoc, mode: PromptMode, root: HtmlDom.Element): ParsedPage = {
-    val page = RawPage(doc.url, 0, 1, "html", null, doc.lang)
-    try parseLayout(page, mode, HtmlExtract.extractFromDom(root))
-    catch {
-      case e: Exception =>
-        ParsedPage(doc.url, 0, 0, 0, 0, 0, "", "", "", "",
-          filtered = false, error = s"${e.getClass.getSimpleName}: ${e.getMessage}")
-    }
-  }
-
-  /** Mode dispatch + render from an already-built page layout
-    * (the shared tail of parsePage and parseDoc). */
-  private def parseLayout(page: RawPage, mode: PromptMode,
+  /** Mode dispatch + render from a page layout. */
+  private def parseLayout(url: String, pageNo: Int, mode: PromptMode,
       layout: HtmlExtract.PageLayout): ParsedPage = {
     // fitz-preprocessed pages derive INPUT dims from the dpi-scaled render
     // (parser.py:158-160); bboxes still rescale to the original dims below
     val (srcH, srcW) = layout.renderDims.getOrElse((layout.height, layout.width))
     val (ih, iw) = Geometry.smartResize(srcH, srcW)
     mode match {
-      case PromptMode.Ocr =>
+      case PromptMode.Ocr | _: PromptMode.GroundingOcr =>
         val response = classifierResponse(layout, mode, iw, ih)
         // prompt_ocr responses pass through untouched (layout_utils.py:203)
-        ParsedPage(page.url, page.page_no, ih.toInt, iw.toInt,
-          layout.height.toInt, layout.width.toInt,
-          cells_json = "", md = response, md_nohf = response,
-          extracted_text = response, filtered = false, error = "")
-      case g: PromptMode.GroundingOcr =>
-        val response = classifierResponse(layout, g, iw, ih)
-        ParsedPage(page.url, page.page_no, ih.toInt, iw.toInt,
+        ParsedPage(url, pageNo, ih.toInt, iw.toInt,
           layout.height.toInt, layout.width.toInt,
           cells_json = "", md = response, md_nohf = response,
           extracted_text = response, filtered = false, error = "")
@@ -479,7 +469,7 @@ object ExtractKernel {
         // equivalence pinned by ExtractKernelSpec). Repair-needing
         // responses (garbled payloads) still take the string path.
         val cells = classifierCells(layout, m, iw, ih)
-        finishLayoutTrusted(page, m, cells, layout.width, layout.height, iw, ih, layout.raster)
+        finishLayoutTrusted(url, pageNo, m, cells, layout.width, layout.height, iw, ih, layout.raster)
     }
   }
 
@@ -487,7 +477,8 @@ object ExtractKernel {
     * `postProcessOutput(dumps(cells), …)` when every value is a canonical
     * int/string (our classifier's contract). */
   private def finishLayoutTrusted(
-      page: RawPage,
+      url: String,
+      pageNo: Int,
       mode: PromptMode,
       inputCells: Vector[JValue],
       originW: Long,
@@ -497,16 +488,17 @@ object ExtractKernel {
       raster: Option[scala.collection.immutable.ArraySeq[Byte]] = None): ParsedPage = {
     try {
       val cells = BboxScale.postProcessCells(originW, originH, inputCells, inputW, inputH)
-      renderParsed(page, mode, cells, originW, originH, inputW, inputH, raster)
+      renderParsed(url, pageNo, mode, cells, originW, originH, inputW, inputH, raster)
     } catch {
       case _: BboxScale.KernelError | _: Geometry.AspectRatioError =>
         // mirror the reference fallback: repair over the serialized form
-        finishLayout(page, mode, PyJson.dumps(JArray(inputCells)), originW, originH, inputW, inputH, raster)
+        finishLayout(url, pageNo, mode, PyJson.dumps(JArray(inputCells)), originW, originH, inputW, inputH, raster)
     }
   }
 
   private def renderParsed(
-      page: RawPage,
+      url: String,
+      pageNo: Int,
       mode: PromptMode,
       cells: Vector[JValue],
       originW: Long,
@@ -523,14 +515,15 @@ object ExtractKernel {
         (MdRender.segmentsToMd(segs, noPageHf = false), MdRender.segmentsToMd(segs, noPageHf = true))
       }
     val extracted = cellTexts(cells, includeHf = false).mkString("\n\n")
-    ParsedPage(page.url, page.page_no, inputH.toInt, inputW.toInt,
+    ParsedPage(url, pageNo, inputH.toInt, inputW.toInt,
       originH.toInt, originW.toInt, cellsJson, md, mdNohf, extracted,
       filtered = false, error = "")
   }
 
   /** Layout-mode post-processing + rendering (parser.py:175-234). */
   private def finishLayout(
-      page: RawPage,
+      url: String,
+      pageNo: Int,
       mode: PromptMode,
       response: String,
       originW: Long,
@@ -540,11 +533,11 @@ object ExtractKernel {
       raster: Option[scala.collection.immutable.ArraySeq[Byte]] = None): ParsedPage = {
     OutputRepair.postProcessOutput(response, originW, originH, inputW, inputH) match {
       case OutputRepair.ParsedCells(cells) =>
-        renderParsed(page, mode, cells, originW, originH, inputW, inputH, raster)
+        renderParsed(url, pageNo, mode, cells, originW, originH, inputW, inputH, raster)
       case OutputRepair.Filtered(text) =>
         // reference: raw response saved as the json artifact, cleaned text as
         // md (parser.py:184-204)
-        ParsedPage(page.url, page.page_no, inputH.toInt, inputW.toInt,
+        ParsedPage(url, pageNo, inputH.toInt, inputW.toInt,
           originH.toInt, originW.toInt,
           cells_json = PyJson.dumps(JString(response)),
           md = text, md_nohf = text, extracted_text = text,

@@ -1,9 +1,10 @@
 package graft.pipeline
 
 import graft.core._
-import graft.kernel.{ExtractKernel, HtmlDom, PdfLite}
+import graft.kernel.ExtractKernel
 import graft.ops.LinkOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** The FUSED web-corpus pass: one kernel traversal per payload emitting
   * extraction output AND the web-graph artifacts (outlinks, anchor texts,
@@ -16,8 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * plan you want (map-only, oracled), but the DOM parse dominates
   * per-page CPU, so the composition pays ~3× kernel cost at 100 TB. The
   * reference makes one pass per page (parser.py:140-250); this is the
-  * Spark-shaped equivalent: `HtmlDom.parse` runs ONCE and feeds
-  * [[ExtractKernel.parseHtmlDoc]] (extraction) plus
+  * Spark-shaped equivalent: `HtmlDom.parse` runs ONCE, inside the
+  * kernel's per-page tail (extraction), and the same DOM feeds
   * [[LinkOps.artifactsOfDom]] (links+anchors+robots, themselves a single
   * walk) — see q_web_pipeline vs q_web_pipeline_separate in the bench.
   *
@@ -50,47 +51,32 @@ object WebPipeline {
   implicit val webDocEnc: org.apache.spark.sql.Encoder[WebDoc] =
     org.apache.spark.sql.Encoders.product[WebDoc]
 
-  /** Fused parse of one document. Non-HTML payloads (PDF, image, garbled,
-    * empty) take the ordinary [[ExtractKernel.parseDoc]] branch and carry
-    * no web artifacts — exactly what outlinksOf/anchorsOf/metaRobots
-    * return for them (Nil). Never throws. */
-  def parseFused(doc0: PageDoc, mode: PromptMode): WebDoc = {
-    // transparent Content-Encoding, decoded ONCE for both halves (the
-    // separate passes decode independently; a corrupt gzip stays on the
-    // original bytes → kernel typed error row + no web artifacts, exactly
-    // what the per-op entry points produce)
-    val doc = ExtractKernel.decodePayload(doc0.html) match {
-      case Right(b) if !(b eq doc0.html) => doc0.copy(html = b)
-      case _ => doc0
+  /** Fused parse of one document: the kernel's dispatcher and per-page
+    * tail, with the HTML page's DOM also feeding the link/anchor/robots
+    * harvest. Non-HTML payloads (PDF, image, garbled, empty) carry no web
+    * artifacts, which is what outlinksOf/anchorsOf/metaRobots return for
+    * them (Nil). Never throws. */
+  def parseFused(doc: PageDoc, mode: PromptMode): WebDoc = {
+    val pages = ExtractKernel.pagesOf(doc, 0, -1)
+    val rows = ExtractKernel.parseAll(doc.url, pages, mode)
+    val (anchors, robots) = pages match {
+      // a page whose DOM build or extraction failed is an error row and
+      // carries no artifacts; a harvest that throws yields none, as it does
+      // in anchorsOf/metaRobots
+      case Vector(h: ExtractKernel.Html) if rows.head.error.isEmpty =>
+        try LinkOps.artifactsOfDom(doc.url, h.dom)
+        catch { case NonFatal(_) => NoArtifacts }
+      case _ => NoArtifacts
     }
-    val bytes = doc.html
-    val htmlBranch = bytes != null && bytes.nonEmpty &&
-      !ExtractKernel.isRealPdf(bytes) && !PdfLite.isPdfLite(bytes) &&
-      !ExtractKernel.isImage(bytes) && ExtractKernel.looksLikeHtml(bytes)
-    val (pages, anchors, robots) =
-      if (!htmlBranch)
-        (ExtractKernel.parseDoc(doc, mode), Vector.empty[(String, String)], Vector.empty[String])
-      else try {
-        val root = HtmlDom.parse(HtmlDom.decodeBytes(bytes))
-        val (a, r) = LinkOps.artifactsOfDom(doc.url, root)
-        (Vector(ExtractKernel.parseHtmlDoc(doc, mode, root)), a, r)
-      } catch {
-        // decode/DOM failure: the separate paths yield a typed error row
-        // (parsePage's generic catch) and empty artifacts (anchorsOf /
-        // metaRobots catch → Nil) — mirror both
-        case e: Exception =>
-          (Vector(ParsedPage(doc.url, 0, 0, 0, 0, 0, "", "", "", "",
-            filtered = false,
-            error = s"${e.getClass.getSimpleName}: ${e.getMessage}")),
-            Vector.empty[(String, String)], Vector.empty[String])
-      }
-    val pd = ExtractPipeline.assembleDoc(doc.url, pages)
+    val pd = ExtractPipeline.assembleDoc(doc.url, rows)
     WebDoc(pd.url, pd.n_pages.toLong, pd.md, pd.md_nohf, pd.extracted_text,
       pd.cells_json, pd.filtered, pd.error,
       links = anchors.map(_._1),
       anchors = anchors.map { case (d, a) => AnchorText(d, a) },
       robots = robots)
   }
+
+  private val NoArtifacts = (Vector.empty[(String, String)], Vector.empty[String])
 
   /** Full fused pipeline: north-rule table → one row per document with
     * extraction output + links + anchors + robots. Map-only, no shuffle. */

@@ -383,6 +383,22 @@ class PdfRealSpec extends AnyFunSuite {
     assert(fused.head.md.contains("fused path check"))
     assert(fused(1).md.contains("second page text"))
     assert(fused.forall(p => p.error.isEmpty && !p.filtered))
+
+    // gzip-wrapped PDFs (real and lite), whole and sliced to (1, 1): the
+    // fused path parses them in place, fanOut serializes each page
+    // a rastered multi-page PDF-lite doc, so the Picture crop path runs too
+    import graft.gen.InputGen
+    val lite = Iterator.from(0).map(_.toLong).filter(InputGen.isRastered)
+      .map(id => InputGen.pdfPayload(new InputGen.Rng(5L, id, 0L), "en", id))
+      .find(_.pages.length >= 2).get
+    val payloads = Seq(bytes, PdfLite.serialize(lite))
+    for (p <- payloads; d = doc(graft.sources.Warc.gzipMember(p));
+         (s, e) <- Seq((0, -1), (1, 1)); m <- Seq(PromptMode.LayoutAll, PromptMode.Ocr)) {
+      val viaPages = ExtractKernel.fanOut(d, s, e).map(ExtractKernel.parsePage(_, m))
+      assert(ExtractKernel.parseDoc(d, m, s, e) == viaPages)
+      assert(viaPages.length == (if (s == 1) 1 else ExtractKernel.fanOut(doc(p)).length))
+      assert(viaPages.forall(_.error.isEmpty))
+    }
   }
 
   /** Minimal hand-authored PDF with one page, one font resource carrying
