@@ -92,12 +92,14 @@ object LinkOps {
     * non-HTML payloads (PDF, images, garbled bytes) yield none. Delegates
     * to [[artifactsOfDom]] — the anchor table's dst sequence IS the
     * outlink sequence, so the two can never diverge. Never throws — same
-    * contract as the extraction kernel. */
+    * contract as the extraction kernel: markup nested too deeply for the
+    * recursive walks (`StackOverflowError`) yields none, as it yields an
+    * error row there. */
   def outlinksOf(baseUrl: String, payload: Array[Byte]): Seq[String] =
     htmlPayload(payload).fold(Seq.empty[String]) { b =>
       try artifactsOfDom(baseUrl,
         HtmlDom.parse(HtmlDom.decodeBytes(b)))._1.map(_._1)
-      catch { case scala.util.control.NonFatal(_) => Nil }
+      catch { case scala.util.control.NonFatal(_) | _: StackOverflowError => Nil }
     }
 
   /** (src, dst) outlink edges for every document — map-only, one kernel
@@ -182,7 +184,7 @@ object LinkOps {
   def anchorsOf(baseUrl: String, payload: Array[Byte]): Seq[(String, String)] =
     htmlPayload(payload).fold(Seq.empty[(String, String)]) { b =>
       try artifactsOfDom(baseUrl, HtmlDom.parse(HtmlDom.decodeBytes(b)))._1
-      catch { case scala.util.control.NonFatal(_) => Nil }
+      catch { case scala.util.control.NonFatal(_) | _: StackOverflowError => Nil }
     }
 
   /** (src, dst, anchor) rows for every document — the anchor-text corpus
@@ -276,7 +278,7 @@ object LinkOps {
       // baseUrl is irrelevant to the robots harvest; the shared walk keeps
       // this byte-identical with the fused pass
       try artifactsOfDom("https://x.invalid/", HtmlDom.parse(HtmlDom.decodeBytes(b)))._2
-      catch { case scala.util.control.NonFatal(_) => Nil }
+      catch { case scala.util.control.NonFatal(_) | _: StackOverflowError => Nil }
     }
 
   /** Crawl-policy filter: drop documents whose HTML declares

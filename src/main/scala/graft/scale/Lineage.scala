@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   *   - trivially consistent with the data it describes (it is derived
   *     from it), which is the property resume verification needs.
   * Cost: one extra scan of the output — at commit time that scan reads
-  * the freshly written (page-cached) batch, and it is what produces the
-  * committed row counts anyway.
+  * the freshly written (page-cached) batch. It is SnapshotRunner's only
+  * read-back per commit: the commit's row count is the sum of its
+  * `n_docs`, and its rows ride in the commit manifest.
   */
 object Lineage {
 

@@ -1,9 +1,11 @@
 package graft.scale
 
 import graft.core.PromptMode
+import graft.kernel.{JArray, JInt, JNull, JObject, JString, JValue, PyJson}
 import graft.pipeline.ExtractPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -14,8 +16,9 @@ import scala.jdk.CollectionConverters._
   * The url space is split into `nBuckets` hash buckets
   * (`pmod(xxhash64(url), nBuckets)` — the url-hash partitioning axis).
   * Work proceeds in batches of `bucketsPerCommit` buckets; after a batch's
-  * parquet (data + lineage) lands, a manifest file `commit-<k>.json` is
-  * written via temp-file + atomic rename — the commit point. On restart,
+  * parquet data lands, a manifest file `commit-<k>.json` carrying the
+  * batch's lineage rows is written via temp-file + atomic rename — the
+  * commit point, which makes data and lineage visible together. On restart,
   * committed buckets are skipped by a partition-pruning filter (the
   * dataflow analog of an anti-join against committed lineage keys;
   * SURVEY.md §2.9 — with bucket granularity the anti-join collapses to a
@@ -27,13 +30,14 @@ import scala.jdk.CollectionConverters._
   *     manifest rename leaves orphan partitions that the NEXT run simply
   *     overwrites (the job is deterministic), so re-running an
   *     uncommitted batch is idempotent, never additive;
-  *   - [[output]] / [[lineage]] read ONLY committed buckets/commits (a
-  *     partition-pruned filter derived from the manifest) — uncommitted
-  *     partial writes are invisible, exactly like an Iceberg snapshot
-  *     read of the last committed snapshot;
+  *   - [[output]] reads ONLY committed buckets (a partition-pruned filter
+  *     derived from the manifest) and [[lineage]] reads only the
+  *     manifests — uncommitted partial writes are invisible, exactly like
+  *     an Iceberg snapshot read of the last committed snapshot;
   *   - lineage is computed relationally from the read-back committed
   *     batch ([[Lineage.fromOutput]]) — retry/speculation-safe and
-  *     consistent with the data by construction.
+  *     consistent with the data by construction. That one aggregate is the
+  *     batch's only read-back: the commit's `rows` is its `n_docs` sum.
   *
   * No Iceberg runtime jar ships in this sandbox, so the manifest directory
   * IS the snapshot log; the data layout stays `spark.read.parquet`-
@@ -46,7 +50,6 @@ final class SnapshotRunner(
     mode: PromptMode = PromptMode.LayoutAll) {
 
   private val dataDir = s"$outDir/data"
-  private val lineageDir = s"$outDir/lineage"
   private val manifestDir: Path = Paths.get(outDir, "manifest")
   private val bucketedDir = s"$outDir/input_bucketed"
   private val preparedMarker: Path = Paths.get(outDir, "input_bucketed_PREPARED")
@@ -55,23 +58,33 @@ final class SnapshotRunner(
 
   def committedBuckets(): Set[Int] = commits().flatMap(_.buckets).toSet
 
-  def commits(): Vector[Commit] = {
+  def commits(): Vector[Commit] = manifests().map { j =>
+    def l(k: String) = j.get(k).get.asInstanceOf[JInt].value.toLong
+    val bs = j.get("buckets").get.asInstanceOf[JArray].items
+      .map(_.asInstanceOf[JInt].value.toInt)
+    Commit(l("id").toInt, bs, l("rows"), l("wall_ms"))
+  }
+
+  private def manifests(): Vector[JObject] = {
     if (!Files.isDirectory(manifestDir)) return Vector.empty
     Files.list(manifestDir).iterator().asScala
       .filter(_.getFileName.toString.matches("commit-\\d+\\.json"))
       .toVector.sortBy(_.getFileName.toString)
-      .map { p =>
-        val j = graft.kernel.PyJson.parse(Files.readString(p)).asInstanceOf[graft.kernel.JObject]
-        def l(k: String) = j.get(k).get.asInstanceOf[graft.kernel.JInt].value.toLong
-        val bs = j.get("buckets").get.asInstanceOf[graft.kernel.JArray].items
-          .map(_.asInstanceOf[graft.kernel.JInt].value.toInt)
-        Commit(l("id").toInt, bs, l("rows"), l("wall_ms"))
-      }
+      .map(p => PyJson.parse(Files.readString(p)).asInstanceOf[JObject])
   }
 
-  private def writeCommit(c: Commit): Unit = {
+  /** The columns of [[Lineage.fromOutput]], all `long`, in its order. */
+  private val lineageCols =
+    Seq("bucket", "n_docs", "n_pages", "checksum", "n_filtered", "n_errors")
+
+  private def writeCommit(c: Commit, lineage: Seq[Row]): Unit = {
     Files.createDirectories(manifestDir)
-    val body = s"""{"id": ${c.id}, "buckets": [${c.buckets.mkString(", ")}], "rows": ${c.rows}, "wall_ms": ${c.wallMs}}"""
+    def long(v: Any): JValue = if (v == null) JNull else JInt(BigInt(v.asInstanceOf[Long]))
+    val body = PyJson.dumps(JObject(
+      "id" -> JInt(c.id), "buckets" -> JArray(c.buckets.map(JInt(_)).toVector),
+      "rows" -> JInt(c.rows), "wall_ms" -> JInt(c.wallMs),
+      "lineage" -> JArray(lineage.map(r =>
+        JObject(lineageCols.map(k => k -> long(r.getAs[Any](k))): _*)).toVector)))
     val tmp = manifestDir.resolve(s".commit-${c.id}.json.tmp")
     Files.writeString(tmp, body)
     Files.move(tmp, manifestDir.resolve(f"commit-${c.id}%05d.json"),
@@ -91,26 +104,34 @@ final class SnapshotRunner(
     *
     * Idempotent and crash-safe: the `_PREPARED` marker lands via atomic
     * rename only after the write succeeds; a crash mid-write leaves no
-    * marker and the next call rewrites from scratch. */
+    * marker and the next call rewrites from scratch. The marker carries
+    * the bucketed schema, so batch scans need no footer-inference job. */
   def prepareInput(spark: SparkSession, input: DataFrame): Unit = {
     if (Files.exists(preparedMarker)) return
-    input.withColumn("bucket", Lineage.bucketOf(col("url"), nBuckets))
-      .repartition(nBuckets, col("bucket"))
+    val bucketed = input.withColumn("bucket", Lineage.bucketOf(col("url"), nBuckets))
+    bucketed.repartition(nBuckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(bucketedDir)
     Files.createDirectories(preparedMarker.getParent)
     val tmp = preparedMarker.resolveSibling(".input_bucketed_PREPARED.tmp")
-    Files.writeString(tmp, s"""{"n_buckets": $nBuckets}""")
+    Files.writeString(tmp, PyJson.dumps(JObject(
+      "n_buckets" -> JInt(nBuckets), "schema" -> JString(bucketed.schema.json))))
     Files.move(tmp, preparedMarker, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** The scan a commit batch reads when the bucketized layout exists:
     * partition-pruned to `buckets` (visible as PartitionFilters in the
-    * plan; only those buckets' files are listed). None before
-    * [[prepareInput]] has committed its marker. */
-  def batchScan(spark: SparkSession, buckets: Seq[Int]): Option[DataFrame] =
-    if (!Files.exists(preparedMarker)) None
-    else Some(spark.read.parquet(bucketedDir)
+    * plan; only those buckets' files are listed), read with the schema
+    * the marker records. None before [[prepareInput]] has committed its
+    * marker, or when the marker records no schema (written by an earlier
+    * version): the batch then filters the full input. */
+  def batchScan(spark: SparkSession, buckets: Seq[Int]): Option[DataFrame] = {
+    val schema =
+      if (!Files.exists(preparedMarker)) None
+      else PyJson.parse(Files.readString(preparedMarker)).asInstanceOf[JObject]
+        .get("schema").collect { case JString(json) => DataType.fromJson(json).asInstanceOf[StructType] }
+    schema.map(s => spark.read.schema(s).parquet(bucketedDir)
       .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*)))
+  }
 
   /** Process up to `maxBatches` uncommitted bucket-batches (-1 = all).
     * Returns the number of batches committed in this invocation. */
@@ -136,17 +157,16 @@ final class SnapshotRunner(
       // dynamic overwrite: only the bucket=<k> partitions present in `out`
       // are replaced — a rerun of an uncommitted batch lands identically
       out.write.mode("overwrite").partitionBy("bucket").parquet(dataDir)
-      // read back the committed bytes (partition-pruned) for row count +
-      // lineage — lineage derived from committed data is retry-safe and
-      // exactly describes what the snapshot contains
-      val committed = spark.read.parquet(dataDir)
+      // read back the committed bytes (partition-pruned, with the schema
+      // just written) for the lineage — derived from committed data it is
+      // retry-safe and exactly describes what the snapshot contains; its
+      // at most bucketsPerCommit rows ride in the manifest
+      val committed = spark.read.schema(out.schema).parquet(dataDir)
         .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-      val rows = committed.count()
       val lineage = Lineage.fromOutput(committed.drop("bucket"), nBuckets)
-        .withColumn("commit_id", lit(commitId))
-      lineage.coalesce(1).write.mode("overwrite")
-        .partitionBy("commit_id").parquet(lineageDir)
-      writeCommit(Commit(commitId, buckets, rows, System.currentTimeMillis() - t0))
+        .collect().sortBy(_.getAs[Long]("bucket")).toSeq
+      val rows = lineage.map(_.getAs[Long]("n_docs")).sum
+      writeCommit(Commit(commitId, buckets, rows, System.currentTimeMillis() - t0), lineage)
       commitId += 1
     } finally prevOverwriteMode match {
       case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
@@ -163,10 +183,20 @@ final class SnapshotRunner(
       .filter(col("bucket").isin(done.map(Integer.valueOf): _*))
   }
 
-  /** Committed lineage rows (commit_id, bucket, n_docs, n_pages, checksum,
-    * n_filtered, n_errors), restricted to manifest-committed commits. */
+  /** Committed lineage rows (bucket, n_docs, n_pages, checksum,
+    * n_filtered, n_errors, commit_id), read from the manifests, so only
+    * committed commits contribute. */
   def lineage(spark: SparkSession): DataFrame = {
-    val ids = commits().map(c => Integer.valueOf(c.id))
-    spark.read.parquet(lineageDir).filter(col("commit_id").isin(ids: _*))
+    val rows = manifests().flatMap { j =>
+      val id = Integer.valueOf(j.get("id").get.asInstanceOf[JInt].value.toInt)
+      j.get("lineage").get.asInstanceOf[JArray].items.map { r =>
+        Row.fromSeq(lineageCols.map(k => r.asInstanceOf[JObject].get(k).get match {
+          case JInt(v) => java.lang.Long.valueOf(v.toLong)
+          case _       => null
+        }) :+ id)
+      }
+    }
+    spark.createDataFrame(rows.asJava, StructType(
+      lineageCols.map(StructField(_, LongType)) :+ StructField("commit_id", IntegerType)))
   }
 }

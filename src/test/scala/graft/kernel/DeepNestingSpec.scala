@@ -1,14 +1,16 @@
 package graft.kernel
 
-import graft.core.{PageDoc, ParsedPage, PromptMode}
+import graft.core.{PageDoc, PromptMode}
+import graft.ops.LinkOps
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Structurally hostile HTML: markup nested deeper than the recursive DOM
   * walks' stack must cost one error row, never a thrown
-  * `StackOverflowError` (which `case e: Exception` does not catch). The
-  * pages run on a thread with an explicit 512 KiB stack, so the overflow
-  * happens on any JVM's default stack size. */
+  * `StackOverflowError` (which `case e: Exception` does not catch); the
+  * per-op link harvests return no links for it. The pages run on a thread
+  * with an explicit 512 KiB stack, so the overflow happens on any JVM's
+  * default stack size. */
 class DeepNestingSpec extends AnyFunSuite {
 
   private def doc(html: String) =
@@ -16,8 +18,8 @@ class DeepNestingSpec extends AnyFunSuite {
 
   /** Runs `body` on a thread with a 512 KiB stack; returns its result or
     * whatever it threw. */
-  private def onSmallStack(body: => Vector[ParsedPage]): Either[Throwable, Vector[ParsedPage]] = {
-    @volatile var out: Either[Throwable, Vector[ParsedPage]] = null
+  private def onSmallStack[A](body: => A): Either[Throwable, A] = {
+    @volatile var out: Either[Throwable, A] = null
     val t = new Thread(null, () => {
       out = try Right(body) catch { case e: Throwable => Left(e) }
     }, "deep-nesting", 512L * 1024)
@@ -37,5 +39,17 @@ class DeepNestingSpec extends AnyFunSuite {
         assert(rows.length == 1)
         assert(rows.head.error.nonEmpty)
     }
+  }
+
+  for ((name, html) <- pages) test(s"LinkOps outlinksOf/anchorsOf/metaRobots on $name: nothing thrown") {
+    val payload = html.getBytes(UTF_8)
+    val calls = Seq[(String, () => Seq[Any])](
+      "outlinksOf" -> (() => LinkOps.outlinksOf("https://deep.example/p", payload)),
+      "anchorsOf" -> (() => LinkOps.anchorsOf("https://deep.example/p", payload)),
+      "metaRobots" -> (() => LinkOps.metaRobots(payload)))
+    val thrown = calls.flatMap { case (fn, call) =>
+      onSmallStack(call()).left.toOption.map(e => s"$fn threw ${e.getClass.getName}")
+    }
+    assert(thrown.isEmpty, thrown.mkString("; "))
   }
 }

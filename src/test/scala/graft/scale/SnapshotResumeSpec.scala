@@ -3,8 +3,9 @@ package graft.scale
 import graft.SparkTestBase
 import graft.gen.InputTable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 class SnapshotResumeSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -43,6 +44,25 @@ class SnapshotResumeSpec extends AnyFunSuite {
     assert(lin.count() > 0)
     assert(lin.select(countDistinct("commit_id")).head().getLong(0) == 4)
     assert(lin.agg(sum("n_docs")).head().getLong(0) == 120L)
+
+    // ...row for row: the manifests' lineage equals the lineage of the
+    // committed output, with the same schema and column order
+    val cols = Seq("bucket", "n_docs", "n_pages", "checksum", "n_filtered", "n_errors")
+    assert(lin.schema.map(f => f.name -> f.dataType) ==
+      cols.map(_ -> LongType) :+ ("commit_id" -> IntegerType))
+    val fromOut = Lineage.fromOutput(resumed.output(spark).drop("bucket"), 8)
+      .select(cols.map(col): _*).collect().toSet
+    assert(lin.select(cols.map(col): _*).collect().toSet == fromOut)
+    assert(lin.count() == fromOut.size)
+
+    // each commit's row count is the n_docs sum of its lineage rows
+    val docsPerCommit = lin.groupBy("commit_id").agg(sum("n_docs")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(resumed.commits().map(c => c.id -> c.rows).toMap == docsPerCommit)
+
+    // lineage rides in the manifests: no lineage table is written
+    assert(!Files.exists(Paths.get(dirA, "lineage")))
+    assert(!Files.exists(Paths.get(dirB, "lineage")))
   }
 
   test("bucketized input: batch scans read ONLY their buckets' files; output identical; resume green") {
@@ -77,6 +97,18 @@ class SnapshotResumeSpec extends AnyFunSuite {
     val b = resumed.output(spark).select("url", "md", "cells_json", "error")
     assert(b.count() == 120)
     assert(a.except(b).count() == 0 && b.except(a).count() == 0)
+
+    // a marker written before it recorded the schema: no bucketized scan,
+    // so every batch filters the full input, and the output is unchanged
+    val legacyDir = Files.createTempDirectory("snap-legacy").toString
+    val legacy = new SnapshotRunner(legacyDir, nBuckets = 8, bucketsPerCommit = 2)
+    legacy.prepareInput(spark, input)
+    Files.writeString(Paths.get(legacyDir, "input_bucketed_PREPARED"), """{"n_buckets": 8}""")
+    assert(legacy.batchScan(spark, Seq(0, 1)).isEmpty)
+    assert(legacy.run(spark, input) == 4)
+    val c = legacy.output(spark).select("url", "md", "cells_json", "error")
+    assert(c.count() == 120)
+    assert(a.except(c).count() == 0 && c.except(a).count() == 0)
   }
 
   test("crash AFTER data write but BEFORE manifest commit is invisible and idempotent") {
@@ -99,6 +131,9 @@ class SnapshotResumeSpec extends AnyFunSuite {
     // snapshot read sees ONLY the committed buckets — orphans invisible
     val visible = r1.output(spark)
     assert(visible.select(countDistinct("bucket")).head().getLong(0) == committed.size.toLong)
+    // ...and the orphan batch contributes no lineage rows
+    val linBuckets = r1.lineage(spark).select("bucket").collect().map(_.getLong(0)).toSet
+    assert(linBuckets.nonEmpty && linBuckets.forall(b => committed.contains(b.toInt)))
 
     // resume after the "crash": reruns the orphan batch idempotently
     val r2 = new SnapshotRunner(dir, nBuckets = 8, bucketsPerCommit = 2)
@@ -106,5 +141,9 @@ class SnapshotResumeSpec extends AnyFunSuite {
     val out = r2.output(spark)
     assert(out.count() == 120)
     assert(out.select("url").distinct().count() == 120) // no duplicate appends
+    // one lineage row per non-empty bucket, counting each document once
+    val lin = r2.lineage(spark)
+    assert(lin.count() == lin.select("bucket").distinct().count())
+    assert(lin.agg(sum("n_docs")).head().getLong(0) == 120L)
   }
 }
