@@ -27,7 +27,7 @@ object BenchWorker {
       // noop sink: materializes EVERY output column. (A count() would let
       // Catalyst prune the md/cells assembly projections out of the
       // relational plan — benchmarking less than the real job.)
-      ExtractPipeline.run(spark.read.parquet(inputPath), numPartitions = threads * 2)
+      ExtractPipeline.run(spark.read.parquet(inputPath))
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }

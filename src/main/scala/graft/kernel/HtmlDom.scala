@@ -137,12 +137,25 @@ object HtmlDom {
     }
   }
 
-  /** Parse HTML into a forgiving DOM. Never throws on malformed markup. */
+  /** Parse HTML into a forgiving DOM. Never throws on malformed markup.
+    * Linear in the number of tags: the open-element stack keeps a count of
+    * open elements per tag, so "is a `<x>` open?" is one lookup, not a
+    * scan of the stack. */
   def parse(html: String): Element = {
     val root = Element("#root", Map.empty, mutable.ArrayBuffer.empty)
     val stack = mutable.ArrayBuffer[Element](root)
+    // each stack entry carries its tag's open count, so a pop needs no
+    // lookup; `#root` counts as open, so `</#root>` pops back to the root
+    val open = new java.util.HashMap[String, Array[Int]]()
+    val counts = mutable.ArrayBuffer[Array[Int]](Array(1))
+    open.put(root.tag, counts.head)
     def top: Element = stack.last
-    def openAncestor(tag: String): Boolean = stack.exists(_.tag == tag)
+    def openAncestor(tag: String): Boolean = { val c = open.get(tag); c != null && c(0) > 0 }
+    def push(el: Element): Unit = {
+      val c = open.computeIfAbsent(el.tag, _ => Array(0))
+      c(0) += 1; stack += el; counts += c
+    }
+    def pop(): Unit = { stack.remove(stack.length - 1); counts.remove(counts.length - 1)(0) -= 1 }
 
     var i = 0
     val n = html.length
@@ -171,8 +184,8 @@ object HtmlDom {
             val name = (if (end < 0) html.substring(lt + 2) else html.substring(lt + 2, end))
               .trim.toLowerCase
             if (name.nonEmpty && openAncestor(name)) {
-              while (top.tag != name) stack.remove(stack.length - 1)
-              if (stack.length > 1) stack.remove(stack.length - 1)
+              while (top.tag != name) pop()
+              if (stack.length > 1) pop()
             } // unmatched close: ignored
             i = if (end < 0) n else end + 1
           case c if c.isLetter =>
@@ -180,14 +193,13 @@ object HtmlDom {
             i = tagEnd
             val tag = name.toLowerCase
             // implicit closes
-            if (tag == "li" && top.tag == "li") stack.remove(stack.length - 1)
-            if ((tag == "td" || tag == "th") && (top.tag == "td" || top.tag == "th"))
-              stack.remove(stack.length - 1)
-            if (tag == "tr" && (top.tag == "td" || top.tag == "th")) stack.remove(stack.length - 1)
-            if (tag == "tr" && top.tag == "tr") stack.remove(stack.length - 1)
+            if (tag == "li" && top.tag == "li") pop()
+            if ((tag == "td" || tag == "th") && (top.tag == "td" || top.tag == "th")) pop()
+            if (tag == "tr" && (top.tag == "td" || top.tag == "th")) pop()
+            if (tag == "tr" && top.tag == "tr") pop()
             if (ClosesP.contains(tag) && openAncestor("p")) {
-              while (top.tag != "p") stack.remove(stack.length - 1)
-              if (stack.length > 1) stack.remove(stack.length - 1)
+              while (top.tag != "p") pop()
+              if (stack.length > 1) pop()
             }
             val el = Element(tag, attrs, mutable.ArrayBuffer.empty)
             top.children += el
@@ -204,9 +216,7 @@ object HtmlDom {
               el.children += TextNode(html.substring(i, end))
               val gt = html.indexOf('>', end)
               i = if (closeIdx < 0) n else (if (gt < 0) n else gt + 1)
-            } else if (!selfClosed && !VoidTags.contains(tag)) {
-              stack += el
-            }
+            } else if (!selfClosed && !VoidTags.contains(tag)) push(el)
           case _ =>
             top.children += TextNode("<")
             i = lt + 1

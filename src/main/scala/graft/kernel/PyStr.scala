@@ -28,12 +28,6 @@ object PyStr {
     s.substring(i, j)
   }
 
-  def lstrip(s: String): String = {
-    var i = 0
-    while (i < s.length && isPySpace(s.charAt(i))) i += 1
-    s.substring(i)
-  }
-
   def rstrip(s: String): String = {
     var j = s.length
     while (j > 0 && isPySpace(s.charAt(j - 1))) j -= 1
@@ -92,12 +86,4 @@ object PyStr {
 
   /** Python `len()` counts code points, not UTF-16 units. */
   def pyLen(s: String): Int = s.codePointCount(0, s.length)
-
-  /** Python slice `s[:n]` by code points. */
-  def pySliceTo(s: String, n: Int): String = {
-    if (n <= 0) return ""
-    val end = try s.offsetByCodePoints(0, n)
-    catch { case _: IndexOutOfBoundsException => s.length }
-    s.substring(0, end)
-  }
 }

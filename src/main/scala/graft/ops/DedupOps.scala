@@ -32,10 +32,8 @@ object DedupOps {
   def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val keep = df.select(col(idCol).as(idCol), xxhash64(col(textCol)).as("__h"))
       .groupBy("__h").agg(min(col(idCol)).as(idCol))
-    df.join(broadcastIfSmall(keep.select(idCol)), Seq(idCol), "left_semi")
+    df.join(keep.select(idCol), Seq(idCol), "left_semi")
   }
-
-  private def broadcastIfSmall(df: DataFrame): DataFrame = df // AQE decides; hook for hints
 
   /** Canonical near-exact key: NFC normalization → lowercase → ASCII
     * whitespace collapse → trim (the CCNet/Dolma normalize-then-dedup
@@ -63,7 +61,7 @@ object DedupOps {
     val keep = df
       .select(col(idCol).as(idCol), xxhash64(normalizedKey(col(textCol))).as("__h"))
       .groupBy("__h").agg(min(col(idCol)).as(idCol))
-    df.join(broadcastIfSmall(keep.select(idCol)), Seq(idCol), "left_semi")
+    df.join(keep.select(idCol), Seq(idCol), "left_semi")
   }
 
   /** Near-exact duplicate GROUPS on the normalized key: one row per key
@@ -80,21 +78,6 @@ object DedupOps {
         concat_ws(",", transform(sort_array(collect_list(col("id"))),
           i => i.cast("string"))).as("member_ids"))
       .select("keep_id", "dup_count", "member_ids")
-
-  /** MinHash signature: ONE fold over the shingle-hash array updating all
-    * k min-slots per shingle (`zip_with`+`least`). A naive
-    * `array(array_min(transform(sh, …)) × k)` duplicates the shingle
-    * expression k times (CollapseProject re-inlines projections) — measured
-    * ~8× slower. The k hash family is `xxhash64(j, shingleHash)`. */
-  def minhashSignatureOfHashes(shingleHashes: Column, numHashes: Int = 64): Column =
-    aggregate(
-      shingleHashes,
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, s) => zip_with(acc, sequence(lit(0), lit(numHashes - 1)),
-        (m, j) => least(m, xxhash64(j, s))))
-
-  def shingleHashes(text: Column, shingleSize: Int = 3): Column =
-    transform(TextOps.shingles(text, shingleSize), s => xxhash64(s))
 
   /** MinHash signature table (id, sig: array<bigint>[numHashes]) — the
     * materialization point for cross-engine verification (the driver's

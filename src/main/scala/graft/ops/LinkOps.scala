@@ -3,6 +3,7 @@ package graft.ops
 import graft.kernel.{ExtractKernel, HtmlDom}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Web-graph operators over the Common-Crawl-style north-rule table:
   * outlink extraction (`<a href>` + RFC-3986-style reference resolution),
@@ -78,29 +79,30 @@ object LinkOps {
     (if (trailingSlash && joined != "/") joined + "/" else joined) + query
   }
 
-  /** Gzip-transparent HTML sniff shared by every byte-level entry point:
-    * inflate a Content-Encoding-compressed body (the kernel's strict
-    * decode — corrupt gzip yields None, matching the kernel's typed
-    * error row carrying no web artifacts), then require the HTML magic. */
-  private def htmlPayload(payload: Array[Byte]): Option[Array[Byte]] =
-    if (payload == null) None
-    else ExtractKernel.decodePayload(payload).toOption
+  /** Parse one payload's DOM and walk it — shared by every byte-level
+    * entry point. Gzip-transparent: a Content-Encoding-compressed body is
+    * inflated with the kernel's strict decode, then must carry the HTML
+    * magic. Never throws — the extraction kernel's contract: a null,
+    * non-HTML or corrupt-gzip payload, and markup that breaks the parse or
+    * the walk (including a `StackOverflowError` from the recursive walks
+    * on deeply nested pages, which the kernel turns into an error row),
+    * yields `empty`. */
+  private def onDom[A](payload: Array[Byte], empty: A)(walk: HtmlDom.Element => A): A =
+    Option(payload).flatMap(p => ExtractKernel.decodePayload(p).toOption)
       .filter(b => b != null && ExtractKernel.looksLikeHtml(b))
+      .fold(empty) { b =>
+        try walk(HtmlDom.parse(HtmlDom.decodeBytes(b)))
+        catch { case NonFatal(_) | _: StackOverflowError => empty }
+      }
 
   /** Outlinks of one payload: every `<a href>` in document order, resolved
     * against the document's effective base (`<base href>` honored);
     * non-HTML payloads (PDF, images, garbled bytes) yield none. Delegates
     * to [[artifactsOfDom]] — the anchor table's dst sequence IS the
-    * outlink sequence, so the two can never diverge. Never throws — same
-    * contract as the extraction kernel: markup nested too deeply for the
-    * recursive walks (`StackOverflowError`) yields none, as it yields an
-    * error row there. */
+    * outlink sequence, so the two can never diverge. Never throws
+    * (markup nested too deeply for the recursive walks yields none). */
   def outlinksOf(baseUrl: String, payload: Array[Byte]): Seq[String] =
-    htmlPayload(payload).fold(Seq.empty[String]) { b =>
-      try artifactsOfDom(baseUrl,
-        HtmlDom.parse(HtmlDom.decodeBytes(b)))._1.map(_._1)
-      catch { case scala.util.control.NonFatal(_) | _: StackOverflowError => Nil }
-    }
+    onDom(payload, Seq.empty[String])(artifactsOfDom(baseUrl, _)._1.map(_._1))
 
   /** (src, dst) outlink edges for every document — map-only, one kernel
     * pass per partition, no shuffle. */
@@ -182,10 +184,7 @@ object LinkOps {
     * Image-only links yield an empty string. Never throws — same contract
     * as [[outlinksOf]]. */
   def anchorsOf(baseUrl: String, payload: Array[Byte]): Seq[(String, String)] =
-    htmlPayload(payload).fold(Seq.empty[(String, String)]) { b =>
-      try artifactsOfDom(baseUrl, HtmlDom.parse(HtmlDom.decodeBytes(b)))._1
-      catch { case scala.util.control.NonFatal(_) | _: StackOverflowError => Nil }
-    }
+    onDom(payload, Seq.empty[(String, String)])(artifactsOfDom(baseUrl, _)._1)
 
   /** (src, dst, anchor) rows for every document — the anchor-text corpus
     * (the classic web-scale signal for target-page description / query-
@@ -274,12 +273,9 @@ object LinkOps {
     * the document head or body (crawlers honor all of them; name match is
     * case-insensitive). Non-HTML payloads yield none. Never throws. */
   def metaRobots(payload: Array[Byte]): Seq[String] =
-    htmlPayload(payload).fold(Seq.empty[String]) { b =>
-      // baseUrl is irrelevant to the robots harvest; the shared walk keeps
-      // this byte-identical with the fused pass
-      try artifactsOfDom("https://x.invalid/", HtmlDom.parse(HtmlDom.decodeBytes(b)))._2
-      catch { case scala.util.control.NonFatal(_) | _: StackOverflowError => Nil }
-    }
+    // baseUrl is irrelevant to the robots harvest; the shared walk keeps
+    // this byte-identical with the fused pass
+    onDom(payload, Seq.empty[String])(artifactsOfDom("https://x.invalid/", _)._2)
 
   /** Crawl-policy filter: drop documents whose HTML declares
     * `<meta name="robots">` with a `noindex` or `none` directive — the
@@ -967,10 +963,7 @@ object LinkOps {
   /** Never-throw byte-level wrapper for [[pageMetaOfDom]]; non-HTML
     * payloads (PDF, image, garbled) carry no DOM metadata → ("","",""). */
   def pageMetaOf(baseUrl: String, payload: Array[Byte]): (String, String, String) =
-    htmlPayload(payload).fold(("", "", "")) { b =>
-      try pageMetaOfDom(baseUrl, HtmlDom.parse(HtmlDom.decodeBytes(b)))
-      catch { case scala.util.control.NonFatal(_) => ("", "", "") }
-    }
+    onDom(payload, ("", "", ""))(pageMetaOfDom(baseUrl, _))
 
   /** (url, title, description, canonical) per document — the page-metadata
     * sheet a crawl pipeline extracts alongside the content (titles for
@@ -1094,12 +1087,7 @@ object LinkOps {
     df.select(col(urlCol).cast("string"), col(payloadCol))
       .as[(String, Array[Byte])]
       .flatMap { case (u, p) =>
-        val blocks = htmlPayload(p).fold(
-          Vector.empty[(String, String, Long, Long, Long)]) { b =>
-          try blocksOfDom(HtmlDom.parse(HtmlDom.decodeBytes(b)))
-          catch { case scala.util.control.NonFatal(_) =>
-            Vector.empty[(String, String, Long, Long, Long)] }
-        }
+        val blocks = onDom(p, Vector.empty[(String, String, Long, Long, Long)])(blocksOfDom)
         blocks.zipWithIndex.map { case ((tag, text, nc, nl, nw), i) =>
           (u, i.toLong, tag, text, nc, nl, nw)
         }
@@ -1148,13 +1136,9 @@ object LinkOps {
     * discipline. Non-HTML / broken payloads yield an empty-title,
     * empty-links envelope; never throws. */
   def watOf(url: String, tsMillis: Long, payload: Array[Byte]): String = {
-    val (title, links) = htmlPayload(payload)
-      .fold(("", Seq.empty[String])) { b =>
-        try {
-          val root = HtmlDom.parse(HtmlDom.decodeBytes(b))
-          (pageMetaOfDom(url, root)._1, artifactsOfDom(url, root)._1.map(_._1))
-        } catch { case scala.util.control.NonFatal(_) => ("", Seq.empty[String]) }
-      }
+    val (title, links) = onDom(payload, ("", Seq.empty[String])) { root =>
+      (pageMetaOfDom(url, root)._1, artifactsOfDom(url, root)._1.map(_._1))
+    }
     graft.sources.Warc.watJson(url, tsMillis, title, links)
   }
 
@@ -1224,30 +1208,28 @@ object LinkOps {
     * exact (hreflang, url) duplicates collapse keeping first position.
     * Gzip-transparent, never throws. */
   def alternatesOf(baseUrl: String, payload: Array[Byte]): Seq[(String, String)] =
-    htmlPayload(payload).fold(Seq.empty[(String, String)]) { b =>
-      try {
-        val raw = Vector.newBuilder[(String, String)]
-        var baseHref = ""
-        def walk(n: HtmlDom.Node): Unit = n match {
-          case e: HtmlDom.Element =>
-            if (e.tag == "base" && baseHref.isEmpty)
-              baseHref = e.attrs.getOrElse("href", "")
-            else if (e.tag == "link" &&
-                e.attrs.get("rel").exists(_.toLowerCase.split("\\s+").contains("alternate")) &&
-                e.attrs.contains("hreflang"))
-              raw += ((e.attrs("hreflang").trim.toLowerCase,
-                e.attrs.getOrElse("href", "")))
-            e.children.foreach(walk)
-          case _ => ()
-        }
-        walk(HtmlDom.parse(HtmlDom.decodeBytes(b)))
-        val eff = effectiveBase(baseUrl, baseHref)
-        val seen = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
-        raw.result().foreach { case (l, h) =>
-          if (l.nonEmpty) resolveUrl(eff, h).foreach(u => seen += ((l, u)))
-        }
-        seen.toVector
-      } catch { case scala.util.control.NonFatal(_) => Nil }
+    onDom(payload, Seq.empty[(String, String)]) { root =>
+      val raw = Vector.newBuilder[(String, String)]
+      var baseHref = ""
+      def walk(n: HtmlDom.Node): Unit = n match {
+        case e: HtmlDom.Element =>
+          if (e.tag == "base" && baseHref.isEmpty)
+            baseHref = e.attrs.getOrElse("href", "")
+          else if (e.tag == "link" &&
+              e.attrs.get("rel").exists(_.toLowerCase.split("\\s+").contains("alternate")) &&
+              e.attrs.contains("hreflang"))
+            raw += ((e.attrs("hreflang").trim.toLowerCase,
+              e.attrs.getOrElse("href", "")))
+          e.children.foreach(walk)
+        case _ => ()
+      }
+      walk(root)
+      val eff = effectiveBase(baseUrl, baseHref)
+      val seen = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
+      raw.result().foreach { case (l, h) =>
+        if (l.nonEmpty) resolveUrl(eff, h).foreach(u => seen += ((l, u)))
+      }
+      seen.toVector
     }
 
   /** (url, hreflang, alt_url) rows for every document — map-only, the
@@ -1341,7 +1323,7 @@ object LinkOps {
       case _ => ()
     }
     try walk(HtmlDom.parse(xml))
-    catch { case scala.util.control.NonFatal(_) => () }
+    catch { case NonFatal(_) | _: StackOverflowError => () }
     out.result()
   }
 
@@ -1398,7 +1380,7 @@ object LinkOps {
     }
     val rewritten = xml.replaceAll("(?i)<(/?)link([\\s>/])", "<$1feedlink$2")
     try walk(HtmlDom.parse(rewritten))
-    catch { case scala.util.control.NonFatal(_) => () }
+    catch { case NonFatal(_) | _: StackOverflowError => () }
     out.result()
   }
 

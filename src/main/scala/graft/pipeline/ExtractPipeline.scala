@@ -6,18 +6,17 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The Spark-native extraction pipeline (SURVEY.md §3.1 translation).
+  * One topology per input contract; on unique urls both give the same rows.
   *
-  * Default plan, map-only with ZERO shuffles (input urls unique):
+  * Unique input urls (the default, `spreadPages = false`): map-only, ZERO
+  * shuffles.
   * {{{
   * inputTable → mapPartitions(ExtractKernel.parseDoc)  // dispatch + parse, in the scan task
   *            → mapPartitions(assembleLocal)           // a url's pages are consecutive
   * }}}
-  * `uniqueUrls = false` (re-crawled duplicate urls) inserts one
-  * `repartition(url)` + `sortWithinPartitions(url, page_no)` before
-  * assembleLocal.
   *
-  * Page-spread plan (`spreadPages = true`), for pathological per-doc page
-  * counts:
+  * Duplicate urls (re-crawls) or pathological per-doc page counts
+  * (`spreadPages = true`):
   * {{{
   * inputTable → flatMap(ExtractKernel.fanOut)          // pages as RawPage rows
   *            → repartition(n, url, page_no)           // one doc's pages spread over tasks
@@ -30,8 +29,8 @@ import org.apache.spark.sql.functions._
   *     (spark.sql.files.maxPartitionBytes bounds task input), so the
   *     default plan parses map-side and shuffles nothing.
   *   - the kernel runs in `mapPartitions` so per-partition init (none today,
-  *     but the lineage collector and any future dictionary) is amortized —
-  *     the reference's client-per-thread shape (inference.py:12-49).
+  *     but any future dictionary) is amortized — the reference's
+  *     client-per-thread shape (inference.py:12-49).
   *   - column pruning/pushdown: callers keep url/lang/warc_ts filters in
   *     Column form BEFORE `asPageDocs` so they reach the parquet scan.
   *   - [[assemble]]'s aggregates are all Spark builtins (sort_array,
@@ -67,7 +66,6 @@ object ExtractPipeline {
   def parsePages(
       docs: Dataset[PageDoc],
       mode: PromptMode = PromptMode.LayoutAll,
-      numPartitions: Int = 0,
       spreadPages: Boolean = false,
       pageRange: Option[(Int, Int)] = None): Dataset[ParsedPage] = {
     val (rangeStart, rangeEnd) = pageRange.getOrElse((0, -1))
@@ -75,11 +73,11 @@ object ExtractPipeline {
       docs.mapPartitions(_.flatMap(d => ExtractKernel.parseDoc(d, mode, rangeStart, rangeEnd)))
     else {
       // an explicit hash repartition on (url, page_no) spreads a 10k-page
-      // doc across tasks, at the cost of re-shuffling payload bytes.
-      // Partition count stays explicit: kernel cost is per-page CPU, not
-      // bytes, so AQE's byte-based coalescing must not shrink this stage.
-      val n = if (numPartitions > 0) numPartitions
-              else math.max(docs.sparkSession.sparkContext.defaultParallelism * 2, 8)
+      // doc across tasks, at the cost of re-shuffling payload bytes. The
+      // partition count is derived, not AQE-coalesced: kernel cost is
+      // per-page CPU, not bytes, so byte-based coalescing must not shrink
+      // this stage.
+      val n = math.max(docs.sparkSession.sparkContext.defaultParallelism * 2, 8)
       docs.flatMap(d => ExtractKernel.fanOut(d, rangeStart, rangeEnd))
         .repartition(n, col("url"), col("page_no"))
         .mapPartitions(_.map(page => ExtractKernel.parsePage(page, mode)))
@@ -117,50 +115,19 @@ object ExtractPipeline {
         .as("error"))
   }
 
-  /** Spark's string comparison is binary over UTF-8 bytes; Scala's default
-    * String ordering is UTF-16 code-unit-wise. They diverge for
-    * supplementary-plane characters, so in-group tie-breaks use this
-    * comparator to stay byte-identical with [[assemble]]'s sort_array. */
-  private def utf8Compare(a: String, b: String): Int = {
-    val ab = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val bb = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(ab.length, bb.length)
-    while (i < n) {
-      val c = (ab(i) & 0xff) - (bb(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    ab.length - bb.length
-  }
-
-  private val pageOrdering: Ordering[ParsedPage] = new Ordering[ParsedPage] {
-    def compare(x: ParsedPage, y: ParsedPage): Int = {
-      if (x.page_no != y.page_no) return x.page_no - y.page_no
-      var c = utf8Compare(x.md, y.md); if (c != 0) return c
-      c = utf8Compare(x.md_nohf, y.md_nohf); if (c != 0) return c
-      c = utf8Compare(x.extracted_text, y.extracted_text); if (c != 0) return c
-      c = utf8Compare(x.cells_json, y.cells_json); if (c != 0) return c
-      c = java.lang.Boolean.compare(x.filtered, y.filtered); if (c != 0) return c
-      utf8Compare(x.error, y.error)
-    }
-  }
-
   /** Raised task-side when [[assembleLocal]]'s unique-url precondition is
-    * violated: the silent failure mode (multiple output rows per url) is
-    * converted into a typed job failure telling the caller which route to
-    * take instead. */
+    * violated: the silent failure mode (split or merged output rows per
+    * url) is converted into a typed job failure naming the route to take
+    * instead. */
   final class DuplicateUrlException(url: String) extends IllegalStateException(
     s"assembleLocal: url '$url' appears in more than one input row of this partition; " +
-      "the map-side assembly path requires unique input urls — re-run with " +
-      "uniqueUrls = false (url-hash repartition + in-partition sort) or spreadPages = true")
+      "the map-side assembly path requires unique input urls — re-run with spreadPages = true")
 
-  /** One document's pages → the assembled per-doc record — the map-side
-    * analog of [[assemble]]'s aggregation, shared verbatim by
+  /** One document's pages, in page order → the assembled per-doc record —
+    * the map-side analog of [[assemble]]'s aggregation, shared verbatim by
     * [[assembleLocal]] and the fused [[WebPipeline]] so the two paths can
     * never diverge column-wise. */
-  private[pipeline] def assembleDoc(url: String, group: Vector[ParsedPage]): ParsedDoc = {
-    val ps = group.sorted(pageOrdering)
+  private[pipeline] def assembleDoc(url: String, ps: Vector[ParsedPage]): ParsedDoc =
     ParsedDoc(
       url = url,
       lang = "",
@@ -173,22 +140,16 @@ object ExtractPipeline {
         .mkString("[", ", ", "]"),
       filtered = ps.exists(_.filtered),
       error = ps.map(_.error).filter(_.nonEmpty).mkString("; "))
-  }
 
-  /** Map-side assembly. PRECONDITION: all pages of a url are consecutive
-    * within one partition — true for the kernel's output when input urls are
-    * unique (the default corpus contract, enforced upstream by exact dedup
-    * or by construction), or after `repartition(url) +
-    * sortWithinPartitions(url, page_no)` (the `uniqueUrls = false` path in
-    * [[run]]). A url whose pages straddle partitions or arrive
-    * non-consecutively would otherwise silently yield one output row per
-    * run, so a per-partition guard (a seen-set over closed groups, ~1 MB
-    * per 12k-doc task) raises [[DuplicateUrlException]] when a url group
-    * REOPENS — catching same-partition duplicates, the shape a duplicate
-    * input row actually produces under the fused fan-out (cross-partition
-    * duplicates remain the caller's contract). Output is column-identical
-    * to [[assemble]] including in-group tie-break order (pinned by
-    * PipelineE2ESpec, incl. planted-duplicate equivalence). */
+  /** Map-side assembly. PRECONDITION: input urls are unique, so the
+    * kernel emits each url's pages consecutively and in page order within
+    * one partition. A duplicate input row would otherwise silently split
+    * into two output rows or merge into one with doubled pages, so a
+    * per-partition guard raises [[DuplicateUrlException]] when a url group
+    * REOPENS (a seen-set over closed groups, ~1 MB per 12k-doc task) or
+    * when `page_no` stops increasing inside a group (an adjacent duplicate
+    * row). Cross-partition duplicates remain the caller's contract. Output
+    * is column-identical to [[assemble]] (pinned by PipelineE2ESpec). */
   def assembleLocal(pages: Dataset[ParsedPage]): DataFrame = {
     import pages.sparkSession.implicits._
     val docs = pages.mapPartitions { (iter: Iterator[ParsedPage]) =>
@@ -200,7 +161,12 @@ object ExtractPipeline {
           val url = in.head.url
           if (!closed.add(url)) throw new DuplicateUrlException(url)
           val group = Vector.newBuilder[ParsedPage]
-          while (in.hasNext && in.head.url == url) group += in.next()
+          var last = -1
+          while (in.hasNext && in.head.url == url) {
+            if (in.head.page_no <= last) throw new DuplicateUrlException(url)
+            last = in.head.page_no
+            group += in.next()
+          }
           assembleDoc(url, group.result())
         }
       }
@@ -211,16 +177,12 @@ object ExtractPipeline {
 
   /** Full pipeline: table → per-document extraction rows.
     *
-    * Topologies (all column-identical output):
-    *   - spreadPages=false, uniqueUrls=true (default): map-only plan, ZERO
-    *     shuffles. Requires unique input urls (see [[assembleLocal]]).
-    *   - spreadPages=false, uniqueUrls=false: one url-hash repartition +
-    *     in-partition sort before local assembly — correct for corpora with
-    *     re-crawled duplicate urls (same url, different warc_ts), and still
-    *     cheaper in memory than the wide-agg path (streaming group-merge
-    *     instead of collect_list buffering).
+    * Topologies (column-identical output on unique urls):
+    *   - spreadPages=false (default): map-only plan, ZERO shuffles.
+    *     Requires unique input urls (see [[assembleLocal]]).
     *   - spreadPages=true: page-spread shuffle + groupBy(url) assembly, for
-    *     pathological per-doc page counts.
+    *     corpora with re-crawled duplicate urls (their pages regroup into
+    *     one row per url) and for pathological per-doc page counts.
     *
     * The spread topology keeps the column-algebra [[assemble]] because it
     * measured cheaper there: routing it through `repartition(url)` +
@@ -230,20 +192,11 @@ object ExtractPipeline {
   def run(
       input: DataFrame,
       mode: PromptMode = PromptMode.LayoutAll,
-      numPartitions: Int = 0,
       spreadPages: Boolean = false,
-      pageRange: Option[(Int, Int)] = None,
-      uniqueUrls: Boolean = true): DataFrame = {
-    val parsed = parsePages(asPageDocs(input), mode, numPartitions, spreadPages, pageRange)
+      pageRange: Option[(Int, Int)] = None): DataFrame = {
+    val parsed = parsePages(asPageDocs(input), mode, spreadPages, pageRange)
     if (spreadPages) assemble(parsed)
-    else {
-      val local =
-        if (uniqueUrls) parsed
-        else parsed.repartition(col("url")).sortWithinPartitions(col("url"), col("page_no"))
-      assembleLocal(local).select(
-        col("url"), col("n_pages").cast("long").as("n_pages"), col("md"), col("md_nohf"),
-        col("extracted_text"), col("cells_json"), col("filtered"), col("error"))
-    }
+    else assembleLocal(parsed).withColumn("n_pages", col("n_pages").cast("long"))
   }
 
   /** Payload digest committed alongside each snapshot's extraction output —

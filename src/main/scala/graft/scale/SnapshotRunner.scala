@@ -1,6 +1,5 @@
 package graft.scale
 
-import graft.core.PromptMode
 import graft.kernel.{JArray, JInt, JNull, JObject, JString, JValue, PyJson}
 import graft.pipeline.ExtractPipeline
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -15,14 +14,17 @@ import scala.jdk.CollectionConverters._
   *
   * The url space is split into `nBuckets` hash buckets
   * (`pmod(xxhash64(url), nBuckets)` — the url-hash partitioning axis).
-  * Work proceeds in batches of `bucketsPerCommit` buckets; after a batch's
-  * parquet data lands, a manifest file `commit-<k>.json` carrying the
-  * batch's lineage rows is written via temp-file + atomic rename — the
-  * commit point, which makes data and lineage visible together. On restart,
-  * committed buckets are skipped by a partition-pruning filter (the
-  * dataflow analog of an anti-join against committed lineage keys;
-  * SURVEY.md §2.9 — with bucket granularity the anti-join collapses to a
-  * scan predicate, which is what survives at 10^12 rows).
+  * [[run]] first materializes the input once, partitioned by bucket
+  * ([[prepareInput]]), then works in batches of `bucketsPerCommit`
+  * buckets: each batch reads a partition-pruned scan of just its buckets,
+  * extracts them on the default map-only topology, and after its parquet
+  * data lands, a manifest file `commit-<k>.json` carrying the batch's
+  * lineage rows is written via temp-file + atomic rename — the commit
+  * point, which makes data and lineage visible together. On restart,
+  * committed buckets are skipped (the dataflow analog of an anti-join
+  * against committed lineage keys; SURVEY.md §2.9 — with bucket
+  * granularity the anti-join collapses to a scan predicate, which is what
+  * survives at 10^12 rows).
   *
   * Crash-safety contract (the snapshot-log semantics):
   *   - batch data is written with DYNAMIC PARTITION OVERWRITE into
@@ -46,8 +48,7 @@ import scala.jdk.CollectionConverters._
 final class SnapshotRunner(
     outDir: String,
     nBuckets: Int = 16,
-    bucketsPerCommit: Int = 4,
-    mode: PromptMode = PromptMode.LayoutAll) {
+    bucketsPerCommit: Int = 4) {
 
   private val dataDir = s"$outDir/data"
   private val manifestDir: Path = Paths.get(outDir, "manifest")
@@ -91,16 +92,16 @@ final class SnapshotRunner(
       StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** One-time input bucketization: materialize the input partitioned by
-    * `bucket=pmod(xxhash64(url), nBuckets)` so each commit batch reads a
-    * PARTITION-PRUNED scan of just its buckets' files. Without this,
-    * every batch re-filters the FULL input with a hash predicate parquet
-    * cannot push down — nBuckets/bucketsPerCommit batches means that many
-    * full scans of a 100 TB input; bucketized, the total input read across
-    * all batches is exactly one pass (plus this one bucketing shuffle).
-    * The explicit `repartition(nBuckets, bucket)` makes each writer task
-    * own whole buckets — without it every task writes a sliver into every
-    * `bucket=` dir (nTasks x nBuckets small files).
+  /** One-time input bucketization, called by [[run]]: materialize the
+    * input partitioned by `bucket=pmod(xxhash64(url), nBuckets)` so each
+    * commit batch reads a PARTITION-PRUNED scan of just its buckets'
+    * files. A hash predicate over the raw input cannot be pushed into
+    * parquet, so each batch would scan all of it; bucketized, the total
+    * input read across all batches is exactly one pass (plus this one
+    * bucketing shuffle). The explicit `repartition(nBuckets, bucket)`
+    * makes each writer task own whole buckets — without it every task
+    * writes a sliver into every `bucket=` dir (nTasks x nBuckets small
+    * files).
     *
     * Idempotent and crash-safe: the `_PREPARED` marker lands via atomic
     * rename only after the write succeeds; a crash mid-write leaves no
@@ -118,24 +119,23 @@ final class SnapshotRunner(
     Files.move(tmp, preparedMarker, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** The scan a commit batch reads when the bucketized layout exists:
-    * partition-pruned to `buckets` (visible as PartitionFilters in the
-    * plan; only those buckets' files are listed), read with the schema
-    * the marker records. None before [[prepareInput]] has committed its
-    * marker, or when the marker records no schema (written by an earlier
-    * version): the batch then filters the full input. */
-  def batchScan(spark: SparkSession, buckets: Seq[Int]): Option[DataFrame] = {
-    val schema =
-      if (!Files.exists(preparedMarker)) None
-      else PyJson.parse(Files.readString(preparedMarker)).asInstanceOf[JObject]
-        .get("schema").collect { case JString(json) => DataType.fromJson(json).asInstanceOf[StructType] }
-    schema.map(s => spark.read.schema(s).parquet(bucketedDir)
-      .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*)))
+  /** The scan a commit batch reads, after [[prepareInput]]: the bucketed
+    * layout partition-pruned to `buckets` (visible as PartitionFilters in
+    * the plan; only those buckets' files are listed), read with the schema
+    * the marker records. A marker that records no schema (written by an
+    * earlier version) makes the scan infer it from the parquet footers. */
+  def batchScan(spark: SparkSession, buckets: Seq[Int]): DataFrame = {
+    val schema = PyJson.parse(Files.readString(preparedMarker)).asInstanceOf[JObject]
+      .get("schema").collect { case JString(json) => DataType.fromJson(json).asInstanceOf[StructType] }
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(bucketedDir)
+      .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
   }
 
-  /** Process up to `maxBatches` uncommitted bucket-batches (-1 = all).
-    * Returns the number of batches committed in this invocation. */
+  /** Bucketize `input` (once), then process up to `maxBatches` uncommitted
+    * bucket-batches (-1 = all). Returns the number of batches committed in
+    * this invocation. */
   def run(spark: SparkSession, input: DataFrame, maxBatches: Int = -1): Int = {
+    prepareInput(spark, input)
     val done = committedBuckets()
     val remaining = (0 until nBuckets).filterNot(done.contains)
     val batches = remaining.grouped(bucketsPerCommit).toVector
@@ -145,15 +145,8 @@ final class SnapshotRunner(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try toRun.foreach { buckets =>
       val t0 = System.currentTimeMillis()
-      val bucketCol = Lineage.bucketOf(col("url"), nBuckets)
-      val inBatch = bucketCol.isin(buckets.map(Integer.valueOf): _*)
-      // bucketized layout (prepareInput) → partition-pruned scan of just
-      // this batch's buckets; otherwise fall back to filtering the full
-      // input (correct, but a full scan per batch — fine at test scale)
-      val batchInput = batchScan(spark, buckets)
-        .map(_.drop("bucket"))
-        .getOrElse(input.filter(inBatch))
-      val out = ExtractPipeline.run(batchInput, mode).withColumn("bucket", bucketCol)
+      val out = ExtractPipeline.run(batchScan(spark, buckets).drop("bucket"))
+        .withColumn("bucket", Lineage.bucketOf(col("url"), nBuckets))
       // dynamic overwrite: only the bucket=<k> partitions present in `out`
       // are replaced — a rerun of an uncommitted batch lands identically
       out.write.mode("overwrite").partitionBy("bucket").parquet(dataDir)

@@ -8,9 +8,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 /** Structurally hostile HTML: markup nested deeper than the recursive DOM
   * walks' stack must cost one error row, never a thrown
   * `StackOverflowError` (which `case e: Exception` does not catch); the
-  * per-op link harvests return no links for it. The pages run on a thread
-  * with an explicit 512 KiB stack, so the overflow happens on any JVM's
-  * default stack size. */
+  * per-op `LinkOps` entry points return their empty value for it. The
+  * pages run on a thread with an explicit 512 KiB stack, so the overflow
+  * happens on any JVM's default stack size. Unclosed markup must also
+  * parse in time linear in its size. */
 class DeepNestingSpec extends AnyFunSuite {
 
   private def doc(html: String) =
@@ -47,9 +48,40 @@ class DeepNestingSpec extends AnyFunSuite {
       "outlinksOf" -> (() => LinkOps.outlinksOf("https://deep.example/p", payload)),
       "anchorsOf" -> (() => LinkOps.anchorsOf("https://deep.example/p", payload)),
       "metaRobots" -> (() => LinkOps.metaRobots(payload)))
+    assertNoneThrow(calls)
+  }
+
+  for ((name, html) <- pages) test(s"LinkOps page-level entry points on $name: nothing thrown") {
+    val payload = html.getBytes(UTF_8)
+    val calls = Seq[(String, () => Any)](
+      "pageMetaOf" -> (() => LinkOps.pageMetaOf("https://deep.example/p", payload)),
+      "watOf" -> (() => LinkOps.watOf("https://deep.example/p", 0L, payload)),
+      "alternatesOf" -> (() => LinkOps.alternatesOf("https://deep.example/p", payload)),
+      "parseSitemap" -> (() => LinkOps.parseSitemap(html)),
+      "parseFeed" -> (() => LinkOps.parseFeed(html)))
+    assertNoneThrow(calls)
+  }
+
+  private def assertNoneThrow(calls: Seq[(String, () => Any)]): Unit = {
     val thrown = calls.flatMap { case (fn, call) =>
       onSmallStack(call()).left.toOption.map(e => s"$fn threw ${e.getClass.getName}")
     }
     assert(thrown.isEmpty, thrown.mkString("; "))
+  }
+
+  test("HtmlDom.parse of 20,000 unclosed <div><p>t</p> units: under 1 s, divs nested") {
+    val units = 20000
+    val html = "<html><body>" + "<div><p>t</p>" * units + "</body></html>"
+    val t0 = System.nanoTime()
+    val root = HtmlDom.parse(html)
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(seconds < 1.0, f"parse took $seconds%.2f s")
+    // each <div> stays open, so the divs nest: follow the last-child chain
+    @annotation.tailrec
+    def divDepth(e: HtmlDom.Element, acc: Int): Int = e.children.lastOption match {
+      case Some(c: HtmlDom.Element) => divDepth(c, if (c.tag == "div") acc + 1 else acc)
+      case _ => acc
+    }
+    assert(divDepth(root, 0) == units)
   }
 }

@@ -141,34 +141,43 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(lin.except(clean).count() == 0 && clean.except(lin).count() == 0)
   }
 
-  test("duplicate urls: uniqueUrls=false map-local path ≡ groupBy assembly") {
+  test("duplicate urls: spreadPages=true yields one row per url, unique rows ≡ default run") {
     // same url in two different partitions (a re-crawl) — the judge's
     // round-1 divergence case for the zero-shuffle default
-    val dup = input.limit(10)
+    val dupUrls = input.select("url").orderBy("url").limit(10).collect().map(_.getString(0))
+    val dup = input.filter(col("url").isin(dupUrls: _*))
     val planted = input.union(dup).repartition(7) // spread dups across partitions
-    val viaLocal = ExtractPipeline.run(planted, uniqueUrls = false)
     val viaAgg = ExtractPipeline.run(planted, spreadPages = true)
-    assert(viaLocal.count() == NDocs) // one row per url despite dups
-    val cols = viaAgg.columns.map(col)
-    assert(viaLocal.select(cols: _*).except(viaAgg.select(cols: _*)).count() == 0)
-    assert(viaAgg.select(cols: _*).except(viaLocal.select(cols: _*)).count() == 0)
+    assert(viaAgg.count() == NDocs) // one row per url despite dups
+    assert(viaAgg.select("url").distinct().count() == NDocs)
+    val cols = result.columns.map(col)
+    val unique = !col("url").isin(dupUrls: _*)
+    val a = viaAgg.filter(unique).select(cols: _*)
+    val b = result.filter(unique).select(cols: _*)
+    assert(a.count() == NDocs - dupUrls.length)
+    assert(a.except(b).count() == 0 && b.except(a).count() == 0)
   }
 
-  test("duplicate urls under uniqueUrls=true raise a typed error, not split rows") {
+  test("duplicate urls in one partition raise a typed error, not split rows") {
     // two input rows with the same url IN THE SAME partition — the shape
     // a duplicate row actually produces under the fused map-only path;
     // pre-guard this silently emitted one output row per input row
     val dup = input.limit(5)
     val planted = input.union(dup).coalesce(1)
-    val ex = intercept[Exception] {
-      ExtractPipeline.run(planted, uniqueUrls = true).count()
-    }
+    // each row twice in a row: the url group never reopens, so before the
+    // page_no guard the two copies merged into one row with doubled pages
+    val adjacent = input.limit(5)
+      .withColumn("__copy", explode(array(lit(0), lit(1)))).drop("__copy")
+      .coalesce(1)
     def chain(t: Throwable): List[Throwable] =
       if (t == null) Nil else t :: chain(t.getCause)
-    assert(chain(ex).exists(c =>
-      c.isInstanceOf[ExtractPipeline.DuplicateUrlException] ||
-        Option(c.getMessage).exists(_.contains("uniqueUrls = false"))),
-      s"expected DuplicateUrlException in cause chain, got: $ex")
+    for (df <- Seq(planted, adjacent)) {
+      val ex = intercept[Exception](ExtractPipeline.run(df).count())
+      assert(chain(ex).exists(c =>
+        c.isInstanceOf[ExtractPipeline.DuplicateUrlException] ||
+          Option(c.getMessage).exists(_.contains("re-run with spreadPages = true"))),
+        s"expected DuplicateUrlException in cause chain, got: $ex")
+    }
   }
 
   test("page-range pruning: [start, end] inclusive, renumbered from 0") {

@@ -71,13 +71,12 @@ class SnapshotResumeSpec extends AnyFunSuite {
     val refDir = Files.createTempDirectory("snap-ref").toString
 
     val r = new SnapshotRunner(dir, nBuckets = 8, bucketsPerCommit = 2)
-    assert(r.batchScan(spark, Seq(0, 1)).isEmpty, "no bucketized layout before prepareInput")
     r.prepareInput(spark, input)
     r.prepareInput(spark, input) // idempotent no-op (marker present)
 
     // partition pruning, proved at EXECUTION level: every file the batch
     // scan actually reads lives under its own buckets' partition dirs
-    val scan = r.batchScan(spark, Seq(0, 1)).get
+    val scan = r.batchScan(spark, Seq(0, 1))
     assert(scan.queryExecution.executedPlan.toString().contains("PartitionFilters"),
       "bucket filter must prune partitions, not post-filter rows")
     val filesRead = scan.select(input_file_name()).distinct().collect().map(_.getString(0))
@@ -91,20 +90,30 @@ class SnapshotResumeSpec extends AnyFunSuite {
     assert(r.run(spark, input, maxBatches = 2) == 2)
     val resumed = new SnapshotRunner(dir, nBuckets = 8, bucketsPerCommit = 2)
     assert(resumed.run(spark, input) == 2)
-    val ref = new SnapshotRunner(refDir, nBuckets = 8, bucketsPerCommit = 2)
-    assert(ref.run(spark, input) == 4)
-    val a = ref.output(spark).select("url", "md", "cells_json", "error")
     val b = resumed.output(spark).select("url", "md", "cells_json", "error")
+    val direct = graft.pipeline.ExtractPipeline.run(input)
+      .select("url", "md", "cells_json", "error")
     assert(b.count() == 120)
+    assert(direct.except(b).count() == 0 && b.except(direct).count() == 0)
+
+    // run without prepareInput bucketizes the input itself: the marker
+    // and the layout are there after it, and its batches read that layout,
+    // not the DataFrame passed in (empty on the second call)
+    val ref = new SnapshotRunner(refDir, nBuckets = 8, bucketsPerCommit = 2)
+    assert(ref.run(spark, input, maxBatches = 0) == 0)
+    assert(Files.exists(Paths.get(refDir, "input_bucketed_PREPARED")))
+    assert(Files.isDirectory(Paths.get(s"$refDir/input_bucketed/bucket=5")))
+    assert(ref.run(spark, input.limit(0)) == 4)
+    val a = ref.output(spark).select("url", "md", "cells_json", "error")
     assert(a.except(b).count() == 0 && b.except(a).count() == 0)
 
-    // a marker written before it recorded the schema: no bucketized scan,
-    // so every batch filters the full input, and the output is unchanged
+    // a marker written before it recorded the schema: the batch scans
+    // infer it from the layout, and the output is unchanged
     val legacyDir = Files.createTempDirectory("snap-legacy").toString
     val legacy = new SnapshotRunner(legacyDir, nBuckets = 8, bucketsPerCommit = 2)
     legacy.prepareInput(spark, input)
     Files.writeString(Paths.get(legacyDir, "input_bucketed_PREPARED"), """{"n_buckets": 8}""")
-    assert(legacy.batchScan(spark, Seq(0, 1)).isEmpty)
+    assert(legacy.batchScan(spark, Seq(0, 1)).columns.toSeq == scan.columns.toSeq)
     assert(legacy.run(spark, input) == 4)
     val c = legacy.output(spark).select("url", "md", "cells_json", "error")
     assert(c.count() == 120)
