@@ -17,9 +17,10 @@ import scala.util.control.NonFatal
   *           → per-page result record, or an error row
   *
   * Every entry point is built on that one dispatcher and that one tail:
-  * [[parseDoc]] parses a document in place, [[fanOut]] + [[parsePage]]
-  * split it across a shuffle, and the fused web pass reuses the HTML
-  * page's DOM.
+  * [[parseDoc]] parses a document in place (both pipeline topologies run
+  * it), [[fanOut]] + [[parsePage]] take one page at a time as a
+  * self-contained [[RawPage]] (for specs and the per-layer tracer), and
+  * the fused web pass reuses the HTML page's DOM.
   *
   * Everything after the response string is byte-identical to the reference
   * (golden-tested); the classifier branch defines the response contents.
@@ -28,8 +29,8 @@ import scala.util.control.NonFatal
 object ExtractKernel {
 
   /** One page between the dispatcher ([[pagesOf]]) and the per-page tail
-    * ([[parse]]). It lives in memory only: pages that cross the spread
-    * shuffle travel as [[RawPage]] rows ([[toRawPage]] / [[fromRawPage]]). */
+    * ([[parse]]). It lives in memory only: a page taken out on its own
+    * travels as a [[RawPage]] row ([[toRawPage]] / [[fromRawPage]]). */
   private[graft] sealed trait Page
   /** A document that yields no page (bad gzip, empty payload, PDF parse
     * failure, empty page range): one error row carrying `message`. */
@@ -83,14 +84,16 @@ object ExtractKernel {
     * `load_images_from_pdf` + per-page tasks, parser.py:258-271). */
   def fanOut(doc: PageDoc): Vector[RawPage] = fanOut(doc, 0, -1)
 
-  /** Page-range fan-out into [[RawPage]] rows, for the spread shuffle
-    * (range semantics: [[pagesOf]]). */
+  /** Page-range fan-out into self-contained [[RawPage]] rows, each page
+    * parseable alone by [[parsePage]] (range semantics: [[pagesOf]]). No
+    * pipeline topology uses it: both parse whole documents with
+    * [[parseDoc]], which skips the per-page PDF serialize and re-parse. */
   def fanOut(doc: PageDoc, startPageId: Int, endPageId: Int): Vector[RawPage] = {
     val pages = pagesOf(doc, startPageId, endPageId)
     pages.zipWithIndex.map { case (page, i) => toRawPage(doc, i, pages.length, page) }
   }
 
-  /** Only PDF pages are re-serialized: a page crosses the shuffle as bytes. */
+  /** Only PDF pages are re-serialized: a RawPage carries its page as bytes. */
   private def toRawPage(doc: PageDoc, pageNo: Int, total: Int, page: Page): RawPage = {
     val (kind, bytes) = page match {
       case Failed(message) => ("error", message.getBytes(StandardCharsets.UTF_8))
@@ -378,7 +381,7 @@ object ExtractKernel {
         o.get("text").get match { case JString(s) => s; case v => PyJson.pyStr(v) }
     }
 
-  /** Full per-page parse of a shuffled [[RawPage]] (the spread topology). */
+  /** Full per-page parse of one [[RawPage]] from [[fanOut]]. */
   def parsePage(page: RawPage, mode: PromptMode): ParsedPage =
     parse(page.url, page.page_no, fromRawPage(page), mode)
 
@@ -422,7 +425,7 @@ object ExtractKernel {
     * hands it to `render`; a garbled page goes to `garbled` as the raw
     * response. A failed page, or a throw while building the page, its
     * layout or the result, becomes `failed(message)`. `page` is by-name
-    * so that decoding a shuffled RawPage fails here too. */
+    * so that decoding a RawPage fails here too. */
   private def onPage[A](page: => Page, failed: String => A, garbled: String => A)(
       render: HtmlExtract.PageLayout => A): A = {
     // an image payload that does not decode gets its own typed message, as

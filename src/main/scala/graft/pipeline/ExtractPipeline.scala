@@ -2,11 +2,13 @@ package graft.pipeline
 
 import graft.core._
 import graft.kernel.ExtractKernel
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The Spark-native extraction pipeline (SURVEY.md §3.1 translation).
-  * One topology per input contract; on unique urls both give the same rows.
+  * One topology per input contract; both run the same kernel stage and
+  * the same assembler, and on unique urls they give the same rows.
   *
   * Unique input urls (the default, `spreadPages = false`): map-only, ZERO
   * shuffles.
@@ -15,13 +17,12 @@ import org.apache.spark.sql.functions._
   *            → mapPartitions(assembleLocal)           // a url's pages are consecutive
   * }}}
   *
-  * Duplicate urls (re-crawls) or pathological per-doc page counts
-  * (`spreadPages = true`):
+  * Duplicate urls (re-crawls, `spreadPages = true`): one document shuffle,
+  * then the same two stages.
   * {{{
-  * inputTable → flatMap(ExtractKernel.fanOut)          // pages as RawPage rows
-  *            → repartition(n, url, page_no)           // one doc's pages spread over tasks
-  *            → mapPartitions(ExtractKernel.parsePage)
-  *            → groupBy(url).agg(sort_array(collect_list(...)))  // assemble
+  * inputTable → repartition(n, url) + sortWithinPartitions(url)  // a url's rows meet, adjacent
+  *            → mapPartitions(ExtractKernel.parseDoc)
+  *            → mapPartitions(assembleLocal)  // a duplicate url's pages sort in sort_array order
   * }}}
   *
   * Scale design:
@@ -33,86 +34,53 @@ import org.apache.spark.sql.functions._
   *     client-per-thread shape (inference.py:12-49).
   *   - column pruning/pushdown: callers keep url/lang/warc_ts filters in
   *     Column form BEFORE `asPageDocs` so they reach the parquet scan.
-  *   - [[assemble]]'s aggregates are all Spark builtins (sort_array,
-  *     collect_list, array_join, transform) — codegen'd, partial-agg
-  *     capable, AQE-sized.
+  *   - the spread shuffle moves whole documents, not pages. The reference
+  *     spreads one document's pages over a thread pool (parser.py:262-289)
+  *     because each page is a model call lasting seconds; here a PDF page
+  *     parses in ~40 µs, so a page fan-out (serialize every PDF page,
+  *     shuffle it, re-parse it, regroup it in an aggregate) cost more than
+  *     the parse. The trade-off: a 10,000-page PDF parses in one task,
+  *     ~0.4 s, less than one 16 MB scan split's work; a per-document page
+  *     budget, not a page shuffle, is what bounds that case.
   */
 object ExtractPipeline {
 
-  import org.apache.spark.sql.Encoders
-  implicit val pageDocEnc: org.apache.spark.sql.Encoder[PageDoc] = Encoders.product[PageDoc]
-  implicit val rawPageEnc: org.apache.spark.sql.Encoder[RawPage] = Encoders.product[RawPage]
-  implicit val parsedPageEnc: org.apache.spark.sql.Encoder[ParsedPage] = Encoders.product[ParsedPage]
+  implicit val pageDocEnc: Encoder[PageDoc] = Encoders.product[PageDoc]
+  implicit val parsedPageEnc: Encoder[ParsedPage] = Encoders.product[ParsedPage]
+
+  /** The input columns the kernel reads. [[asPageDocs]] selects them, and
+    * SnapshotRunner's bucketed input copy carries only them. */
+  val kernelColumns: Seq[String] = Seq("url", "html", "lang")
 
   /** Adapt the (url, warc_ts, html, text, lang) table; keep this AFTER any
     * relational filters so pushdown stays intact. The kernel consumes only
-    * (url, html, lang), so warc_ts/text are replaced by literals — the
+    * [[kernelColumns]], so warc_ts/text are replaced by literals — the
     * parquet scan then PRUNES those columns (`text` is a full pre-extracted
     * text copy per row; decoding it would roughly double scan bytes and
     * per-row String allocation for nothing). Pinned by PlanSpec. */
-  def asPageDocs(df: DataFrame): Dataset[PageDoc] = {
-    import df.sparkSession.implicits._
-    df.select(col("url"),
-      lit(null).cast("timestamp").as("warc_ts"),
-      col("html"),
-      lit("").as("text"),
-      col("lang")).as[PageDoc]
-  }
+  def asPageDocs(df: DataFrame): Dataset[PageDoc] =
+    df.select(kernelColumns.map(col) ++ Seq(
+      lit(null).cast("timestamp").as("warc_ts"), lit("").as("text")): _*).as[PageDoc]
 
-  /** Fan documents out into pages and parse each page. (Lineage metrics
-    * are computed relationally from the output — graft.scale.Lineage —
-    * not collected here: a task-side channel double-counts under retries
-    * and funnels through driver memory.) */
+  /** Parse documents into pages, each document's pages consecutive and in
+    * page order. (Lineage metrics are computed relationally from the
+    * output — graft.scale.Lineage — not collected here: a task-side
+    * channel double-counts under retries and funnels through driver
+    * memory.) With `spreadPages`, documents first move to `n` url-hashed
+    * tasks, sorted by url so that a url's rows are adjacent. `n` is
+    * derived, not AQE-coalesced: kernel cost is per-page CPU, not bytes,
+    * so byte-based coalescing must not shrink this stage. */
   def parsePages(
       docs: Dataset[PageDoc],
       mode: PromptMode = PromptMode.LayoutAll,
       spreadPages: Boolean = false,
       pageRange: Option[(Int, Int)] = None): Dataset[ParsedPage] = {
     val (rangeStart, rangeEnd) = pageRange.getOrElse((0, -1))
-    if (!spreadPages)
-      docs.mapPartitions(_.flatMap(d => ExtractKernel.parseDoc(d, mode, rangeStart, rangeEnd)))
-    else {
-      // an explicit hash repartition on (url, page_no) spreads a 10k-page
-      // doc across tasks, at the cost of re-shuffling payload bytes. The
-      // partition count is derived, not AQE-coalesced: kernel cost is
-      // per-page CPU, not bytes, so byte-based coalescing must not shrink
-      // this stage.
+    val placed = if (!spreadPages) docs else {
       val n = math.max(docs.sparkSession.sparkContext.defaultParallelism * 2, 8)
-      docs.flatMap(d => ExtractKernel.fanOut(d, rangeStart, rangeEnd))
-        .repartition(n, col("url"), col("page_no"))
-        .mapPartitions(_.map(page => ExtractKernel.parsePage(page, mode)))
+      docs.repartition(n, col("url")).sortWithinPartitions("url")
     }
-  }
-
-  /** Assemble per-document rows: page_no-ordered md join with
-    * `\n\n---\n\n` (reference combine_markdown_files), cells concatenated
-    * across pages in page order (demo_gradio.py:264-267). Pure builtins. */
-  def assemble(pages: Dataset[ParsedPage]): DataFrame = {
-    val sorted = sort_array(collect_list(struct(
-      col("page_no"), col("md"), col("md_nohf"), col("extracted_text"),
-      col("cells_json"), col("filtered"), col("error"))))
-    val agg = pages
-      .groupBy(col("url"))
-      .agg(sorted.as("pages"), count(lit(1)).as("n_pages"))
-    agg.select(
-      col("url"),
-      col("n_pages"),
-      array_join(transform(col("pages"), p => p.getField("md")), "\n\n---\n\n").as("md"),
-      array_join(transform(col("pages"), p => p.getField("md_nohf")), "\n\n---\n\n").as("md_nohf"),
-      array_join(
-        filter(transform(col("pages"), p => p.getField("extracted_text")), t => t =!= ""),
-        "\n\n").as("extracted_text"),
-      concat(lit("["),
-        array_join(transform(col("pages"), p =>
-          concat(lit("{\"page_no\": "), p.getField("page_no"),
-            lit(", \"cells\": "),
-            when(p.getField("cells_json") === "", lit("null")).otherwise(p.getField("cells_json")),
-            lit("}"))), ", "),
-        lit("]")).as("cells_json"),
-      aggregate(transform(col("pages"), p => p.getField("filtered")), lit(false), (a, b) => a || b)
-        .as("filtered"),
-      array_join(filter(transform(col("pages"), p => p.getField("error")), e => e =!= ""), "; ")
-        .as("error"))
+    placed.mapPartitions(_.flatMap(d => ExtractKernel.parseDoc(d, mode, rangeStart, rangeEnd)))
   }
 
   /** Raised task-side when [[assembleLocal]]'s unique-url precondition is
@@ -123,10 +91,11 @@ object ExtractPipeline {
     s"assembleLocal: url '$url' appears in more than one input row of this partition; " +
       "the map-side assembly path requires unique input urls — re-run with spreadPages = true")
 
-  /** One document's pages, in page order → the assembled per-doc record —
-    * the map-side analog of [[assemble]]'s aggregation, shared verbatim by
-    * [[assembleLocal]] and the fused [[WebPipeline]] so the two paths can
-    * never diverge column-wise. */
+  /** One document's pages, in page order → the assembled per-doc record:
+    * page_no-ordered md join with `\n\n---\n\n` (reference
+    * combine_markdown_files), cells concatenated across pages in page order
+    * (demo_gradio.py:264-267). Shared verbatim by both topologies and the
+    * fused [[WebPipeline]], so the paths can never diverge column-wise. */
   private[pipeline] def assembleDoc(url: String, ps: Vector[ParsedPage]): ParsedDoc =
     ParsedDoc(
       url = url,
@@ -141,6 +110,19 @@ object ExtractPipeline {
       filtered = ps.exists(_.filtered),
       error = ps.map(_.error).filter(_.nonEmpty).mkString("; "))
 
+  /** The order Spark's `sort_array` gives a url's page structs: page_no,
+    * then md, md_nohf, extracted_text, cells_json as unsigned UTF-8 bytes,
+    * then filtered, then error. The spread topology puts a duplicate url's
+    * pages in this order, so its row does not depend on which copy the
+    * shuffle delivered first. */
+  private val pageStructOrder: Ordering[ParsedPage] = {
+    val utf8: Ordering[String] = (a, b) =>
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+    Ordering.by((p: ParsedPage) =>
+      (p.page_no, p.md, p.md_nohf, p.extracted_text, p.cells_json, p.filtered, p.error))(
+      Ordering.Tuple7(Ordering.Int, utf8, utf8, utf8, utf8, Ordering.Boolean, utf8))
+  }
+
   /** Map-side assembly. PRECONDITION: input urls are unique, so the
     * kernel emits each url's pages consecutively and in page order within
     * one partition. A duplicate input row would otherwise silently split
@@ -149,8 +131,15 @@ object ExtractPipeline {
     * REOPENS (a seen-set over closed groups, ~1 MB per 12k-doc task) or
     * when `page_no` stops increasing inside a group (an adjacent duplicate
     * row). Cross-partition duplicates remain the caller's contract. Output
-    * is column-identical to [[assemble]] (pinned by PipelineE2ESpec). */
-  def assembleLocal(pages: Dataset[ParsedPage]): DataFrame = {
+    * is column-identical to the spread topology's (pinned by
+    * PipelineE2ESpec). */
+  def assembleLocal(pages: Dataset[ParsedPage]): DataFrame = assembleGroups(pages, spread = false)
+
+  /** [[assembleLocal]]'s grouping loop. On the spread topology a url's
+    * copies are adjacent, so where the default path raises
+    * [[DuplicateUrlException]] for a `page_no` that stops increasing, this
+    * sorts that one group in [[pageStructOrder]] and emits one row. */
+  private def assembleGroups(pages: Dataset[ParsedPage], spread: Boolean): DataFrame = {
     import pages.sparkSession.implicits._
     val docs = pages.mapPartitions { (iter: Iterator[ParsedPage]) =>
       val in = iter.buffered
@@ -162,12 +151,17 @@ object ExtractPipeline {
           if (!closed.add(url)) throw new DuplicateUrlException(url)
           val group = Vector.newBuilder[ParsedPage]
           var last = -1
+          var ordered = true
           while (in.hasNext && in.head.url == url) {
-            if (in.head.page_no <= last) throw new DuplicateUrlException(url)
+            if (in.head.page_no <= last) {
+              if (!spread) throw new DuplicateUrlException(url)
+              ordered = false
+            }
             last = in.head.page_no
             group += in.next()
           }
-          assembleDoc(url, group.result())
+          val ps = group.result()
+          assembleDoc(url, if (ordered) ps else ps.sorted(pageStructOrder))
         }
       }
     }
@@ -177,27 +171,26 @@ object ExtractPipeline {
 
   /** Full pipeline: table → per-document extraction rows.
     *
-    * Topologies (column-identical output on unique urls):
+    * Topologies (column- and schema-identical output on unique urls):
     *   - spreadPages=false (default): map-only plan, ZERO shuffles.
     *     Requires unique input urls (see [[assembleLocal]]).
-    *   - spreadPages=true: page-spread shuffle + groupBy(url) assembly, for
-    *     corpora with re-crawled duplicate urls (their pages regroup into
-    *     one row per url) and for pathological per-doc page counts.
+    *   - spreadPages=true: one document shuffle on url, then the same
+    *     kernel stage and assembler, for corpora with re-crawled duplicate
+    *     urls (their pages regroup into one row per url).
     *
-    * The spread topology keeps the column-algebra [[assemble]] because it
-    * measured cheaper there: routing it through `repartition(url)` +
-    * `sortWithinPartitions` + [[assembleLocal]] instead read 0.508 →
-    * 0.591 ms CPU per doc (+16%, worse in 5 of 5 alternating pairs) and
-    * 3465 → 3316 docs/s on perfbench's pdf_spread workload (seed 11). */
+    * The spread topology shuffles documents, not pages: against a page
+    * fan-out on (url, page_no) regrouped by a `sort_array(collect_list)`
+    * aggregate, it read median `cpu_ms_per_doc` 0.374 → 0.301 (−20%, better
+    * in 10 of 10 alternating pairs) and `docs_per_s` 5218 → 6365 on
+    * perfbench's pdf_spread workload (seed 11, 4-core box, JDK 17), with
+    * shuffle bytes per doc 4381 → 1595. */
   def run(
       input: DataFrame,
       mode: PromptMode = PromptMode.LayoutAll,
       spreadPages: Boolean = false,
-      pageRange: Option[(Int, Int)] = None): DataFrame = {
-    val parsed = parsePages(asPageDocs(input), mode, spreadPages, pageRange)
-    if (spreadPages) assemble(parsed)
-    else assembleLocal(parsed).withColumn("n_pages", col("n_pages").cast("long"))
-  }
+      pageRange: Option[(Int, Int)] = None): DataFrame =
+    assembleGroups(parsePages(asPageDocs(input), mode, spreadPages, pageRange), spreadPages)
+      .withColumn("n_pages", col("n_pages").cast("long"))
 
   /** Payload digest committed alongside each snapshot's extraction output —
     * the key that makes the next ingest incremental without re-reading the

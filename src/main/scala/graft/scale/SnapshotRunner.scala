@@ -5,6 +5,7 @@ import graft.pipeline.ExtractPipeline
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -93,31 +94,55 @@ final class SnapshotRunner(
   }
 
   /** One-time input bucketization, called by [[run]]: materialize the
-    * input partitioned by `bucket=pmod(xxhash64(url), nBuckets)` so each
-    * commit batch reads a PARTITION-PRUNED scan of just its buckets'
-    * files. A hash predicate over the raw input cannot be pushed into
-    * parquet, so each batch would scan all of it; bucketized, the total
-    * input read across all batches is exactly one pass (plus this one
-    * bucketing shuffle). The explicit `repartition(nBuckets, bucket)`
-    * makes each writer task own whole buckets — without it every task
-    * writes a sliver into every `bucket=` dir (nTasks x nBuckets small
-    * files).
+    * input's [[ExtractPipeline.kernelColumns]] partitioned by
+    * `bucket=pmod(xxhash64(url), nBuckets)` so each commit batch reads a
+    * PARTITION-PRUNED scan of just its buckets' files. A hash predicate
+    * over the raw input cannot be pushed into parquet, so each batch would
+    * scan all of it; bucketized, the total input read across all batches
+    * is exactly one pass (plus this one bucketing shuffle, which carries
+    * only what extraction reads). The explicit `repartition(nBuckets,
+    * bucket)` makes each writer task own whole buckets — without it every
+    * task writes a sliver into every `bucket=` dir (nTasks x nBuckets
+    * small files).
     *
     * Idempotent and crash-safe: the `_PREPARED` marker lands via atomic
     * rename only after the write succeeds; a crash mid-write leaves no
     * marker and the next call rewrites from scratch. The marker carries
-    * the bucketed schema, so batch scans need no footer-inference job. */
+    * the bucketed schema, so batch scans need no footer-inference job, and
+    * a SHA-256 of the input's sorted file list with the file count. A
+    * later call whose file-backed input differs raises
+    * [[SnapshotRunner.InputMismatchException]] before any write, instead
+    * of committing the bucketed copy of the first input. An input with no
+    * files (in-memory, or planned away like `limit(0)`), or a marker that
+    * records no input, is not checked: the batches then extract the copy
+    * prepared first, whatever DataFrame is passed. */
   def prepareInput(spark: SparkSession, input: DataFrame): Unit = {
-    if (Files.exists(preparedMarker)) return
-    val bucketed = input.withColumn("bucket", Lineage.bucketOf(col("url"), nBuckets))
+    val files = input.inputFiles.sorted
+    if (Files.exists(preparedMarker)) {
+      val marker = readMarker()
+      for (JString(sha) <- marker.get("input_sha256") if files.nonEmpty && sha != sha256(files))
+        throw new SnapshotRunner.InputMismatchException(outDir, marker.get("input_files"), files.length)
+      return
+    }
+    val bucketed = input.select(ExtractPipeline.kernelColumns.map(col): _*)
+      .withColumn("bucket", Lineage.bucketOf(col("url"), nBuckets))
     bucketed.repartition(nBuckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(bucketedDir)
     Files.createDirectories(preparedMarker.getParent)
     val tmp = preparedMarker.resolveSibling(".input_bucketed_PREPARED.tmp")
-    Files.writeString(tmp, PyJson.dumps(JObject(
-      "n_buckets" -> JInt(nBuckets), "schema" -> JString(bucketed.schema.json))))
+    val inputKeys = if (files.isEmpty) Nil
+      else Seq("input_sha256" -> JString(sha256(files)), "input_files" -> JInt(files.length))
+    Files.writeString(tmp, PyJson.dumps(JObject(Seq(
+      "n_buckets" -> JInt(nBuckets), "schema" -> JString(bucketed.schema.json)) ++ inputKeys: _*)))
     Files.move(tmp, preparedMarker, StandardCopyOption.ATOMIC_MOVE)
   }
+
+  private def readMarker(): JObject =
+    PyJson.parse(Files.readString(preparedMarker)).asInstanceOf[JObject]
+
+  private def sha256(files: Seq[String]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(files.mkString("\n").getBytes(StandardCharsets.UTF_8)).map("%02x".format(_)).mkString
 
   /** The scan a commit batch reads, after [[prepareInput]]: the bucketed
     * layout partition-pruned to `buckets` (visible as PartitionFilters in
@@ -125,8 +150,8 @@ final class SnapshotRunner(
     * the marker records. A marker that records no schema (written by an
     * earlier version) makes the scan infer it from the parquet footers. */
   def batchScan(spark: SparkSession, buckets: Seq[Int]): DataFrame = {
-    val schema = PyJson.parse(Files.readString(preparedMarker)).asInstanceOf[JObject]
-      .get("schema").collect { case JString(json) => DataType.fromJson(json).asInstanceOf[StructType] }
+    val schema = readMarker().get("schema")
+      .collect { case JString(json) => DataType.fromJson(json).asInstanceOf[StructType] }
     schema.fold(spark.read)(s => spark.read.schema(s)).parquet(bucketedDir)
       .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
   }
@@ -192,4 +217,16 @@ final class SnapshotRunner(
     spark.createDataFrame(rows.asJava, StructType(
       lineageCols.map(StructField(_, LongType)) :+ StructField("commit_id", IntegerType)))
   }
+}
+
+object SnapshotRunner {
+
+  /** A run or prepare on an `outDir` whose bucketed copy was made from
+    * other input files: committing would publish the old input's
+    * extraction under the new snapshot. */
+  final class InputMismatchException(outDir: String, prepared: Option[JValue], given: Int)
+      extends IllegalStateException(
+        s"SnapshotRunner: $outDir was prepared from other input files " +
+          s"(${prepared.map(PyJson.dumps).getOrElse("?")} files) than the $given given; " +
+          "use a new output directory for a new snapshot")
 }

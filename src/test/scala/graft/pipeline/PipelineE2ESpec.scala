@@ -3,6 +3,8 @@ package graft.pipeline
 import graft.SparkTestBase
 import graft.core._
 import graft.gen.{InputGen, InputTable}
+import graft.kernel.ExtractKernel
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -82,6 +84,7 @@ class PipelineE2ESpec extends AnyFunSuite {
     val spread = ExtractPipeline.run(InputTable.generate(spark, NDocs, seed = 42L),
       spreadPages = true)
     assert(spread.columns.toSeq == result.columns.toSeq)
+    assert(spread.schema == result.schema) // same types and nullability
     val cols = result.columns.map(col)
     val d1 = result.select(cols: _*).except(spread.select(cols: _*))
     val d2 = spread.select(cols: _*).except(result.select(cols: _*))
@@ -155,6 +158,64 @@ class PipelineE2ESpec extends AnyFunSuite {
     val a = viaAgg.filter(unique).select(cols: _*)
     val b = result.filter(unique).select(cols: _*)
     assert(a.count() == NDocs - dupUrls.length)
+    assert(a.except(b).count() == 0 && b.except(a).count() == 0)
+  }
+
+  /** The spread topology's former assembly, kept as an oracle: every page
+    * from `fanOut` + `parsePage`, regrouped per url with
+    * `sort_array(collect_list(struct(...)))` and joined in column algebra. */
+  private def assembleByAggregate(docs: Dataset[PageDoc]): DataFrame = {
+    import ExtractPipeline.parsedPageEnc
+    val pages = docs.flatMap(d =>
+      ExtractKernel.fanOut(d).map(ExtractKernel.parsePage(_, PromptMode.LayoutAll)))
+    val sorted = sort_array(collect_list(struct(
+      col("page_no"), col("md"), col("md_nohf"), col("extracted_text"),
+      col("cells_json"), col("filtered"), col("error"))))
+    pages.groupBy(col("url")).agg(sorted.as("pages"), count(lit(1)).as("n_pages")).select(
+      col("url"),
+      col("n_pages"),
+      array_join(transform(col("pages"), p => p.getField("md")), "\n\n---\n\n").as("md"),
+      array_join(transform(col("pages"), p => p.getField("md_nohf")), "\n\n---\n\n").as("md_nohf"),
+      array_join(
+        filter(transform(col("pages"), p => p.getField("extracted_text")), t => t =!= ""),
+        "\n\n").as("extracted_text"),
+      concat(lit("["),
+        array_join(transform(col("pages"), p =>
+          concat(lit("{\"page_no\": "), p.getField("page_no"),
+            lit(", \"cells\": "),
+            when(p.getField("cells_json") === "", lit("null")).otherwise(p.getField("cells_json")),
+            lit("}"))), ", "),
+        lit("]")).as("cells_json"),
+      aggregate(transform(col("pages"), p => p.getField("filtered")), lit(false), (a, b) => a || b)
+        .as("filtered"),
+      array_join(filter(transform(col("pages"), p => p.getField("error")), e => e =!= ""), "; ")
+        .as("error"))
+  }
+
+  test("re-crawls with other payloads: spreadPages=true ≡ the page-aggregate assembly, all columns") {
+    // each pdf url crawled again carrying the next pdf's payload (other
+    // page counts), html urls re-crawled as a pdf, and exact copies: a
+    // third row for some pdf urls, a second for some html urls
+    val rows = input.orderBy("url").collect()
+    def ofKind(k: String) = rows.filter(_.getString(0).contains(s"/$k/"))
+    val pdfs = ofKind("pdf")
+    val htmlAt = input.schema.fieldIndex("html")
+    def recrawl(r: Row, payload: Row) = Row.fromSeq(r.toSeq.updated(htmlAt, payload.get(htmlAt)))
+    val again = pdfs.indices.map(i => recrawl(pdfs(i), pdfs((i + 1) % pdfs.length))) ++
+      ofKind("html").take(5).map(recrawl(_, pdfs.head)) ++
+      pdfs.take(3) ++ ofKind("html").slice(5, 8)
+    val multiPage = again.count(r => ExtractKernel.fanOut(
+      PageDoc(r.getString(0), null, r.getAs[Array[Byte]](htmlAt), "", "")).length > 1)
+    assert(multiPage >= 2, "need re-crawled multi-page pdfs")
+    val planted = input.union(spark.createDataFrame(
+      java.util.Arrays.asList(again: _*), input.schema)).repartition(7)
+
+    val spread = ExtractPipeline.run(planted, spreadPages = true)
+    val ref = assembleByAggregate(ExtractPipeline.asPageDocs(planted))
+    val cols = result.columns.map(col)
+    assert(spread.count() == NDocs && ref.count() == NDocs)
+    val a = spread.select(cols: _*)
+    val b = ref.select(cols: _*)
     assert(a.except(b).count() == 0 && b.except(a).count() == 0)
   }
 

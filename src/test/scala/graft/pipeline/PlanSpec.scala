@@ -54,11 +54,15 @@ class PlanSpec extends AnyFunSuite {
     assert(readSchema.contains("html") && readSchema.contains("url"), readSchema)
   }
 
-  test("spreadPages topology has exactly the page-spread + assembly exchanges") {
+  test("spreadPages topology has one document exchange on url, no aggregate") {
     val out = ExtractPipeline.run(spark.read.parquet(tableDir), spreadPages = true)
     val plan = out.queryExecution.executedPlan.toString()
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 2, s"expected 2 hash exchanges, got $exchanges:\n$plan")
+    val exchanges = "Exchange hashpartitioning\\(([^,]+)".r.findAllMatchIn(plan).map(_.group(1)).toList
+    assert(exchanges.length == 1, s"expected 1 hash exchange, got ${exchanges.length}:\n$plan")
+    assert(exchanges.head.startsWith("url#"), s"expected the exchange on url:\n$plan")
+    // "HashAggregate" also matches ObjectHashAggregate
+    assert(!plan.contains("HashAggregate") && !plan.contains("SortAggregate"),
+      s"unexpected aggregate in:\n$plan")
   }
 
   test("map-only curation ops have ZERO exchanges: c4LineFilter, dedupLinesWithinDoc, assignSplit") {

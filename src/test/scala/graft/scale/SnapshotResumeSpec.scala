@@ -2,6 +2,7 @@ package graft.scale
 
 import graft.SparkTestBase
 import graft.gen.InputTable
+import graft.kernel.{JInt, JObject, JString, PyJson}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -118,6 +119,45 @@ class SnapshotResumeSpec extends AnyFunSuite {
     val c = legacy.output(spark).select("url", "md", "cells_json", "error")
     assert(c.count() == 120)
     assert(a.except(c).count() == 0 && c.except(a).count() == 0)
+
+    // the bucketed copy carries only what extraction reads; a layout
+    // written with every input column (by an earlier version, its marker
+    // recording that schema) still resumes to the same output
+    assert(scan.columns.toSeq == Seq("url", "html", "lang", "bucket"))
+    val fullDir = Files.createTempDirectory("snap-fullschema").toString
+    val full = input.withColumn("bucket", Lineage.bucketOf(col("url"), 8))
+    full.repartition(8, col("bucket")).write.partitionBy("bucket").parquet(s"$fullDir/input_bucketed")
+    Files.writeString(Paths.get(fullDir, "input_bucketed_PREPARED"),
+      PyJson.dumps(JObject("n_buckets" -> JInt(8), "schema" -> JString(full.schema.json))))
+    val wide = new SnapshotRunner(fullDir, nBuckets = 8, bucketsPerCommit = 2)
+    assert(wide.batchScan(spark, Seq(0)).columns.toSeq == input.columns.toSeq :+ "bucket")
+    assert(wide.run(spark, input) == 4)
+    val w = wide.output(spark).select("url", "md", "cells_json", "error")
+    assert(w.count() == 120)
+    assert(a.except(w).count() == 0 && w.except(a).count() == 0)
+  }
+
+  test("a reused outDir refuses an input other than the one it prepared") {
+    val dirA = Files.createTempDirectory("snap-in-a").toString
+    val dirB = Files.createTempDirectory("snap-in-b").toString
+    InputTable.generate(spark, 60L, seed = 7L).write.mode("overwrite").parquet(dirA)
+    InputTable.generate(spark, 60L, seed = 8L).write.mode("overwrite").parquet(dirB)
+    val out = Files.createTempDirectory("snap-in").toString
+
+    val r = new SnapshotRunner(out, nBuckets = 8, bucketsPerCommit = 2)
+    r.prepareInput(spark, spark.read.parquet(dirA))
+    intercept[SnapshotRunner.InputMismatchException](r.run(spark, spark.read.parquet(dirB)))
+    intercept[SnapshotRunner.InputMismatchException](r.prepareInput(spark, spark.read.parquet(dirB)))
+    assert(!Files.exists(Paths.get(out, "manifest")) && !Files.exists(Paths.get(out, "data")))
+
+    // the same files through a fresh DataFrame are the same input
+    val resumed = new SnapshotRunner(out, nBuckets = 8, bucketsPerCommit = 2)
+    assert(resumed.run(spark, spark.read.parquet(dirA)) == 4)
+    val got = resumed.output(spark).select("url", "md", "cells_json", "error")
+    val want = graft.pipeline.ExtractPipeline.run(spark.read.parquet(dirA))
+      .select("url", "md", "cells_json", "error")
+    assert(got.count() == 60)
+    assert(got.except(want).count() == 0 && want.except(got).count() == 0)
   }
 
   test("crash AFTER data write but BEFORE manifest commit is invisible and idempotent") {
