@@ -30,7 +30,7 @@ object BboxScale {
     case JDouble(d)  => d
     case JBool(b)    => if (b) 1.0 else 0.0
     case JString(s)  => PyStr.pyFloat(s).getOrElse(kernelError(s"could not convert string to float: '$s'"))
-    case other       => kernelError(s"float() argument must be a string or a number, not $other")
+    case other       => kernelError(s"float() argument must be a string or a number, not '${PyJson.pyTypeName(other)}'")
   }
 
   /** CPython `int(x)` over a JSON value (used by `layoutjson2md`'s
@@ -40,7 +40,7 @@ object BboxScale {
     case JDouble(d) => pyIntOfDouble(d)
     case JBool(b)   => if (b) BigInt(1) else BigInt(0)
     case JString(s) => PyStr.pyInt(s).getOrElse(kernelError(s"invalid literal for int(): '$s'"))
-    case other      => kernelError(s"int() argument must be a string or a number, not $other")
+    case other      => kernelError(s"int() argument must be a string or a number, not '${PyJson.pyTypeName(other)}'")
   }
 
   /** `pre_process_bboxes` (layout_utils.py:115-144): original → model-input
@@ -100,7 +100,7 @@ object BboxScale {
           pyIntOfDouble(pyFloatOf(items(2)) / scaleX),
           pyIntOfDouble(pyFloatOf(items(3)) / scaleY))
         obj.updated("bbox", JArray(resized.map(JInt(_))))
-      case other => kernelError(s"cell is not a dict: $other")
+      case other => kernelError(s"cell is not a dict: '${PyJson.pyTypeName(other)}'")
     }
   }
 

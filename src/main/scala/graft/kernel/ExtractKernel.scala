@@ -417,15 +417,14 @@ object ExtractKernel {
   private def errorRow(url: String, pageNo: Int, error: String): ParsedPage =
     ParsedPage(url, pageNo, 0, 0, 0, 0, "", "", "", "", filtered = false, error = error)
 
-  /** A page whose markup nests deeper than the recursive DOM walks'
-    * stack. The error's own message is null, so the row gets this one. */
-  private val NestingOverflow = "StackOverflowError: markup nested too deeply"
-
   /** The kernel's one per-page catch site. Builds the page's layout and
     * hands it to `render`; a garbled page goes to `garbled` as the raw
     * response. A failed page, or a throw while building the page, its
     * layout or the result, becomes `failed(message)`. `page` is by-name
-    * so that decoding a RawPage fails here too. */
+    * so that decoding a RawPage fails here too. No `Error` is caught:
+    * the DOM walks and XY-cut run off explicit stacks and the JSON parse
+    * stops at a fixed depth, so deep input gets its real extraction
+    * whatever the thread's stack size. */
   private def onPage[A](page: => Page, failed: String => A, garbled: String => A)(
       render: HtmlExtract.PageLayout => A): A = {
     // an image payload that does not decode gets its own typed message, as
@@ -444,8 +443,7 @@ object ExtractKernel {
     } catch {
       case NonFatal(e) if decodingImage =>
         failed(s"unsupported_format: image payload (${e.getClass.getSimpleName})")
-      case e: Exception          => failed(s"${e.getClass.getSimpleName}: ${e.getMessage}")
-      case _: StackOverflowError => failed(NestingOverflow)
+      case e: Exception => failed(s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
   }
 

@@ -271,24 +271,55 @@ object HtmlDom {
     (i, name, attrs.toMap, selfClosed)
   }
 
-  /** Normalized visible text of a subtree: entities decoded, whitespace
-    * runs collapsed to single spaces, trimmed; script/style excluded. */
-  def visibleText(node: Node): String = {
-    val sb = new java.lang.StringBuilder
-    def walk(nd: Node): Unit = nd match {
-      case TextNode(t) => sb.append(decodeEntities(t))
+  /** Visits the subtree under `node` in document order, with an explicit
+    * stack, so nesting depth costs heap, not thread stack. `enter` is
+    * called on each element and returns whether to visit its children;
+    * `text` sees each text node; `leave` is called on each entered
+    * element after its children (at once when `enter` returned false). */
+  private[graft] def walk(node: Node, enter: Element => Boolean, text: String => Unit = _ => (),
+      leave: Element => Unit = _ => ()): Unit = {
+    // the entered elements not yet left, and the index of each one's next child
+    val open = mutable.ArrayBuffer.empty[Element]
+    var next = new Array[Int](16)
+    def visit(n: Node): Unit = n match {
+      case TextNode(t) => text(t)
       case e: Element =>
-        if (e.tag != "script" && e.tag != "style" && e.tag != "template" && e.tag != "noscript") {
-          if (e.tag == "br") sb.append(' ')
-          e.children.foreach(walk)
+        if (!enter(e)) leave(e)
+        else {
+          if (open.length == next.length) next = java.util.Arrays.copyOf(next, next.length * 2)
+          next(open.length) = 0
+          open += e
         }
     }
-    walk(node)
+    visit(node)
+    while (open.nonEmpty) {
+      val top = open.length - 1
+      val e = open(top)
+      val i = next(top)
+      if (i == e.children.length) { leave(e); open.remove(top) }
+      else { next(top) = i + 1; visit(e.children(i)) }
+    }
+  }
+
+  /** Elements whose content is not visible text. */
+  val HiddenTags: Set[String] = Set("script", "style", "template", "noscript")
+
+  /** Normalized visible text of a subtree: entities decoded, whitespace
+    * runs collapsed to single spaces, trimmed; [[HiddenTags]] excluded. */
+  def visibleText(node: Node): String = {
+    val sb = new java.lang.StringBuilder
+    walk(node, e => {
+      val visible = !HiddenTags(e.tag)
+      if (visible && e.tag == "br") sb.append(' ')
+      visible
+    }, t => sb.append(decodeEntities(t)))
     collapseWs(sb.toString)
   }
 
+  /** Whitespace as [[collapseWs]] sees it. */
+  @inline def isCollapsedWs(c: Char): Boolean = Character.isWhitespace(c) || c == '\u00a0'
+
   def collapseWs(s: String): String = {
-    @inline def isWs(c: Char) = Character.isWhitespace(c) || c == '\u00a0'
     val n = s.length
     // fast path: detect already-collapsed strings (no leading/trailing ws,
     // no ws run, every ws a plain space) and return the input unchanged \u2014
@@ -298,8 +329,8 @@ object HtmlDom {
     var clean = true
     while (clean && i < n) {
       val c = s.charAt(i)
-      if (isWs(c) &&
-          (c != ' ' || i == 0 || i == n - 1 || isWs(s.charAt(i - 1)))) clean = false
+      if (isCollapsedWs(c) &&
+          (c != ' ' || i == 0 || i == n - 1 || isCollapsedWs(s.charAt(i - 1)))) clean = false
       i += 1
     }
     if (clean) return s
@@ -308,7 +339,7 @@ object HtmlDom {
     i = 0
     while (i < n) {
       val c = s.charAt(i)
-      if (isWs(c)) inWs = true
+      if (isCollapsedWs(c)) inWs = true
       else {
         if (inWs && sb.length() > 0) sb.append(' ')
         inWs = false
@@ -323,13 +354,12 @@ object HtmlDom {
     * numerator of the link-density boilerplate score. */
   def linkTextChars(node: Node): Int = {
     var count = 0
-    def walk(nd: Node, inLink: Boolean): Unit = nd match {
-      case TextNode(t) => if (inLink) count += collapseWs(decodeEntities(t)).length
-      case e: Element =>
-        if (e.tag != "script" && e.tag != "style")
-          e.children.foreach(walk(_, inLink || e.tag == "a"))
-    }
-    walk(node, inLink = false)
+    var links = 0 // open `<a>` elements
+    walk(node, e => {
+      if (e.tag == "a") links += 1
+      e.tag != "script" && e.tag != "style"
+    }, t => if (links > 0) count += collapseWs(decodeEntities(t)).length,
+      e => if (e.tag == "a") links -= 1)
     count
   }
 }

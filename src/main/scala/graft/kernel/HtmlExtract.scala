@@ -96,68 +96,66 @@ object HtmlExtract {
       words < 25
     }
 
-    def walk(node: HtmlDom.Node): Unit = node match {
-      case HtmlDom.TextNode(_) => () // stray text outside blocks: ignored
-      case e: HtmlDom.Element =>
-        e.tag match {
-          case "head" | "script" | "style" | "template" | "noscript" | "title" => ()
-          case "header" | "nav" =>
-            val text = HtmlDom.visibleText(e)
-            if (text.nonEmpty) emit(Categories.PageHeader, text)
-          case "footer" =>
-            val text = HtmlDom.visibleText(e)
-            if (text.nonEmpty) emit(Categories.PageFooter, text)
-          case "aside" => () // boilerplate rail: dropped
-          case t if HeadingTags.contains(t) =>
-            val text = HtmlDom.visibleText(e)
-            if (text.nonEmpty) {
-              if (t == "h1" && !sawH1) { sawH1 = true; emit(Categories.Title, s"# $text") }
-              else {
-                val level = t.charAt(1) - '0'
-                emit(Categories.SectionHeader, ("#" * level) + " " + text)
-              }
+    // stray text outside blocks is ignored; an element that is not a
+    // block of its own is descended into (forgiving)
+    def enter(e: HtmlDom.Element): Boolean = {
+      e.tag match {
+        case "head" | "script" | "style" | "template" | "noscript" | "title" => ()
+        case "header" | "nav" =>
+          val text = HtmlDom.visibleText(e)
+          if (text.nonEmpty) emit(Categories.PageHeader, text)
+        case "footer" =>
+          val text = HtmlDom.visibleText(e)
+          if (text.nonEmpty) emit(Categories.PageFooter, text)
+        case "aside" => () // boilerplate rail: dropped
+        case t if HeadingTags.contains(t) =>
+          val text = HtmlDom.visibleText(e)
+          if (text.nonEmpty) {
+            if (t == "h1" && !sawH1) { sawH1 = true; emit(Categories.Title, s"# $text") }
+            else {
+              val level = t.charAt(1) - '0'
+              emit(Categories.SectionHeader, ("#" * level) + " " + text)
             }
-          case "li" =>
-            val text = HtmlDom.visibleText(e)
-            if (text.nonEmpty) {
-              if (boilerplate(e, text)) () else emit(Categories.ListItem, s"- $text")
-            }
-          case "table" =>
-            out += Block(Categories.Table, Some(serializeTable(e)), tableLines(e))
-          case "img" =>
-            out += Block(Categories.Picture, None, 8)
-          case "figcaption" | "caption" =>
-            val text = HtmlDom.visibleText(e)
-            if (text.nonEmpty) emit(Categories.Caption, text)
-          case "blockquote" =>
-            val text = HtmlDom.visibleText(e)
-            if (text.nonEmpty) emit(Categories.Text, s"> $text")
-          case "pre" =>
-            val raw = rawText(e)
-            if (raw.nonEmpty) emit(Categories.Text, s"```\n$raw\n```")
-          case "p" =>
-            val text = HtmlDom.visibleText(e)
-            if (text.nonEmpty) {
-              if (classAttr(e).contains("footnote")) emit(Categories.Footnote, text)
-              else if (boilerplate(e, text)) ()
-              else if (isDisplayFormula(text)) emit(Categories.Formula, text)
-              else emit(Categories.Text, text)
-            }
-          case _ if isFormulaSpan(e) =>
-            val text = HtmlDom.visibleText(e)
-            if (text.nonEmpty) emit(Categories.Formula, text)
-          case t if ContainerTags.contains(t) =>
-            // leaf div with only inline content → Text cell; else descend
-            if (t == "div" && !hasBlockChild(e)) {
-              val text = HtmlDom.visibleText(e)
-              if (text.nonEmpty && !boilerplate(e, text)) emit(Categories.Text, text)
-            } else e.children.foreach(walk)
-          case _ =>
-            // unknown element: descend (forgiving)
-            e.children.foreach(walk)
-        }
+          }
+        case "li" =>
+          val text = HtmlDom.visibleText(e)
+          if (text.nonEmpty) {
+            if (boilerplate(e, text)) () else emit(Categories.ListItem, s"- $text")
+          }
+        case "table" =>
+          out += Block(Categories.Table, Some(serializeTable(e)), tableLines(e))
+        case "img" =>
+          out += Block(Categories.Picture, None, 8)
+        case "figcaption" | "caption" =>
+          val text = HtmlDom.visibleText(e)
+          if (text.nonEmpty) emit(Categories.Caption, text)
+        case "blockquote" =>
+          val text = HtmlDom.visibleText(e)
+          if (text.nonEmpty) emit(Categories.Text, s"> $text")
+        case "pre" =>
+          val raw = rawText(e)
+          if (raw.nonEmpty) emit(Categories.Text, s"```\n$raw\n```")
+        case "p" =>
+          val text = HtmlDom.visibleText(e)
+          if (text.nonEmpty) {
+            if (classAttr(e).contains("footnote")) emit(Categories.Footnote, text)
+            else if (boilerplate(e, text)) ()
+            else if (isDisplayFormula(text)) emit(Categories.Formula, text)
+            else emit(Categories.Text, text)
+          }
+        case _ if isFormulaSpan(e) =>
+          val text = HtmlDom.visibleText(e)
+          if (text.nonEmpty) emit(Categories.Formula, text)
+        case t if ContainerTags.contains(t) =>
+          // leaf div with only inline content → Text cell; else descend
+          if (t != "div" || hasBlockChild(e)) return true
+          val text = HtmlDom.visibleText(e)
+          if (text.nonEmpty && !boilerplate(e, text)) emit(Categories.Text, text)
+        case _ => return true
+      }
+      false
     }
-    walk(root)
+    HtmlDom.walk(root, enter)
     out.result()
   }
 
@@ -166,22 +164,19 @@ object HtmlExtract {
     "blockquote", "pre", "header", "footer", "nav", "aside", "ul", "ol",
     "div", "section", "article", "main")
 
-  private def hasBlockChild(e: HtmlDom.Element): Boolean =
-    e.children.exists {
-      case c: HtmlDom.Element => BlockTags.contains(c.tag) || hasBlockChild(c)
-      case _                  => false
-    }
+  private def hasBlockChild(e: HtmlDom.Element): Boolean = {
+    var found = false
+    // once one is found, enter no further element
+    HtmlDom.walk(e, c => { found ||= (c ne e) && BlockTags.contains(c.tag); !found })
+    found
+  }
 
   private def isDisplayFormula(text: String): Boolean =
     text.startsWith("$$") && text.endsWith("$$") && text.length > 4
 
   private def rawText(e: HtmlDom.Element): String = {
     val sb = new java.lang.StringBuilder
-    def walk(nd: HtmlDom.Node): Unit = nd match {
-      case HtmlDom.TextNode(t) => sb.append(HtmlDom.decodeEntities(t))
-      case el: HtmlDom.Element => el.children.foreach(walk)
-    }
-    walk(e)
+    HtmlDom.walk(e, _ => true, t => sb.append(HtmlDom.decodeEntities(t)))
     sb.toString.trim
   }
 
@@ -191,33 +186,18 @@ object HtmlExtract {
   def serializeTable(e: HtmlDom.Element): String = {
     val keep = Set("table", "thead", "tbody", "tfoot", "tr", "th", "td")
     val sb = new java.lang.StringBuilder
-    def walk(nd: HtmlDom.Node): Unit = nd match {
-      case HtmlDom.TextNode(_) => ()
-      case el: HtmlDom.Element if keep.contains(el.tag) =>
-        if (el.tag == "td" || el.tag == "th") {
-          sb.append(s"<${el.tag}>")
-          sb.append(HtmlDom.visibleText(el))
-          sb.append(s"</${el.tag}>")
-        } else {
-          sb.append(s"<${el.tag}>")
-          el.children.foreach(walk)
-          sb.append(s"</${el.tag}>")
-        }
-      case el: HtmlDom.Element => el.children.foreach(walk)
-    }
-    walk(e)
+    HtmlDom.walk(e, el => {
+      if (keep.contains(el.tag)) sb.append(s"<${el.tag}>")
+      val cell = el.tag == "td" || el.tag == "th"
+      if (cell) sb.append(HtmlDom.visibleText(el))
+      !cell
+    }, leave = el => if (keep.contains(el.tag)) sb.append(s"</${el.tag}>"))
     sb.toString
   }
 
   private def tableLines(e: HtmlDom.Element): Int = {
     var rows = 0
-    def walk(nd: HtmlDom.Node): Unit = nd match {
-      case el: HtmlDom.Element =>
-        if (el.tag == "tr") rows += 1
-        el.children.foreach(walk)
-      case _ => ()
-    }
-    walk(e)
+    HtmlDom.walk(e, el => { if (el.tag == "tr") rows += 1; true })
     math.max(2, rows + 1)
   }
 

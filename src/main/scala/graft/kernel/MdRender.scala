@@ -148,7 +148,7 @@ object MdRender {
     cells.foreach { cellV =>
       val cell = cellV match {
         case o: JObject => o
-        case other      => kernelError(s"cell is not a dict: $other")
+        case other      => kernelError(s"cell is not a dict: '${PyJson.pyTypeName(other)}'")
       }
       val bbox = cell.get("bbox").getOrElse(kernelError("KeyError: 'bbox'"))
       val coords = bbox match {
@@ -199,13 +199,13 @@ object MdRender {
             case other if pyFalsy(other) && other == JNull =>
               kernelError("'NoneType' object has no attribute 'strip'")
             case other =>
-              kernelError(s"formula text is not a str: $other")
+              kernelError(s"formula text is not a str: '${PyJson.pyTypeName(other)}'")
           }
         } else {
           text match {
             case JString(s)               => items += ((categoryStr, cleanText(s)))
             case other if pyFalsy(other)  => items += ((categoryStr, "")) // clean_text(falsy) → ""
-            case other                    => kernelError(s"text is not a str: $other")
+            case other                    => kernelError(s"text is not a str: '${PyJson.pyTypeName(other)}'")
           }
         }
       }

@@ -271,7 +271,7 @@ object OutputRepair {
       case o: JObject if o.has("text") =>
         o.get("text").get match {
           case JString(s) => s
-          case other      => BboxScale.kernelError(s"join of non-str text: $other")
+          case other      => BboxScale.kernelError(s"join of non-str text: '${PyJson.pyTypeName(other)}'")
         }
     }
     Filtered(texts.mkString("\n\n"))

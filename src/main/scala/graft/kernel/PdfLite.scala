@@ -131,11 +131,10 @@ object PdfLite {
     }
   }
 
-  /** Recursive XY-cut reading order: prefer splitting on the widest
+  /** XY-cut reading order: prefer splitting on the widest
     * vertical gap (column break), then the widest horizontal gap, else
     * sort by (y, x). Deterministic; column-aware (SURVEY.md §7.2 step 5). */
   def readingOrder(blocks: Vector[PdfBlock]): Vector[PdfBlock] = {
-    if (blocks.length <= 1) return blocks
     val MinGap = 8.0f
 
     // widest whitespace gap across the projected intervals → (center, width)
@@ -153,28 +152,33 @@ object PdfLite {
       best
     }
 
-    def cut(bs: Vector[PdfBlock]): Vector[PdfBlock] = {
-      if (bs.length <= 1) return bs
-      // cut on the WIDEST gap of either axis (ties → y): a full-width title
-      // band separates on y first, while a 2-column body with a wide gutter
-      // splits into columns before its rows interleave
+    // cut on the WIDEST gap of either axis (ties → y): a full-width title
+    // band separates on y first, while a 2-column body with a wide gutter
+    // splits into columns before its rows interleave; a set that does not
+    // split in two sorts by (y, x)
+    def cut(bs: Vector[PdfBlock]): Option[(Vector[PdfBlock], Vector[PdfBlock])] = {
+      if (bs.length <= 1) return None
       val yGap = largestGap(bs.map(b => (b.y1, b.y2)))
       val xGap = largestGap(bs.map(b => (b.x1, b.x2)))
-      (yGap, xGap) match {
-        case (Some((yc, yw)), Some((xc, xw))) if yw >= xw =>
-          val (a, b) = bs.partition(bl => (bl.y1 + bl.y2) / 2 < yc)
-          if (a.nonEmpty && b.nonEmpty) return cut(a) ++ cut(b)
-        case (_, Some((xc, _))) =>
-          val (a, b) = bs.partition(bl => (bl.x1 + bl.x2) / 2 < xc)
-          if (a.nonEmpty && b.nonEmpty) return cut(a) ++ cut(b)
-        case (Some((yc, _)), None) =>
-          val (a, b) = bs.partition(bl => (bl.y1 + bl.y2) / 2 < yc)
-          if (a.nonEmpty && b.nonEmpty) return cut(a) ++ cut(b)
-        case (None, None) => ()
+      val (a, b) = (yGap, xGap) match {
+        case (Some((yc, yw)), x) if x.forall(yw >= _._2) =>
+          bs.partition(bl => (bl.y1 + bl.y2) / 2 < yc)
+        case (_, Some((xc, _))) => bs.partition(bl => (bl.x1 + bl.x2) / 2 < xc)
+        case _                  => (bs, Vector.empty)
       }
-      bs.sortBy(b => (b.y1, b.x1))
+      if (a.nonEmpty && b.nonEmpty) Some((a, b)) else None
     }
-    cut(blocks)
+    // `todo` holds the block sets still to order, leftmost first, on the
+    // heap: a page of many nested cuts costs no thread stack
+    @annotation.tailrec
+    def order(todo: List[Vector[PdfBlock]], out: Vector[PdfBlock]): Vector[PdfBlock] = todo match {
+      case Nil => out
+      case bs :: rest => cut(bs) match {
+        case Some((a, b)) => order(a :: b :: rest, out)
+        case None         => order(rest, out ++ bs.sortBy(b => (b.y1, b.x1)))
+      }
+    }
+    order(List(blocks), Vector.empty)
   }
 
   /** One page → layout cells in rendered-pixel space, applying the

@@ -578,9 +578,11 @@ object PdfReal {
       }
     }
     for (sec <- sections("beginbfrange", "endbfrange")) {
-      // entries are either `<lo> <hi> <dst>` or `<lo> <hi> [<d0> <d1> ...]`
+      // entries are either `<lo> <hi> <dst>` or `<lo> <hi> [<d0> <d1> ...]`;
+      // the array repeat is possessive, which java.util.regex runs as a
+      // loop (a backtracking group repeat recurses once per element)
       val Entry = ("<([0-9A-Fa-f]+)>\\s*<([0-9A-Fa-f]+)>\\s*" +
-        "(?:<([0-9A-Fa-f]+)>|\\[((?:\\s*<[0-9A-Fa-f]+>)*)\\s*\\])").r
+        "(?:<([0-9A-Fa-f]+)>|\\[((?:\\s*<[0-9A-Fa-f]+>)*+)\\s*\\])").r
       for (m <- Entry.findAllMatchIn(sec)) {
         val lo = Integer.parseInt(m.group(1), 16)
         val hi = math.min(Integer.parseInt(m.group(2), 16), lo + 65535)

@@ -48,11 +48,22 @@ final class JsonError(msg: String) extends RuntimeException(msg)
 
 object PyJson {
 
+  /** Deepest array/object nesting [[parse]] accepts; deeper input raises
+    * [[JsonError]]. CPython's `json.loads` raises RecursionError near
+    * depth 1,000 and the reference's `except Exception` sends such a
+    * response to the cleaner, as a `JsonError` does here. The limit is
+    * the largest round depth at which a response nested that deep runs
+    * the whole kernel path (parse, post-processing, the cleaner,
+    * `dumps`/`pyRepr`, all recursive over the value) on a 512 KiB thread
+    * stack. Between it and ~1,000 the reference parses a response that
+    * this kernel hands to the cleaner. */
+  private[graft] val MaxDepth = 400
+
   /** Strict parse mirroring `json.loads` default behavior. Throws [[JsonError]]. */
   def parse(s: String): JValue = {
     val p = new Parser(s)
     p.skipWs()
-    val v = p.parseValue()
+    val v = p.parseValue(0)
     p.skipWs()
     if (!p.atEnd) throw new JsonError(s"Extra data: pos ${p.pos}")
     v
@@ -73,11 +84,13 @@ object PyJson {
 
     private def fail(msg: String): Nothing = throw new JsonError(s"$msg: pos $pos")
 
-    def parseValue(): JValue = {
+    /** `depth` = the arrays and objects open around the value. */
+    def parseValue(depth: Int): JValue = {
       if (atEnd) fail("Expecting value")
       s.charAt(pos) match {
-        case '{' => parseObject()
-        case '[' => parseArray()
+        case '{' | '[' if depth == MaxDepth => fail("Nesting too deep")
+        case '{' => parseObject(depth + 1)
+        case '[' => parseArray(depth + 1)
         case '"' => JString(parseString())
         case 't' => expect("true"); JBool(true)
         case 'f' => expect("false"); JBool(false)
@@ -97,7 +110,7 @@ object PyJson {
       pos += word.length
     }
 
-    private def parseObject(): JObject = {
+    private def parseObject(depth: Int): JObject = {
       pos += 1 // '{'
       skipWs()
       var obj = JObject(Vector.empty[(String, JValue)])
@@ -111,7 +124,7 @@ object PyJson {
         if (atEnd || s.charAt(pos) != ':') fail("Expecting ':' delimiter")
         pos += 1
         skipWs()
-        val v = parseValue()
+        val v = parseValue(depth)
         obj = obj.updated(k, v)
         skipWs()
         if (atEnd) fail("Expecting ',' delimiter")
@@ -124,7 +137,7 @@ object PyJson {
       obj
     }
 
-    private def parseArray(): JArray = {
+    private def parseArray(depth: Int): JArray = {
       pos += 1 // '['
       skipWs()
       val buf = Vector.newBuilder[JValue]
@@ -132,7 +145,7 @@ object PyJson {
       var done = false
       while (!done) {
         skipWs()
-        buf += parseValue()
+        buf += parseValue(depth)
         skipWs()
         if (atEnd) fail("Expecting ',' delimiter")
         s.charAt(pos) match {
@@ -292,6 +305,17 @@ object PyJson {
     case JString(s)   => pyStrRepr(s)
     case JArray(a)    => a.map(pyRepr).mkString("[", ", ", "]")
     case JObject(f)   => f.map { case (k, fv) => s"${pyStrRepr(k)}: ${pyRepr(fv)}" }.mkString("{", ", ", "}")
+  }
+
+  /** CPython `type(x).__name__`, the name its error messages quote. */
+  private[kernel] def pyTypeName(v: JValue): String = v match {
+    case JNull      => "NoneType"
+    case _: JBool   => "bool"
+    case _: JInt    => "int"
+    case _: JDouble => "float"
+    case _: JString => "str"
+    case _: JArray  => "list"
+    case _: JObject => "dict"
   }
 
   /** CPython `str(x)`: strings pass through; containers use repr. */

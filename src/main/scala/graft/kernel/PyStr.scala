@@ -77,8 +77,27 @@ object PyStr {
       case "nan"              => return Some(Double.NaN)
       case _                  =>
     }
-    if (!body.matches("(\\d(_?\\d)*)?(\\.(\\d(_?\\d)*)?)?(e[+-]?\\d(_?\\d)*)?") ||
-        !body.exists(_.isDigit)) None
+    // body must be `digits? ('.' digits?)? ('e' [+-]? digits)?` with at
+    // least one digit, where digits = `\d(_?\d)*`; a scan, not a regex
+    // (java.util.regex recurses once per `(_?\d)` repetition)
+    val n = body.length
+    def isDigit(i: Int) = i < n && body.charAt(i) >= '0' && body.charAt(i) <= '9'
+    /** End of the digits run at `from`, or `from` when there is none. */
+    def digits(from: Int): Int = {
+      var i = from
+      while (isDigit(i) || (i > from && i < n && body.charAt(i) == '_' && isDigit(i + 1))) i += 1
+      i
+    }
+    var i = digits(0)
+    var seen = i > 0
+    if (i < n && body.charAt(i) == '.') { val j = digits(i + 1); seen ||= j > i + 1; i = j }
+    if (i < n && body.charAt(i) == 'e') {
+      val from = if (i + 1 < n && (body.charAt(i + 1) == '+' || body.charAt(i + 1) == '-')) i + 2 else i + 1
+      i = digits(from)
+      if (i == from) return None
+      seen = true
+    }
+    if (i != n || !seen) None
     else
       try Some(sign * body.replace("_", "").toDouble)
       catch { case _: NumberFormatException => None }

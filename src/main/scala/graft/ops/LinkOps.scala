@@ -3,6 +3,7 @@ package graft.ops
 import graft.kernel.{ExtractKernel, HtmlDom}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 /** Web-graph operators over the Common-Crawl-style north-rule table:
@@ -84,23 +85,20 @@ object LinkOps {
     * inflated with the kernel's strict decode, then must carry the HTML
     * magic. Never throws — the extraction kernel's contract: a null,
     * non-HTML or corrupt-gzip payload, and markup that breaks the parse or
-    * the walk (including a `StackOverflowError` from the recursive walks
-    * on deeply nested pages, which the kernel turns into an error row),
-    * yields `empty`. */
+    * the walk, yields `empty`. */
   private def onDom[A](payload: Array[Byte], empty: A)(walk: HtmlDom.Element => A): A =
     Option(payload).flatMap(p => ExtractKernel.decodePayload(p).toOption)
       .filter(b => b != null && ExtractKernel.looksLikeHtml(b))
       .fold(empty) { b =>
         try walk(HtmlDom.parse(HtmlDom.decodeBytes(b)))
-        catch { case NonFatal(_) | _: StackOverflowError => empty }
+        catch { case NonFatal(_) => empty }
       }
 
   /** Outlinks of one payload: every `<a href>` in document order, resolved
     * against the document's effective base (`<base href>` honored);
     * non-HTML payloads (PDF, images, garbled bytes) yield none. Delegates
     * to [[artifactsOfDom]] — the anchor table's dst sequence IS the
-    * outlink sequence, so the two can never diverge. Never throws
-    * (markup nested too deeply for the recursive walks yields none). */
+    * outlink sequence, so the two can never diverge. Never throws. */
   def outlinksOf(baseUrl: String, payload: Array[Byte]): Seq[String] =
     onDom(payload, Seq.empty[String])(artifactsOfDom(baseUrl, _)._1.map(_._1))
 
@@ -117,16 +115,8 @@ object LinkOps {
   }
 
   /** Anchor-text cap: anchors can wrap whole nav blocks, and the anchor
-    * table is a corpus-sized relation — bound the string payload. The cut
-    * backs off one char rather than split a surrogate pair. */
+    * table is a corpus-sized relation — bound the string payload. */
   val MaxAnchorChars = 120
-  private def truncAnchor(s: String): String =
-    if (s.length <= MaxAnchorChars) s
-    else {
-      val cut = if (Character.isHighSurrogate(s.charAt(MaxAnchorChars - 1)))
-        MaxAnchorChars - 1 else MaxAnchorChars
-      s.substring(0, cut)
-    }
 
   /** ONE walk over an already-parsed DOM harvesting everything the
     * web-graph family needs from a page: (dst, anchor-text) pairs in
@@ -145,29 +135,73 @@ object LinkOps {
     // §4.2.3 — browsers apply it document-wide, including links that
     // precede it) rebases every reference, so resolution happens after
     // the walk against the effective base
-    val raw = Vector.newBuilder[(String, String)]
+    val raw = mutable.ArrayBuffer.empty[(String, String)] // (href, anchor text)
     val robots = Vector.newBuilder[String]
     var baseHref = ""
-    def walk(n: HtmlDom.Node): Unit = n match {
-      case e: HtmlDom.Element =>
-        if (e.tag == "a") e.attrs.get("href")
-          .foreach(h => raw += ((h, truncAnchor(HtmlDom.visibleText(e)))))
-        else if (e.tag == "base" && baseHref.isEmpty)
-          baseHref = e.attrs.getOrElse("href", "")
-        else if (e.tag == "meta" &&
-            e.attrs.get("name").exists(_.equalsIgnoreCase("robots")))
-          e.attrs.get("content").foreach { c =>
-            c.toLowerCase.split("[,\\s]+").foreach(t => if (t.nonEmpty) robots += t)
-          }
-        e.children.foreach(walk)
-      case _ => ()
-    }
-    walk(root)
+    // anchor text comes from the same walk, so nested (unclosed) anchors
+    // cost no re-walk: text under `hidden` open hidden elements goes to
+    // levels(hidden), and an anchor's text is what its level gained while
+    // it was open
+    val levels = mutable.ArrayBuffer(new TextLevel)
+    var hidden = 0
+    val reading = mutable.ArrayBuffer.empty[(Int, Int)] // (anchor, offset) per open `<a href>`
+    HtmlDom.walk(root, e => {
+      e.tag match {
+        case "a" => e.attrs.get("href").foreach { h =>
+          reading += ((raw.length, levels(hidden).open())); raw += ((h, ""))
+        }
+        case "br" => levels(hidden).append(" ")
+        case "base" if baseHref.isEmpty => baseHref = e.attrs.getOrElse("href", "")
+        case "meta" if e.attrs.get("name").exists(_.equalsIgnoreCase("robots")) =>
+          e.attrs.get("content").foreach(
+            _.toLowerCase.split("[,\\s]+").foreach(t => if (t.nonEmpty) robots += t))
+        case t if HtmlDom.HiddenTags(t) =>
+          hidden += 1
+          if (levels.length == hidden) levels += new TextLevel
+        case _ =>
+      }
+      true
+    }, t => levels(hidden).append(t), e =>
+      // the hidden elements entered inside an anchor are left before it,
+      // so `hidden` is the anchor's level again
+      if (e.tag == "a" && e.attrs.contains("href")) {
+        val (i, from) = reading.remove(reading.length - 1)
+        raw(i) = (raw(i)._1, levels(hidden).close(from))
+      } else if (HtmlDom.HiddenTags(e.tag)) hidden -= 1)
     val effBase = effectiveBase(baseUrl, baseHref)
-    val anchors = raw.result().flatMap { case (h, a) =>
-      resolveUrl(effBase, h).map(d => (d, a))
-    }
+    val anchors = raw.toVector.flatMap { case (h, a) => resolveUrl(effBase, h).map(d => (d, a)) }
     (anchors, robots.result())
+  }
+
+  /** The visible text of one level of [[artifactsOfDom]]'s walk while
+    * anchors read it: entities decoded, whitespace collapsed as text is
+    * appended ([[HtmlDom.collapseWs]] of all of it, with a trailing run
+    * held back until more text follows). */
+  private final class TextLevel {
+    private val sb = new java.lang.StringBuilder
+    private var pendingWs = false
+    private var readers = 0
+
+    /** An anchor starts reading: its offset. */
+    def open(): Int = { readers += 1; sb.length }
+
+    def append(raw: String): Unit = if (readers > 0) HtmlDom.decodeEntities(raw).foreach { c =>
+      if (HtmlDom.isCollapsedWs(c)) pendingWs = true
+      else { if (pendingWs && sb.length > 0) sb.append(' '); pendingWs = false; sb.append(c) }
+    }
+
+    /** The anchor that opened at `from` stops reading: its text, capped at
+      * [[MaxAnchorChars]]. A space at `from` began the text or preceded
+      * it; the cap backs off one char rather than split a surrogate pair. */
+    def close(from: Int): String = {
+      val start = if (from < sb.length && sb.charAt(from) == ' ') from + 1 else from
+      var end = math.min(sb.length, start + MaxAnchorChars)
+      if (end < sb.length && Character.isHighSurrogate(sb.charAt(end - 1))) end -= 1
+      val text = sb.substring(start, end)
+      readers -= 1
+      if (readers == 0) { sb.setLength(0); pendingWs = false }
+      text
+    }
   }
 
   /** The document-wide resolution base: the first `<base href>` resolved
@@ -937,22 +971,19 @@ object LinkOps {
   def pageMetaOfDom(baseUrl: String, root: HtmlDom.Element): (String, String, String) = {
     var title = ""; var desc = ""; var canonHref: Option[String] = None
     var baseHref = ""
-    def walk(n: HtmlDom.Node): Unit = n match {
-      case e: HtmlDom.Element =>
-        if (e.tag == "title" && title.isEmpty)
-          title = HtmlDom.visibleText(e)
-        else if (e.tag == "base" && baseHref.isEmpty)
-          baseHref = e.attrs.getOrElse("href", "")
-        else if (e.tag == "meta" && desc.isEmpty &&
-            e.attrs.get("name").exists(_.equalsIgnoreCase("description")))
-          desc = HtmlDom.collapseWs(e.attrs.getOrElse("content", ""))
-        else if (e.tag == "link" && canonHref.isEmpty &&
-            e.attrs.get("rel").exists(_.toLowerCase.split("\\s+").contains("canonical")))
-          canonHref = Some(e.attrs.getOrElse("href", ""))
-        e.children.foreach(walk)
-      case _ => ()
-    }
-    walk(root)
+    HtmlDom.walk(root, e => {
+      if (e.tag == "title" && title.isEmpty)
+        title = HtmlDom.visibleText(e)
+      else if (e.tag == "base" && baseHref.isEmpty)
+        baseHref = e.attrs.getOrElse("href", "")
+      else if (e.tag == "meta" && desc.isEmpty &&
+          e.attrs.get("name").exists(_.equalsIgnoreCase("description")))
+        desc = HtmlDom.collapseWs(e.attrs.getOrElse("content", ""))
+      else if (e.tag == "link" && canonHref.isEmpty &&
+          e.attrs.get("rel").exists(_.toLowerCase.split("\\s+").contains("canonical")))
+        canonHref = Some(e.attrs.getOrElse("href", ""))
+      true
+    })
     // canonical resolves against the document-wide <base href> too (the
     // same first-base rule as artifactsOfDom)
     val canon = canonHref
@@ -1038,42 +1069,32 @@ object LinkOps {
     * n_chars (visible chars), n_link_chars (visible chars under `<a>`
     * descendants, each anchor subtree counted once), n_words (tokens of
     * the collapsed text) — so the downstream classification is
-    * engine-exact. One post-order walk; text outside any block (rare,
-    * stray body text) is out of scope, the jusText convention. */
+    * engine-exact. One walk; a leaf block is emitted as it is left. Text
+    * outside any block (rare, stray body text) is out of scope, the
+    * jusText convention. */
   def blocksOfDom(root: HtmlDom.Element): Vector[(String, String, Long, Long, Long)] = {
     val out = Vector.newBuilder[(String, String, Long, Long, Long)]
     def linkCharsOf(e: HtmlDom.Element): Long = {
       var total = 0L
-      def lw(n: HtmlDom.Node): Unit = n match {
-        case el: HtmlDom.Element =>
-          if (el.tag == "a") total += HtmlDom.visibleText(el).length
-          else el.children.foreach(lw)
-        case _ => ()
+      HtmlDom.walk(e, el => {
+        if (el.tag == "a") total += HtmlDom.visibleText(el).length
+        el.tag != "a"
+      })
+      total
+    }
+    // the block element entered last: one that is still `last` when it is
+    // left has no block-tag descendant
+    var last: HtmlDom.Element = null
+    HtmlDom.walk(root, e => {
+      if (BlockTags.contains(e.tag)) last = e
+      !HtmlDom.HiddenTags(e.tag)
+    }, leave = e => if (e eq last) {
+      val text = HtmlDom.visibleText(e)
+      if (text.nonEmpty) {
+        val words = 1L + text.count(_ == ' ')
+        out += ((e.tag, text, text.length.toLong, linkCharsOf(e), words))
       }
-      lw(e); total
-    }
-    // returns true iff the subtree contains a block-tag element
-    def walk(n: HtmlDom.Node): Boolean = n match {
-      case e: HtmlDom.Element =>
-        if (e.tag == "script" || e.tag == "style" ||
-            e.tag == "template" || e.tag == "noscript") false
-        else {
-          // map-then-reduce (NOT exists) so every child is walked — leaf
-          // blocks to the right of an earlier block must still emit
-          val childHas = e.children.map(walk).foldLeft(false)(_ || _)
-          val isBlock = BlockTags.contains(e.tag)
-          if (isBlock && !childHas) {
-            val text = HtmlDom.visibleText(e)
-            if (text.nonEmpty) {
-              val words = 1L + text.count(_ == ' ')
-              out += ((e.tag, text, text.length.toLong, linkCharsOf(e), words))
-            }
-          }
-          childHas || isBlock
-        }
-      case _ => false
-    }
-    walk(root)
+    })
     out.result()
   }
 
@@ -1211,19 +1232,16 @@ object LinkOps {
     onDom(payload, Seq.empty[(String, String)]) { root =>
       val raw = Vector.newBuilder[(String, String)]
       var baseHref = ""
-      def walk(n: HtmlDom.Node): Unit = n match {
-        case e: HtmlDom.Element =>
-          if (e.tag == "base" && baseHref.isEmpty)
-            baseHref = e.attrs.getOrElse("href", "")
-          else if (e.tag == "link" &&
-              e.attrs.get("rel").exists(_.toLowerCase.split("\\s+").contains("alternate")) &&
-              e.attrs.contains("hreflang"))
-            raw += ((e.attrs("hreflang").trim.toLowerCase,
-              e.attrs.getOrElse("href", "")))
-          e.children.foreach(walk)
-        case _ => ()
-      }
-      walk(root)
+      HtmlDom.walk(root, e => {
+        if (e.tag == "base" && baseHref.isEmpty)
+          baseHref = e.attrs.getOrElse("href", "")
+        else if (e.tag == "link" &&
+            e.attrs.get("rel").exists(_.toLowerCase.split("\\s+").contains("alternate")) &&
+            e.attrs.contains("hreflang"))
+          raw += ((e.attrs("hreflang").trim.toLowerCase,
+            e.attrs.getOrElse("href", "")))
+        true
+      })
       val eff = effectiveBase(baseUrl, baseHref)
       val seen = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
       raw.result().foreach { case (l, h) =>
@@ -1285,6 +1303,21 @@ object LinkOps {
         coalesce(col("langs"), lit("")).as("langs"))
   }
 
+  /** `s` trimmed, read as an ISO-8601 datetime with offset (Atom, full
+    * W3C datetime), else by `other`, else the epoch-0 sentinel. */
+  private def timestampOf(s: String, other: String => java.time.Instant): java.sql.Timestamp = {
+    val t = s.trim
+    java.sql.Timestamp.from(
+      try java.time.OffsetDateTime.parse(t).toInstant
+      catch { case _: Exception => try other(t) catch { case _: Exception => java.time.Instant.EPOCH } })
+  }
+
+  /** Visible text of the first `tag` child of `e`; '' when none. */
+  private def childText(e: HtmlDom.Element, tag: String): String =
+    e.children.collectFirst {
+      case c: HtmlDom.Element if c.tag == tag => HtmlDom.visibleText(c)
+    }.getOrElse("")
+
   /** Parse a sitemap.xml body (sitemaps.org protocol): `<urlset>` page
     * entries and `<sitemapindex>` child-sitemap references, each as
     * (loc, lastmod, isIndex). loc is the normalized visible text of the
@@ -1296,34 +1329,19 @@ object LinkOps {
     * discipline). The shared lenient DOM parser handles the XML prolog
     * and unknown tags; junk bodies yield no entries. Never throws. */
   def parseSitemap(xml: String): Seq[(String, java.sql.Timestamp, Boolean)] = {
-    def parseLastmod(s: String): java.sql.Timestamp = {
-      val t = s.trim
-      val instant =
-        try java.time.OffsetDateTime.parse(t).toInstant
-        catch {
-          case _: Exception =>
-            try java.time.LocalDate.parse(t)
-              .atStartOfDay(java.time.ZoneOffset.UTC).toInstant
-            catch { case _: Exception => java.time.Instant.EPOCH }
-        }
-      java.sql.Timestamp.from(instant)
-    }
-    def childText(e: HtmlDom.Element, tag: String): String =
-      e.children.collectFirst {
-        case c: HtmlDom.Element if c.tag == tag => HtmlDom.visibleText(c)
-      }.getOrElse("")
+    def parseLastmod(s: String) = timestampOf(s,
+      java.time.LocalDate.parse(_).atStartOfDay(java.time.ZoneOffset.UTC).toInstant)
     val out = Vector.newBuilder[(String, java.sql.Timestamp, Boolean)]
-    def walk(n: HtmlDom.Node): Unit = n match {
-      case e: HtmlDom.Element =>
-        if (e.tag == "url" || e.tag == "sitemap") {
-          val loc = childText(e, "loc")
-          if (loc.startsWith("http://") || loc.startsWith("https://"))
-            out += ((loc, parseLastmod(childText(e, "lastmod")), e.tag == "sitemap"))
-        } else e.children.foreach(walk)
-      case _ => ()
-    }
-    try walk(HtmlDom.parse(xml))
-    catch { case NonFatal(_) | _: StackOverflowError => () }
+    try HtmlDom.walk(HtmlDom.parse(xml), e => {
+      val entry = e.tag == "url" || e.tag == "sitemap"
+      if (entry) {
+        val loc = childText(e, "loc")
+        if (loc.startsWith("http://") || loc.startsWith("https://"))
+          out += ((loc, parseLastmod(childText(e, "lastmod")), e.tag == "sitemap"))
+      }
+      !entry
+    })
+    catch { case NonFatal(_) => () }
     out.result()
   }
 
@@ -1343,44 +1361,26 @@ object LinkOps {
     * `link` → `feedlink` before the parse — attributes (Atom href)
     * survive the rename untouched. */
   def parseFeed(xml: String): Seq[(String, String, java.sql.Timestamp)] = {
-    def ts(s: String): java.sql.Timestamp = {
-      val t = s.trim
-      val instant =
-        try java.time.OffsetDateTime.parse(t).toInstant // Atom ISO-8601
-        catch {
-          case _: Exception =>
-            try java.time.ZonedDateTime.parse(t,
-              java.time.format.DateTimeFormatter.RFC_1123_DATE_TIME).toInstant
-            catch { case _: Exception => java.time.Instant.EPOCH }
-        }
-      java.sql.Timestamp.from(instant)
-    }
-    def childText(e: HtmlDom.Element, tag: String): String =
-      e.children.collectFirst {
-        case c: HtmlDom.Element if c.tag == tag => HtmlDom.visibleText(c)
-      }.getOrElse("")
+    def ts(s: String) = timestampOf(s, java.time.ZonedDateTime.parse(_,
+      java.time.format.DateTimeFormatter.RFC_1123_DATE_TIME).toInstant)
     def childLinkHref(e: HtmlDom.Element): String =
       e.children.collectFirst {
         case c: HtmlDom.Element if c.tag == "feedlink" && c.attrs.contains("href") =>
           c.attrs("href")
       }.getOrElse("")
     val out = Vector.newBuilder[(String, String, java.sql.Timestamp)]
-    def walk(n: HtmlDom.Node): Unit = n match {
-      case e: HtmlDom.Element =>
-        if (e.tag == "item") {
-          val loc = childText(e, "feedlink").trim
-          if (loc.startsWith("http://") || loc.startsWith("https://"))
-            out += ((loc, childText(e, "title"), ts(childText(e, "pubdate"))))
-        } else if (e.tag == "entry") {
-          val loc = childLinkHref(e).trim
-          if (loc.startsWith("http://") || loc.startsWith("https://"))
-            out += ((loc, childText(e, "title"), ts(childText(e, "updated"))))
-        } else e.children.foreach(walk)
-      case _ => ()
-    }
     val rewritten = xml.replaceAll("(?i)<(/?)link([\\s>/])", "<$1feedlink$2")
-    try walk(HtmlDom.parse(rewritten))
-    catch { case NonFatal(_) | _: StackOverflowError => () }
+    try HtmlDom.walk(HtmlDom.parse(rewritten), e => {
+      val (loc, date) = e.tag match {
+        case "item"  => (childText(e, "feedlink").trim, "pubdate")
+        case "entry" => (childLinkHref(e).trim, "updated")
+        case _       => ("", "")
+      }
+      if (loc.startsWith("http://") || loc.startsWith("https://"))
+        out += ((loc, childText(e, "title"), ts(childText(e, date))))
+      e.tag != "item" && e.tag != "entry"
+    })
+    catch { case NonFatal(_) => () }
     out.result()
   }
 

@@ -143,4 +143,113 @@ class PropertySpec extends AnyFunSuite {
       assert(whole == recombined)
     }
   }
+
+  /** XY-cut as it was written before it ran off an explicit stack: the
+    * reference the iterative `PdfLite.readingOrder` must equal. */
+  private def recursiveReadingOrder(blocks: Vector[PdfLite.PdfBlock]): Vector[PdfLite.PdfBlock] = {
+    if (blocks.length <= 1) return blocks
+    val MinGap = 8.0f
+    def largestGap(ivs: Vector[(Float, Float)]): Option[(Float, Float)] = {
+      val sorted = ivs.sortBy(_._1)
+      var maxEnd = sorted.head._2
+      var best: Option[(Float, Float)] = None
+      sorted.tail.foreach { case (s, e) =>
+        if (s - maxEnd >= MinGap) {
+          val width = s - maxEnd
+          if (best.forall(_._2 < width)) best = Some(((s + maxEnd) / 2, width))
+        }
+        maxEnd = math.max(maxEnd, e)
+      }
+      best
+    }
+    def cut(bs: Vector[PdfLite.PdfBlock]): Vector[PdfLite.PdfBlock] = {
+      if (bs.length <= 1) return bs
+      val yGap = largestGap(bs.map(b => (b.y1, b.y2)))
+      val xGap = largestGap(bs.map(b => (b.x1, b.x2)))
+      (yGap, xGap) match {
+        case (Some((yc, yw)), Some((xc, xw))) if yw >= xw =>
+          val (a, b) = bs.partition(bl => (bl.y1 + bl.y2) / 2 < yc)
+          if (a.nonEmpty && b.nonEmpty) return cut(a) ++ cut(b)
+        case (_, Some((xc, _))) =>
+          val (a, b) = bs.partition(bl => (bl.x1 + bl.x2) / 2 < xc)
+          if (a.nonEmpty && b.nonEmpty) return cut(a) ++ cut(b)
+        case (Some((yc, _)), None) =>
+          val (a, b) = bs.partition(bl => (bl.y1 + bl.y2) / 2 < yc)
+          if (a.nonEmpty && b.nonEmpty) return cut(a) ++ cut(b)
+        case (None, None) => ()
+      }
+      bs.sortBy(b => (b.y1, b.x1))
+    }
+    cut(blocks)
+  }
+
+  test("PdfLite.readingOrder equals the recursive XY-cut on random block sets") {
+    // coordinates on a coarse grid, so gaps of both axes open and tie
+    // (equal widths, equal starts) often
+    val block: Gen[(Int, Int, Int, Int)] = for {
+      x <- Gen.choose(0, 40); y <- Gen.choose(0, 60)
+      w <- Gen.choose(1, 12); h <- Gen.choose(1, 4)
+    } yield (x, y, w, h)
+    val pages = for {
+      n <- Gen.choose(0, 200)
+      step <- Gen.oneOf(4f, 8f, 10f, 25f)
+      bs <- Gen.listOfN(n, block)
+    } yield bs.zipWithIndex.toVector.map { case ((x, y, w, h), i) =>
+      PdfLite.PdfBlock(x * step, y * step, (x + w) * step, (y + h) * step, "Text", s"b$i")
+    }
+    forAll(pages, n = 300) { bs =>
+      assert(PdfLite.readingOrder(bs) == recursiveReadingOrder(bs))
+    }
+  }
+
+  test("PyStr.pyFloat's scan accepts what the float grammar regex accepts") {
+    // the regex it replaced, as the reference
+    def viaRegex(raw: String): Option[Double] = {
+      val s = PyStr.strip(raw).toLowerCase
+      val (sign, body) =
+        if (s.startsWith("+")) (1.0, s.substring(1))
+        else if (s.startsWith("-")) (-1.0, s.substring(1))
+        else (1.0, s)
+      if (s.isEmpty) None
+      else if (body == "inf" || body == "infinity") Some(sign * Double.PositiveInfinity)
+      else if (body == "nan") Some(Double.NaN)
+      else if (!body.matches("(\\d(_?\\d)*)?(\\.(\\d(_?\\d)*)?)?(e[+-]?\\d(_?\\d)*)?") ||
+          !body.exists(_.isDigit)) None
+      else try Some(sign * body.replace("_", "").toDouble)
+      catch { case _: NumberFormatException => None }
+    }
+    val strs = Gen.choose(0, 9).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf("0", "1", "9", "_", "_", ".", "e", "E", "+", "-", " ", "x", "d", "\u0663"))
+        .map(_.mkString))
+    forAll(strs, n = 5000) { s =>
+      assert(PyStr.pyFloat(s).map(_.toString) == viaRegex(s).map(_.toString), s)
+    }
+  }
+
+  test("LinkOps anchor texts equal each <a href>'s capped visibleText on random markup") {
+    import graft.ops.LinkOps
+    val tags = Seq("a", "a", "a", "b", "p", "div", "span", "noscript", "template", "script", "style", "br", "title")
+    val words = Seq("t", "word", "&amp;", "&nbsp;", " ", "  \n ", "\u00a0", "\ud83d\ude00", "z" * 50, "&#x41;")
+    def markup(depth: Int): Gen[String] =
+      if (depth == 0) Gen.listOfN(3, Gen.oneOf(words)).map(_.mkString)
+      else Gen.choose(0, 4).flatMap(n => Gen.listOfN(n, Gen.frequency(
+        2 -> Gen.oneOf(words),
+        3 -> (for {
+          t <- Gen.oneOf(tags); inner <- markup(depth - 1); close <- Gen.oneOf(true, true, false)
+        } yield s"""<$t href="https://h.example/$t">$inner""" + (if (close) s"</$t>" else ""))))
+        .map(_.mkString))
+    def cap(s: String): String =
+      if (s.length <= LinkOps.MaxAnchorChars) s
+      else s.substring(0, if (Character.isHighSurrogate(s.charAt(LinkOps.MaxAnchorChars - 1)))
+        LinkOps.MaxAnchorChars - 1 else LinkOps.MaxAnchorChars)
+    forAll(markup(5), n = 1000) { html =>
+      val root = HtmlDom.parse("<html><body>" + html + "</body></html>")
+      val expected = Vector.newBuilder[String]
+      HtmlDom.walk(root, e => {
+        if (e.tag == "a") expected += cap(HtmlDom.visibleText(e))
+        true
+      })
+      assert(LinkOps.artifactsOfDom("https://p.example/", root)._1.map(_._2) == expected.result(), html)
+    }
+  }
 }
