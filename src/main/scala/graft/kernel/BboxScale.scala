@@ -14,13 +14,16 @@ object BboxScale {
 
   def kernelError(msg: String): Nothing = throw new KernelError(msg)
 
+  /** 2^53: below it in magnitude, `int(x)` of a double is `x.toLong`. */
+  private[kernel] val ExactLong = 9.007199254740992e15
+
   /** CPython `int(x)` over a double: truncate toward zero; inf/nan raise. */
   def pyIntOfDouble(v: Double): BigInt = {
     if (v.isNaN) kernelError("cannot convert float NaN to integer")
     if (v.isInfinite) kernelError("cannot convert float infinity to integer")
     // Long truncation is exact below 2^53 (every double there is integral-
     // representable); BigDecimal only for the astronomical tail
-    if (v > -9.007199254740992e15 && v < 9.007199254740992e15) BigInt(v.toLong)
+    if (v > -ExactLong && v < ExactLong) BigInt(v.toLong)
     else new java.math.BigDecimal(v).toBigInteger
   }
 

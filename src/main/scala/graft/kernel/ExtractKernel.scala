@@ -25,6 +25,18 @@ import scala.util.control.NonFatal
   * Everything after the response string is byte-identical to the reference
   * (golden-tested); the classifier branch defines the response contents.
   * Designed to run inside `mapPartitions` — stateless, allocation-light.
+  *
+  * Two tails share that contract. The reference-faithful one runs over
+  * JSON values, function for function as the reference does:
+  * [[classifierCells]] / [[classifierResponse]], `BboxScale.postProcessCells`,
+  * `PyJson.dumps`, `MdRender.renderSegments` + `segmentsToMd`, [[cellTexts]],
+  * and `OutputRepair` for responses that need repair. The goldens, the
+  * garbled-response branch and the per-layer tracer call those. The
+  * layout modes' pages of trusted cells (our classifier's own output) take
+  * [[trustedTail]] instead: the same composition specialized to
+  * integer bboxes and string fields, one pass from layout to output
+  * strings, falling back to the JSON-value tail on any page it does not
+  * cover.
   */
 object ExtractKernel {
 
@@ -469,8 +481,143 @@ object ExtractKernel {
         // dumps→parse of the full cell array (hot-path allocation;
         // equivalence pinned by ExtractKernelSpec). Repair-needing
         // responses (garbled payloads) still take the string path.
-        val cells = classifierCells(layout, m, iw, ih)
-        finishLayoutTrusted(url, pageNo, m, cells, layout.width, layout.height, iw, ih, layout.raster)
+        trustedTail(url, pageNo, m, layout, iw, ih).getOrElse {
+          val cells = classifierCells(layout, m, iw, ih)
+          finishLayoutTrusted(url, pageNo, m, cells, layout.width, layout.height, iw, ih, layout.raster)
+        }
+    }
+  }
+
+  /** The trusted tail: [[classifierCells]] → `post_process_cells` →
+    * `json.dumps` / `layoutjson2md` ×2 / [[cellTexts]] in one pass over a
+    * layout of trusted cells, straight into the four output strings.
+    * Each cell is read positionally: `bbox` (four `JInt`s), `category`
+    * (a `JString`), then an optional `text` (a `JString`). Coordinates go
+    * to input space and back in `Long`/`Double` with CPython's `int()`
+    * truncation, all before any cell renders, as the reference rescales
+    * every cell before its markdown pass.
+    *
+    * `None` declines the page, which then takes the JSON-value path
+    * ([[classifierCells]] → [[finishLayoutTrusted]]) that defines the
+    * result: an empty layout, any other cell shape, a coordinate that is
+    * non-finite or at least 2^53 in magnitude in any of the three spaces,
+    * or a [[BboxScale.KernelError]] / [[Geometry.AspectRatioError]] (a
+    * formula that raises, an input aspect ratio past 200). Those pages
+    * keep their error rows, repair fallbacks and big-integer output
+    * exactly. Row-equal to that path on every page it accepts
+    * (PropertySpec). */
+  private[kernel] def trustedTail(url: String, pageNo: Int, mode: PromptMode,
+      layout: HtmlExtract.PageLayout, inputW: Long, inputH: Long): Option[ParsedPage] = {
+    import BboxScale.ExactLong
+    val cells = layout.cells
+    val n = cells.length
+    if (n == 0) return None
+    val withText = mode != PromptMode.LayoutOnly
+    val categories = new Array[String](n)
+    val texts = new Array[String](n) // null: no text key, or LayoutOnly
+    val coords = new Array[Long](4 * n)
+    var hasHf = false
+    var textChars = 0L
+    try {
+      // classifierCells' scale into input space, then postProcessCells'
+      // scale (over the re-smart-resized input dims) back to the page
+      val (postH, postW) = Geometry.smartResize(inputH, inputW)
+      val inX = inputW.toDouble / layout.width
+      val inY = inputH.toDouble / layout.height
+      val outX = postW.toDouble / layout.width
+      val outY = postH.toDouble / layout.height
+      var i = 0
+      while (i < n) {
+        val fields = cells(i).fields
+        if (fields.length < 2 || fields.length > 3) return None
+        val bbox = fields(0) match {
+          case ("bbox", JArray(b)) if b.length == 4 => b
+          case _                                    => return None
+        }
+        var k = 0
+        while (k < 4) {
+          val v = bbox(k) match {
+            case JInt(b) if b.isValidLong => b.toLong
+            case _                        => return None
+          }
+          if (!(v > -ExactLong && v < ExactLong)) return None
+          val even = (k & 1) == 0
+          val in = v.toDouble * (if (even) inX else inY)
+          if (!(in > -ExactLong && in < ExactLong)) return None
+          val out = in.toLong.toDouble / (if (even) outX else outY)
+          if (!(out > -ExactLong && out < ExactLong)) return None
+          coords(4 * i + k) = out.toLong
+          k += 1
+        }
+        fields(1) match {
+          case ("category", JString(c)) =>
+            categories(i) = c
+            if (withText && MdRender.PageHf.contains(c)) hasHf = true
+          case _ => return None
+        }
+        if (fields.length == 3) fields(2) match {
+          case ("text", JString(t)) =>
+            if (withText) { texts(i) = t; textChars += t.length }
+          case _ => return None
+        }
+        i += 1
+      }
+
+      val cellsJson = new java.lang.StringBuilder((64L * n + textChars + textChars / 8).toInt)
+      val md = new java.lang.StringBuilder(if (withText) (8L * n + textChars).toInt else 0)
+      // md_nohf is md unless some cell is a page header or footer
+      val mdNohf = if (hasHf) new java.lang.StringBuilder((8L * n + textChars).toInt) else md
+      val extracted = new java.lang.StringBuilder(if (withText) textChars.toInt else 0)
+      lazy val pictures = new MdRender.PictureUris(layout.raster)
+      var firstNohf = true
+      var firstExtracted = true
+      cellsJson.append('[')
+      i = 0
+      while (i < n) {
+        val c = 4 * i
+        val category = categories(i)
+        val text = texts(i)
+        if (i > 0) cellsJson.append(", ")
+        cellsJson.append("{\"bbox\": [").append(coords(c)).append(", ").append(coords(c + 1))
+          .append(", ").append(coords(c + 2)).append(", ").append(coords(c + 3))
+          .append("], \"category\": ")
+        PyJson.writeString(category, cellsJson)
+        if (text != null) {
+          cellsJson.append(", \"text\": ")
+          PyJson.writeString(text, cellsJson)
+        }
+        cellsJson.append('}')
+        if (withText) {
+          val segment = category match {
+            case Categories.Picture =>
+              "![](" + pictures.uri(coords(c), coords(c + 1), coords(c + 2), coords(c + 3)) + ")"
+            case Categories.Formula => MdRender.formulaInMarkdown(if (text == null) "" else text)
+            case _                  => MdRender.cleanText(text)
+          }
+          if (i > 0) md.append("\n\n")
+          md.append(segment)
+          val hf = hasHf && MdRender.PageHf.contains(category)
+          if (hasHf && !hf) {
+            if (!firstNohf) mdNohf.append("\n\n")
+            mdNohf.append(segment)
+            firstNohf = false
+          }
+          if (text != null && !hf) {
+            if (!firstExtracted) extracted.append("\n\n")
+            extracted.append(text)
+            firstExtracted = false
+          }
+        }
+        i += 1
+      }
+      cellsJson.append(']')
+      val mdString = md.toString
+      Some(ParsedPage(url, pageNo, inputH.toInt, inputW.toInt,
+        layout.height.toInt, layout.width.toInt, cellsJson.toString, mdString,
+        if (hasHf) mdNohf.toString else mdString, extracted.toString,
+        filtered = false, error = ""))
+    } catch {
+      case _: BboxScale.KernelError | _: Geometry.AspectRatioError => None
     }
   }
 
@@ -522,7 +669,7 @@ object ExtractKernel {
   }
 
   /** Layout-mode post-processing + rendering (parser.py:175-234). */
-  private def finishLayout(
+  private[kernel] def finishLayout(
       url: String,
       pageNo: Int,
       mode: PromptMode,

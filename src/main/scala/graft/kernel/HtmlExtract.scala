@@ -212,11 +212,12 @@ object HtmlExtract {
         case Categories.Picture  => (Margin + 100, PageWidth - Margin - 100)
         case _                   => (Margin, PageWidth - Margin)
       }
-      var cell = JObject(
-        "bbox" -> JArray(Vector(JInt(x1), JInt(y), JInt(x2), JInt(y + h))),
-        "category" -> JString(b.category))
-      b.text.foreach(t => cell = cell.updated("text", JString(t)))
-      cells += cell
+      val bbox = "bbox" -> JArray(Vector(JInt(x1), JInt(y), JInt(x2), JInt(y + h)))
+      val category = "category" -> JString(b.category)
+      cells += JObject(b.text match {
+        case Some(t) => Vector(bbox, category, "text" -> JString(t))
+        case None    => Vector(bbox, category)
+      })
       y += h + BlockGap
     }
     val height = math.max(Margin * 2 + LineHeight, y - BlockGap + Margin)

@@ -103,6 +103,56 @@ object MdRender {
     s"data:image/png;base64,$b64"
   }
 
+  /** The Picture-cell embeds of one page (format_transformer.py:169-172).
+    * The page raster is decoded at most once, and only if a Picture cell
+    * actually renders: pages without Picture cells never pay the decode.
+    * `decodePage` is the direct-path page decode; tests pass a counting
+    * wrapper to pin the at-most-once decode. */
+  private[kernel] final class PictureUris(raster: Option[scala.collection.immutable.ArraySeq[Byte]],
+      decodePage: Array[Byte] => Option[Raster.RgbRows] = Raster.decodeRgb) {
+    private lazy val rasterBytes: Option[Array[Byte]] = raster.map(_.toArray)
+    private lazy val rasterHeader: Option[(Int, Int, Boolean)] =
+      rasterBytes.flatMap(b => try Raster.headerInfo(b) catch { case _: Exception => None })
+    // direct PNG crop path first; the ImageIO decode below runs only for
+    // rasters (or boxes) the direct path declines
+    private lazy val pageRows: Option[Raster.RgbRows] = rasterBytes.flatMap(decodePage)
+    private lazy val pageImg: Option[java.awt.image.BufferedImage] =
+      rasterBytes.flatMap { b =>
+        try Some(Raster.decode(b)) catch { case _: Exception => None }
+      }
+    private def rasterMime(b: Array[Byte]): String =
+      if ((b(0) & 0xff) == 0x89) "image/png" else "image/jpeg"
+
+    /** The data URI of the crop `(x1, y1, x2, y2)`. A raster-backed page
+      * gets a real crop as a base64 PNG embed, the reference's
+      * image.crop + PILimage_to_base64; raster-less pages (all HTML — a
+      * DOM pipeline has no rasterizer) keep the deterministic placeholder
+      * URI, same data: scheme.
+      *
+      * FULL-BLEED fast path: a crop of exactly [0,0,w,h] over an
+      * alpha-free raster has decoded pixels identical to the source
+      * image, so the source bytes embed directly (correct mime) with NO
+      * decode/re-encode — the container differs from the reference's
+      * always-PNG re-encode (documented deviation; the decoded-pixel
+      * contract is what the golden spec pins). Partial crops and
+      * alpha-capable sources take the decode+crop path. */
+    def uri(x1: BigInt, y1: BigInt, x2: BigInt, y2: BigInt): String = {
+      val fullBleed = rasterHeader.exists { case (w, h, opaque) =>
+        opaque && x1 == 0 && y1 == 0 && x2 == BigInt(w) && y2 == BigInt(h)
+      }
+      if (fullBleed) {
+        val b = rasterBytes.get
+        s"data:${rasterMime(b)};base64," + java.util.Base64.getEncoder.encodeToString(b)
+      } else pageRows.flatMap(_.cropDataUri(x1.toInt, y1.toInt, x2.toInt, y2.toInt))
+        .getOrElse(pageImg match {
+          case Some(img) =>
+            try Raster.pngDataUri(Raster.pilCrop(img, x1.toInt, y1.toInt, x2.toInt, y2.toInt))
+            catch { case _: Exception => picturePlaceholder(x1, y1, x2, y2) }
+          case None => picturePlaceholder(x1, y1, x2, y2)
+        })
+    }
+  }
+
   /** Render every cell once; both md variants derive from the segments
     * (`md` = all joined, `md_nohf` = non-header/footer joined) — halves the
     * render work vs calling [[layoutJsonToMd]] twice, byte-identically
@@ -125,25 +175,11 @@ object MdRender {
     // order), so the flag goes to the renderer, not to segmentsToMd
     segmentsToMd(layoutJsonToMdImpl(cells, textKey, noPageHf, raster), noPageHf = false)
 
-  /** `decodePage` is the direct-path page decode; tests pass a counting
-    * wrapper to pin that it runs at most once per page. */
+  /** `decodePage`: see [[PictureUris]]. */
   private[kernel] def layoutJsonToMdImpl(cells: Vector[JValue], textKey: String, noPageHf: Boolean,
       raster: Option[scala.collection.immutable.ArraySeq[Byte]],
       decodePage: Array[Byte] => Option[Raster.RgbRows] = Raster.decodeRgb): Vector[(String, String)] = {
-    // decode the page raster at most once, and only if a Picture cell
-    // actually renders — pages without Picture cells never pay the decode
-    lazy val rasterBytes: Option[Array[Byte]] = raster.map(_.toArray)
-    lazy val rasterHeader: Option[(Int, Int, Boolean)] =
-      rasterBytes.flatMap(b => try Raster.headerInfo(b) catch { case _: Exception => None })
-    // direct PNG crop path first; the ImageIO decode below runs only for
-    // rasters (or boxes) the direct path declines
-    lazy val pageRows: Option[Raster.RgbRows] = rasterBytes.flatMap(decodePage)
-    lazy val pageImg: Option[java.awt.image.BufferedImage] =
-      rasterBytes.flatMap { b =>
-        try Some(Raster.decode(b)) catch { case _: Exception => None }
-      }
-    def rasterMime(b: Array[Byte]): String =
-      if ((b(0) & 0xff) == 0x89) "image/png" else "image/jpeg"
+    val pictures = new PictureUris(raster, decodePage)
     val items = Vector.newBuilder[(String, String)]
     cells.foreach { cellV =>
       val cell = cellV match {
@@ -166,33 +202,7 @@ object MdRender {
       val skip = noPageHf && PageHf.contains(categoryStr)
       if (!skip) {
         if (categoryStr == "Picture") {
-          // raster-backed page: real crop + base64 PNG embed, the
-          // reference's image.crop + PILimage_to_base64
-          // (format_transformer.py:169-172); raster-less pages (all HTML —
-          // a DOM pipeline has no rasterizer) keep the deterministic
-          // placeholder URI, same data: scheme
-          // FULL-BLEED fast path: a crop of exactly [0,0,w,h] over an
-          // alpha-free raster has decoded pixels identical to the source
-          // image, so the source bytes embed directly (correct mime) with
-          // NO decode/re-encode — the container differs from the
-          // reference's always-PNG re-encode (documented deviation; the
-          // decoded-pixel contract is what the golden spec pins). Partial
-          // crops and alpha-capable sources take the decode+crop path.
-          val fullBleed = rasterHeader.exists { case (w, h, opaque) =>
-            opaque && x1 == 0 && y1 == 0 && x2 == BigInt(w) && y2 == BigInt(h)
-          }
-          val uri =
-            if (fullBleed) {
-              val b = rasterBytes.get
-              s"data:${rasterMime(b)};base64," + java.util.Base64.getEncoder.encodeToString(b)
-            } else pageRows.flatMap(_.cropDataUri(x1.toInt, y1.toInt, x2.toInt, y2.toInt))
-              .getOrElse(pageImg match {
-                case Some(img) =>
-                  try Raster.pngDataUri(Raster.pilCrop(img, x1.toInt, y1.toInt, x2.toInt, y2.toInt))
-                  catch { case _: Exception => picturePlaceholder(x1, y1, x2, y2) }
-                case None => picturePlaceholder(x1, y1, x2, y2)
-              })
-          items += ((categoryStr, s"![]($uri)"))
+          items += ((categoryStr, s"![](${pictures.uri(x1, y1, x2, y2)})"))
         } else if (categoryStr == "Formula") {
           text match {
             case JString(s) => items += ((categoryStr, formulaInMarkdown(s)))

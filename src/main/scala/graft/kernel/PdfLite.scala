@@ -131,54 +131,136 @@ object PdfLite {
     }
   }
 
-  /** XY-cut reading order: prefer splitting on the widest
-    * vertical gap (column break), then the widest horizontal gap, else
-    * sort by (y, x). Deterministic; column-aware (SURVEY.md §7.2 step 5). */
+  /** XY-cut reading order: cut a block set on the widest whitespace gap
+    * of either axis (ties → y, so a full-width title band separates
+    * before a 2-column body splits into columns), recurse into both
+    * sides, and sort a set that does not split in two by (y1, x1).
+    * Deterministic; column-aware (SURVEY.md §7.2 step 5).
+    *
+    * It runs over index arrays, not block lists: the blocks are sorted
+    * once by y1, once by x1 and once by (y1, x1), all stably under
+    * `Float.compare` (NaN last, -0.0 before 0.0), and a cut
+    * stable-partitions the three sorted ranges in place, so each side
+    * stays sorted. A level costs O(m) in its m blocks, and the final
+    * (y1, x1) array is the reading order. The cuts run off an explicit
+    * stack, so a page of many nested cuts costs no thread stack; a page
+    * whose cuts peel one block at a time is still quadratic in its block
+    * count. */
   def readingOrder(blocks: Vector[PdfBlock]): Vector[PdfBlock] = {
-    val MinGap = 8.0f
+    val n = blocks.length
+    if (n <= 1) return blocks
+    val x1 = new Array[Float](n); val y1 = new Array[Float](n)
+    val x2 = new Array[Float](n); val y2 = new Array[Float](n)
+    var i = 0
+    while (i < n) {
+      val b = blocks(i)
+      x1(i) = b.x1; y1(i) = b.y1; x2(i) = b.x2; y2(i) = b.y2
+      i += 1
+    }
+    val byX = stableOrder(x1, null)
+    val byY = stableOrder(y1, null)
+    val byYX = stableOrder(y1, byX)
 
-    // widest whitespace gap across the projected intervals → (center, width)
-    def largestGap(ivs: Vector[(Float, Float)]): Option[(Float, Float)] = {
-      val sorted = ivs.sortBy(_._1)
-      var maxEnd = sorted.head._2
-      var best: Option[(Float, Float)] = None
-      sorted.tail.foreach { case (s, e) =>
-        if (s - maxEnd >= MinGap) {
-          val width = s - maxEnd
-          if (best.forall(_._2 < width)) best = Some(((s + maxEnd) / 2, width))
+    val gap = new Array[Float](2)
+    val left = new Array[Boolean](n)
+    val tmp = new Array[Int](n)
+    // stable in-place partition of one sorted range: `left` members first
+    def split(a: Array[Int], lo: Int, hi: Int): Unit = {
+      var w = lo
+      var r = 0
+      var k = lo
+      while (k < hi) {
+        val j = a(k)
+        if (left(j)) { a(w) = j; w += 1 } else { tmp(r) = j; r += 1 }
+        k += 1
+      }
+      System.arraycopy(tmp, 0, a, w, r)
+    }
+    // ranges [lo, hi) still to cut, as an explicit stack
+    val los = new Array[Int](n); val his = new Array[Int](n)
+    var top = 0
+    los(0) = 0; his(0) = n; top = 1
+    while (top > 0) {
+      top -= 1
+      val lo = los(top); val hi = his(top)
+      if (hi - lo > 1) {
+        val yFound = largestGap(byY, lo, hi, y1, y2, gap)
+        val yc = gap(0); val yw = gap(1)
+        val xFound = largestGap(byX, lo, hi, x1, x2, gap)
+        val xc = gap(0); val xw = gap(1)
+        val onY = yFound && (!xFound || yw >= xw)
+        if (onY || xFound) {
+          var na = 0
+          var k = lo
+          while (k < hi) {
+            val j = byYX(k)
+            left(j) =
+              if (onY) (y1(j) + y2(j)) / 2 < yc
+              else (x1(j) + x2(j)) / 2 < xc
+            if (left(j)) na += 1
+            k += 1
+          }
+          if (na > 0 && na < hi - lo) {
+            split(byY, lo, hi); split(byX, lo, hi); split(byYX, lo, hi)
+            los(top) = lo + na; his(top) = hi; top += 1
+            los(top) = lo; his(top) = lo + na; top += 1
+          }
         }
-        maxEnd = math.max(maxEnd, e)
       }
-      best
     }
+    val out = Vector.newBuilder[PdfBlock]
+    out.sizeHint(n)
+    i = 0
+    while (i < n) { out += blocks(byYX(i)); i += 1 }
+    out.result()
+  }
 
-    // cut on the WIDEST gap of either axis (ties → y): a full-width title
-    // band separates on y first, while a 2-column body with a wide gutter
-    // splits into columns before its rows interleave; a set that does not
-    // split in two sorts by (y, x)
-    def cut(bs: Vector[PdfBlock]): Option[(Vector[PdfBlock], Vector[PdfBlock])] = {
-      if (bs.length <= 1) return None
-      val yGap = largestGap(bs.map(b => (b.y1, b.y2)))
-      val xGap = largestGap(bs.map(b => (b.x1, b.x2)))
-      val (a, b) = (yGap, xGap) match {
-        case (Some((yc, yw)), x) if x.forall(yw >= _._2) =>
-          bs.partition(bl => (bl.y1 + bl.y2) / 2 < yc)
-        case (_, Some((xc, _))) => bs.partition(bl => (bl.x1 + bl.x2) / 2 < xc)
-        case _                  => (bs, Vector.empty)
+  private val MinGap = 8.0f
+
+  /** Widest whitespace gap across the intervals `[start, end]` of the
+    * range `order[lo, hi)`, sorted by start: sets `out` to (center,
+    * width) and returns whether one of at least [[MinGap]] exists. The
+    * first of equally wide gaps wins. */
+  private def largestGap(order: Array[Int], lo: Int, hi: Int,
+      start: Array[Float], end: Array[Float], out: Array[Float]): Boolean = {
+    var found = false
+    var maxEnd = end(order(lo))
+    var k = lo + 1
+    while (k < hi) {
+      val s = start(order(k))
+      if (s - maxEnd >= MinGap) {
+        val width = s - maxEnd
+        if (!found || out(1) < width) { out(0) = (s + maxEnd) / 2; out(1) = width; found = true }
       }
-      if (a.nonEmpty && b.nonEmpty) Some((a, b)) else None
+      maxEnd = math.max(maxEnd, end(order(k)))
+      k += 1
     }
-    // `todo` holds the block sets still to order, leftmost first, on the
-    // heap: a page of many nested cuts costs no thread stack
-    @annotation.tailrec
-    def order(todo: List[Vector[PdfBlock]], out: Vector[PdfBlock]): Vector[PdfBlock] = todo match {
-      case Nil => out
-      case bs :: rest => cut(bs) match {
-        case Some((a, b)) => order(a :: b :: rest, out)
-        case None         => order(rest, out ++ bs.sortBy(b => (b.y1, b.x1)))
-      }
+    found
+  }
+
+  /** Indices sorted stably by `key` under `Float.compare`; with `within`,
+    * ties keep their order in `within` instead of index order. */
+  private def stableOrder(key: Array[Float], within: Array[Int]): Array[Int] = {
+    val n = key.length
+    // an int whose signed order is Float.compare's, over the sort key's
+    // high half; the low half (index or rank) makes every key unique
+    val packed = new Array[Long](n)
+    var r = 0
+    while (r < n) {
+      val j = if (within == null) r else within(r)
+      val bits = java.lang.Float.floatToIntBits(key(j))
+      packed(r) = ((bits ^ ((bits >> 31) & 0x7fffffff)).toLong << 32) | r
+      r += 1
     }
-    order(List(blocks), Vector.empty)
+    java.util.Arrays.sort(packed)
+    val order = new Array[Int](n)
+    r = 0
+    while (r < n) {
+      val low = packed(r).toInt
+      order(r) = if (within == null) low else within(low)
+      r += 1
+    }
+    order
   }
 
   /** One page → layout cells in rendered-pixel space, applying the
@@ -192,14 +274,13 @@ object PdfLite {
       else dpi / 72.0
     val ordered = readingOrder(page.blocks)
     val cells = ordered.map { b =>
-      val bbox = Vector(
-        BboxScale.pyIntOfDouble(b.x1 * scale), BboxScale.pyIntOfDouble(b.y1 * scale),
-        BboxScale.pyIntOfDouble(b.x2 * scale), BboxScale.pyIntOfDouble(b.y2 * scale))
-      var cell = JObject(
-        "bbox" -> JArray(bbox.map(JInt(_))),
-        "category" -> JString(b.category))
-      if (b.category != Categories.Picture) cell = cell.updated("text", JString(b.text))
-      cell
+      val bbox = "bbox" -> JArray(Vector(
+        JInt(BboxScale.pyIntOfDouble(b.x1 * scale)), JInt(BboxScale.pyIntOfDouble(b.y1 * scale)),
+        JInt(BboxScale.pyIntOfDouble(b.x2 * scale)), JInt(BboxScale.pyIntOfDouble(b.y2 * scale))))
+      val category = "category" -> JString(b.category)
+      JObject(
+        if (b.category == Categories.Picture) Vector(bbox, category)
+        else Vector(bbox, category, "text" -> JString(b.text)))
     }
     HtmlExtract.PageLayout(wPx, hPx, cells, page.raster)
   }

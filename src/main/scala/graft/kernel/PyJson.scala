@@ -259,10 +259,13 @@ object PyJson {
   def writeString(s: String, sb: java.lang.StringBuilder): Unit = {
     // run-based: bulk-append maximal spans of unescaped chars (escapes are
     // rare in real text; the per-char append version was the kernel's
-    // single hottest frame under JFR)
+    // single hottest frame under JFR), and a string with no escape at
+    // all in one copy
     sb.append('"')
     val n = s.length
     var i = 0
+    while (i < n && { val c = s.charAt(i); c != '"' && c != '\\' && c >= 0x20 }) i += 1
+    if (i == n) { sb.append(s).append('"'); return }
     var start = 0
     while (i < n) {
       val c = s.charAt(i)

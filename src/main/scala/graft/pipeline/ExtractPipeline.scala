@@ -96,19 +96,42 @@ object ExtractPipeline {
     * combine_markdown_files), cells concatenated across pages in page order
     * (demo_gradio.py:264-267). Shared verbatim by both topologies and the
     * fused [[WebPipeline]], so the paths can never diverge column-wise. */
-  private[pipeline] def assembleDoc(url: String, ps: Vector[ParsedPage]): ParsedDoc =
+  private[pipeline] def assembleDoc(url: String, ps: Vector[ParsedPage]): ParsedDoc = {
+    val cells = new java.lang.StringBuilder(ps.foldLeft(2)(_ + _.cells_json.length + 32))
+    cells.append('[')
+    ps.foreach { p =>
+      if (cells.length > 1) cells.append(", ")
+      cells.append("{\"page_no\": ").append(p.page_no).append(", \"cells\": ")
+        .append(if (p.cells_json.isEmpty) "null" else p.cells_json).append('}')
+    }
+    cells.append(']')
+    // a single page's strings are the document's, as the joins would give
+    def join(part: ParsedPage => String, sep: String, skipEmpty: Boolean): String =
+      if (ps.length == 1) part(ps.head)
+      else {
+        val sb = new java.lang.StringBuilder(ps.foldLeft(0)(_ + part(_).length + sep.length))
+        var first = true
+        ps.foreach { p =>
+          val s = part(p)
+          if (!(skipEmpty && s.isEmpty)) {
+            if (!first) sb.append(sep)
+            sb.append(s)
+            first = false
+          }
+        }
+        sb.toString
+      }
     ParsedDoc(
       url = url,
       lang = "",
       n_pages = ps.length,
-      md = ps.map(_.md).mkString("\n\n---\n\n"),
-      md_nohf = ps.map(_.md_nohf).mkString("\n\n---\n\n"),
-      extracted_text = ps.map(_.extracted_text).filter(_.nonEmpty).mkString("\n\n"),
-      cells_json = ps.map(p => "{\"page_no\": " + p.page_no + ", \"cells\": " +
-        (if (p.cells_json.isEmpty) "null" else p.cells_json) + "}")
-        .mkString("[", ", ", "]"),
+      md = join(_.md, "\n\n---\n\n", skipEmpty = false),
+      md_nohf = join(_.md_nohf, "\n\n---\n\n", skipEmpty = false),
+      extracted_text = join(_.extracted_text, "\n\n", skipEmpty = true),
+      cells_json = cells.toString,
       filtered = ps.exists(_.filtered),
-      error = ps.map(_.error).filter(_.nonEmpty).mkString("; "))
+      error = join(_.error, "; ", skipEmpty = true))
+  }
 
   /** The order Spark's `sort_array` gives a url's page structs: page_no,
     * then md, md_nohf, extracted_text, cells_json as unsigned UTF-8 bytes,

