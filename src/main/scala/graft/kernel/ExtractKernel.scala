@@ -479,12 +479,11 @@ object ExtractKernel {
         // serializer exactly (ints + strings only), so the reference's
         // json.loads(response) is the identity here — skip the
         // dumps→parse of the full cell array (hot-path allocation;
-        // equivalence pinned by ExtractKernelSpec). Repair-needing
-        // responses (garbled payloads) still take the string path.
-        trustedTail(url, pageNo, m, layout, iw, ih).getOrElse {
-          val cells = classifierCells(layout, m, iw, ih)
-          finishLayoutTrusted(url, pageNo, m, cells, layout.width, layout.height, iw, ih, layout.raster)
-        }
+        // equivalence pinned by ExtractKernelSpec). A page the trusted
+        // tail declines takes the string path, as model responses do.
+        trustedTail(url, pageNo, m, layout, iw, ih).getOrElse(
+          finishLayout(url, pageNo, m, PyJson.dumps(JArray(classifierCells(layout, m, iw, ih))),
+            layout.width, layout.height, iw, ih, layout.raster))
     }
   }
 
@@ -497,15 +496,15 @@ object ExtractKernel {
     * truncation, all before any cell renders, as the reference rescales
     * every cell before its markdown pass.
     *
-    * `None` declines the page, which then takes the JSON-value path
-    * ([[classifierCells]] → [[finishLayoutTrusted]]) that defines the
-    * result: an empty layout, any other cell shape, a coordinate that is
-    * non-finite or at least 2^53 in magnitude in any of the three spaces,
-    * or a [[BboxScale.KernelError]] / [[Geometry.AspectRatioError]] (a
-    * formula that raises, an input aspect ratio past 200). Those pages
-    * keep their error rows, repair fallbacks and big-integer output
-    * exactly. Row-equal to that path on every page it accepts
-    * (PropertySpec). */
+    * `None` declines the page: an empty layout, any other cell shape, a
+    * coordinate that is non-finite or at least 2^53 in magnitude in any of
+    * the three spaces, or a [[BboxScale.KernelError]] /
+    * [[Geometry.AspectRatioError]] (a formula that raises, an input aspect
+    * ratio past 200). A declined page takes the JSON-value path that
+    * defines the result — [[classifierCells]] serialized and run through
+    * [[finishLayout]], as a model response is — so it keeps its error row,
+    * repair fallback and big-integer output exactly. Row-equal to that
+    * path on every page it accepts (PropertySpec). */
   private[kernel] def trustedTail(url: String, pageNo: Int, mode: PromptMode,
       layout: HtmlExtract.PageLayout, inputW: Long, inputH: Long): Option[ParsedPage] = {
     import BboxScale.ExactLong
@@ -618,29 +617,6 @@ object ExtractKernel {
         filtered = false, error = ""))
     } catch {
       case _: BboxScale.KernelError | _: Geometry.AspectRatioError => None
-    }
-  }
-
-  /** Trusted-cells variant of [[finishLayout]]: identical semantics to
-    * `postProcessOutput(dumps(cells), …)` when every value is a canonical
-    * int/string (our classifier's contract). */
-  private def finishLayoutTrusted(
-      url: String,
-      pageNo: Int,
-      mode: PromptMode,
-      inputCells: Vector[JValue],
-      originW: Long,
-      originH: Long,
-      inputW: Long,
-      inputH: Long,
-      raster: Option[scala.collection.immutable.ArraySeq[Byte]] = None): ParsedPage = {
-    try {
-      val cells = BboxScale.postProcessCells(originW, originH, inputCells, inputW, inputH)
-      renderParsed(url, pageNo, mode, cells, originW, originH, inputW, inputH, raster)
-    } catch {
-      case _: BboxScale.KernelError | _: Geometry.AspectRatioError =>
-        // mirror the reference fallback: repair over the serialized form
-        finishLayout(url, pageNo, mode, PyJson.dumps(JArray(inputCells)), originW, originH, inputW, inputH, raster)
     }
   }
 

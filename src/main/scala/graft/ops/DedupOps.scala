@@ -387,19 +387,8 @@ object DedupOps {
     * resolvable because the label table is keyed by every subgraph node —
     * so chains collapse in O(log diameter) rounds, not O(diameter)
     * (near-dup families chain: A~B~C… diameters of 20+ were observed on
-    * the synthetic corpus at sf0.1). Early-exit convergence check per
-    * round.
-    *
-    * Each round's label table is EAGERLY localCheckpoint'ed, not persisted:
-    * persist caches row data but leaves the LOGICAL plan intact, and this
-    * loop references the previous round's table three times — Catalyst
-    * re-analyzes a plan tree growing ~4× per round (measured: the sf0.1
-    * run wedged the driver in the optimizer, not in any Spark job).
-    * localCheckpoint truncates the plan to the materialized RDD, keeping
-    * per-round planning O(1); executor-local checkpoint blocks are the
-    * documented non-reliable variant — an iterative refinement loop can
-    * simply restart on executor loss (GraphFrames' CC makes the same
-    * call), and the superseded blocks are GC'd by the ContextCleaner. */
+    * the synthetic corpus at sf0.1). [[Rounds]] drives the rounds, with
+    * an early exit once a round changes no label. */
   def connectedComponents(
       vertices: DataFrame, idCol: String, edges: DataFrame,
       srcCol: String = "id_a", dstCol: String = "id_b",
@@ -408,7 +397,7 @@ object DedupOps {
       .select(col(srcCol).cast("long").as("x"), col(dstCol).cast("long").as("y"))
       .union(edges.select(col(dstCol).cast("long").as("x"), col(srcCol).cast("long").as("y")))
       .persist()
-    var labels = sym.select("x").distinct()
+    val labels0 = sym.select("x").distinct()
       .withColumn("label", col("x")).localCheckpoint(true)
     // Convergence check: label(v) is monotone non-increasing under min
     // propagation, so sum(label) strictly decreases every round until the
@@ -421,23 +410,21 @@ object DedupOps {
       if (v == null) java.math.BigDecimal.ZERO
       else v.asInstanceOf[java.math.BigDecimal]
     }
-    var prevSum = labelSum(labels)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    var prevSum = labelSum(labels0)
+    val (labels, converged) = Rounds.run(labels0, maxIter) { (labels, _) =>
       val viaNeighbor = sym
         .join(labels.select(col("x").as("y"), col("label")), Seq("y"))
         .select("x", "label")
       val viaParent = labels.toDF("x0", "lab0")
         .join(labels.select(col("x").as("lab0"), col("label")), Seq("lab0"))
         .select(col("x0").as("x"), col("label"))
-      val next = labels.select("x", "label").union(viaNeighbor).union(viaParent)
-        .groupBy("x").agg(min("label").as("label")).localCheckpoint(true)
+      Some(labels.select("x", "label").union(viaNeighbor).union(viaParent)
+        .groupBy("x").agg(min("label").as("label")))
+    } { (next, _) =>
       val nextSum = labelSum(next)
-      labels = next
-      converged = nextSum.compareTo(prevSum) == 0
+      val same = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
-      i += 1
+      same
     }
     if (!converged)
       // iteration-capped labels are NOT component minima; keep-one dedup
@@ -445,10 +432,9 @@ object DedupOps {
       System.err.println(s"[connectedComponents] maxIter=$maxIter exhausted " +
         "before convergence — labels may not be component minima")
     sym.unpersist()
-    val out = vertices.select(col(idCol).cast("long").as("id"))
+    vertices.select(col(idCol).cast("long").as("id"))
       .join(labels.withColumnRenamed("x", "id"), Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("cluster_id"))
-    out
   }
 
   /** Deterministic 256-entry gear table (splitmix64 over a fixed seed) —

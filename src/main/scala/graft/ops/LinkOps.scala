@@ -17,9 +17,8 @@ import scala.util.control.NonFatal
   * Scale shape: extraction is map-only (the HTML parse rides the same
   * per-partition kernel discipline as ExtractPipeline); the host graph is
   * a payload-free (src_host, dst_host) hash aggregation; PageRank shuffles
-  * only (node:string, rank:long) pairs per iteration and eager-
-  * localCheckpoints each round so Catalyst planning stays O(1) across
-  * iterations (the same lesson as [[DedupOps.connectedComponents]]).
+  * only (node:string, rank:long) pairs per iteration, one [[Rounds]]
+  * round each.
   * Ranks use scaled-integer arithmetic (`DIV`) end to end, so a DuckDB
   * replay of the same iteration ladder is engine-exact — no float
   * accumulation order can flip a rank.
@@ -641,32 +640,27 @@ object LinkOps {
     * O(log L) rounds (`maxRounds` = 12 covers chains to 4096 — anything
     * longer is flagged with the cycles, which is what an operator should
     * do with a pathological redirect chain). Rounds shuffle only
-    * (string, string, long) rows; per-round eager localCheckpoint keeps
-    * Catalyst planning O(1) (the CC/PageRank lesson); convergence — no
-    * pointer jumped this round — is one agg over the just-checkpointed
-    * table. */
+    * (string, string, long) rows; convergence — no pointer jumped this
+    * round — is one agg over the just-checkpointed table. */
   def resolveRedirects(edges0: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", maxRounds: Int = 12): DataFrame = {
     val edges = edges0
       .select(col(srcCol).cast("string").as("url"), col(dstCol).cast("string").as("nxt"))
       .filter(col("url") =!= col("nxt") && col("url").isNotNull && col("nxt").isNotNull)
       .groupBy("url").agg(min(col("nxt")).as("nxt"))
-    var ptr = edges.withColumn("hops", lit(1L)).localCheckpoint(true)
-    var live = true
-    var round = 0
-    while (live && round < maxRounds) {
+    // the pointer table carries the previous round's `jumped` flag; every
+    // select below names its columns, so the flag never leaks further
+    val (ptr, _) = Rounds.run(edges.withColumn("hops", lit(1L)).localCheckpoint(true),
+        maxRounds) { (ptr, _) =>
       val b = ptr.select(col("url").as("b_url"), col("nxt").as("b_nxt"),
         col("hops").as("b_hops"))
-      val stepped = ptr.join(b, ptr("nxt") === b("b_url"), "left")
+      Some(ptr.join(b, ptr("nxt") === b("b_url"), "left")
         .select(col("url"),
           coalesce(col("b_nxt"), col("nxt")).as("nxt"),
           (col("hops") + coalesce(col("b_hops"), lit(0L))).as("hops"),
-          col("b_url").isNotNull.as("jumped"))
-        .localCheckpoint(true)
-      live = stepped.agg(coalesce(max(col("jumped")), lit(false)))
-        .first().getBoolean(0)
-      ptr = stepped.drop("jumped")
-      round += 1
+          col("b_url").isNotNull.as("jumped")))
+    } { (stepped, _) =>
+      !stepped.agg(coalesce(max(col("jumped")), lit(false))).first().getBoolean(0)
     }
     val srcs = ptr.select(col("url").as("s_url"))
     ptr.join(srcs, ptr("nxt") === srcs("s_url"), "left")
@@ -686,40 +680,12 @@ object LinkOps {
     * Unweighted over DISTINCT cross-edges. Dangling-node mass is dropped
     * (the standard simplification); ranks therefore UNDER-estimate but the
     * ORDER matches float PageRank on non-degenerate graphs, and every
-    * operation is integral so a SQL replay is bit-exact. Each iteration:
-    * one join on src + one hash agg on dst, both over (string, long) rows
-    * only; `localCheckpoint(true)` per round caps the plan depth. */
+    * operation is integral so a SQL replay is bit-exact. PageRank is
+    * [[trustRank]] with every node a seed; both run [[seededRank]]. */
   def pageRank(edges0: DataFrame, srcCol: String = "src_host",
       dstCol: String = "dst_host", iterations: Int = 5,
-      scale: Long = 1000000L): DataFrame = {
-    require(iterations >= 1 && scale >= 100L, "need iterations >= 1, scale >= 100")
-    val edges = edges0
-      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .persist()
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(true)
-    val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val withDeg = edges.join(outdeg, Seq("src")).persist()
-    var ranks = nodes.withColumn("rank", lit(scale))
-    for (_ <- 0 until iterations) {
-      val inSum = withDeg
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), expr("rank DIV outdeg").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("in_sum"))
-      ranks = nodes.join(inSum, Seq("node"), "left")
-        .select(col("node"),
-          (lit(15L * scale / 100L) +
-            expr(s"(85 * coalesce(in_sum, 0L)) DIV 100")).as("rank"))
-        .localCheckpoint(true)
-    }
-    edges.unpersist()
-    withDeg.unpersist()
-    ranks
-  }
+      scale: Long = 1000000L): DataFrame =
+    seededRank(edges0, srcCol, dstCol, iterations, scale)(_.withColumn("is_seed", lit(true)))
 
   /** Fixed-iteration TrustRank (Gyöngyi, Garcia-Molina & Pedersen 2004)
     * with the same scaled-integer arithmetic as [[pageRank]]: PageRank
@@ -734,45 +700,61 @@ object LinkOps {
     *
     * Ranks start at `scale` on seeds, 0 elsewhere; nodes unreachable from
     * the seed set stay exactly 0 (integral arithmetic — no float seep).
-    * Scale shape identical to pageRank: per round one join on src + one
-    * hash agg on dst over (string, long) rows, localCheckpoint per round;
-    * the seed flag rides the node table (one extra boolean), seeds join
+    * The seed flag rides the node table (one extra boolean), seeds join
     * once up front. */
   def trustRank(edges0: DataFrame, seeds: DataFrame,
       srcCol: String = "src_host", dstCol: String = "dst_host",
       seedCol: String = "node", iterations: Int = 5,
       scale: Long = 1000000L): DataFrame = {
+    val seedSet = seeds.select(col(seedCol).cast("string").as("node")).distinct()
+    seededRank(edges0, srcCol, dstCol, iterations, scale) { nodes =>
+      nodes.join(seedSet.withColumn("__s", lit(true)), Seq("node"), "left")
+        .select(col("node"), coalesce(col("__s"), lit(false)).as("is_seed"))
+    }.withColumnRenamed("rank", "trust")
+  }
+
+  /** The DISTINCT cross-edges `(src, dst)`, persisted (the caller
+    * unpersists), and their node set `(node)` — the graph [[seededRank]]
+    * and [[hits]] iterate over, once their shared bounds on `iterations`
+    * and `scale` hold. */
+  private def crossGraph(edges0: DataFrame, srcCol: String, dstCol: String,
+      iterations: Int, scale: Long): (DataFrame, DataFrame) = {
     require(iterations >= 1 && scale >= 100L, "need iterations >= 1, scale >= 100")
     val edges = edges0
       .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
       .persist()
-    val seedSet = seeds.select(col(seedCol).cast("string").as("node")).distinct()
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
       .distinct()
-      .join(seedSet.withColumn("__s", lit(true)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__s"), lit(false)).as("is_seed"))
-      .localCheckpoint(true)
+    (edges, nodes)
+  }
+
+  /** The [[trustRank]] ladder with seeds marked by `flagSeeds`, which adds
+    * an `is_seed` column to the node set. Per round: one join on src + one
+    * hash agg on dst over (string, long) rows only. Output `(node, rank)`. */
+  private def seededRank(edges0: DataFrame, srcCol: String, dstCol: String,
+      iterations: Int, scale: Long)(flagSeeds: DataFrame => DataFrame): DataFrame = {
+    val (edges, nodeSet) = crossGraph(edges0, srcCol, dstCol, iterations, scale)
+    val nodes = flagSeeds(nodeSet).localCheckpoint(true)
     val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val withDeg = edges.join(outdeg, Seq("src")).persist()
-    var ranks = nodes.select(col("node"),
+    val init = nodes.select(col("node"),
       when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("rank"))
-    for (_ <- 0 until iterations) {
+    val ranks = Rounds.fixed(init, iterations) { (ranks, _) =>
       val inSum = withDeg
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), expr("rank DIV outdeg").as("c"))
         .groupBy("node").agg(sum(col("c")).as("in_sum"))
-      ranks = nodes.join(inSum, Seq("node"), "left")
+      nodes.join(inSum, Seq("node"), "left")
         .select(col("node"),
           (when(col("is_seed"), lit(15L * scale / 100L)).otherwise(lit(0L)) +
             expr("(85 * coalesce(in_sum, 0L)) DIV 100")).as("rank"))
-        .localCheckpoint(true)
     }
     edges.unpersist()
     withDeg.unpersist()
-    ranks.withColumnRenamed("rank", "trust")
+    ranks
   }
 
   /** Fixed-iteration HITS (Kleinberg 1999) with scaled-integer arithmetic
@@ -795,48 +777,34 @@ object LinkOps {
     * start at `scale`; nodes with no in-edges (pure hubs) hold auth 0,
     * no out-edges (pure authorities) hold hub 0.
     *
-    * Scale shape: identical to pageRank — per half-round one join on the
-    * edge endpoint + one hash agg, all rows (string, long) only, payload
-    * never enters; `localCheckpoint(true)` per round caps plan depth.
+    * Scale shape: each half-round (auth, then hub) is one [[Rounds]]
+    * round over the `(node, hub, auth)` table — one join on the edge
+    * endpoint + one hash agg, all rows (string, long) only, payload
+    * never enters.
     * Overflow bound: raw sums ≤ indeg_max·scale, and the normalization
     * multiply needs raw·scale < 2⁶³ → indeg_max < 2⁶³/scale² (≈9.2M at
     * the default scale; pass a smaller scale for denser graphs). */
   def hits(edges0: DataFrame, srcCol: String = "src_host",
       dstCol: String = "dst_host", iterations: Int = 5,
       scale: Long = 1000000L): DataFrame = {
-    require(iterations >= 1 && scale >= 100L, "need iterations >= 1, scale >= 100")
-    val edges = edges0
-      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .persist()
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(true)
-    def normalize(raw: DataFrame, rawCol: String, outCol: String): DataFrame =
-      raw.crossJoin(raw.agg(max(col(rawCol)).as("__mx")))
-        .select(col("node"),
-          when(col("__mx") > 0, expr(s"($rawCol * $scale) DIV __mx"))
-            .otherwise(lit(0L)).as(outCol))
-        .localCheckpoint(true)
-    var hub = nodes.withColumn("hub", lit(scale))
-    var auth = nodes.withColumn("auth", lit(0L))
-    for (_ <- 0 until iterations) {
-      val aRaw = nodes
-        .join(edges.join(hub.withColumnRenamed("node", "src"), Seq("src"))
-          .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("ar")),
+    val (edges, nodeSet) = crossGraph(edges0, srcCol, dstCol, iterations, scale)
+    val init = nodeSet.localCheckpoint(true)
+      .select(col("node"), lit(scale).as("hub"), lit(0L).as("auth"))
+    val out = Rounds.fixed(init, 2 * iterations) { (scores, half) =>
+      // odd half-rounds sum hubs along in-edges into auth, even ones
+      // sum authorities along out-edges into hub
+      val (from, to, in, updated) =
+        if (half % 2 == 1) ("src", "dst", "hub", "auth") else ("dst", "src", "auth", "hub")
+      val raw = scores.select(col("node"), col(in))
+        .join(edges.join(scores.select(col("node").as(from), col(in)), Seq(from))
+          .groupBy(col(to).as("node")).agg(sum(col(in)).as("raw")),
           Seq("node"), "left")
-        .select(col("node"), coalesce(col("ar"), lit(0L)).as("ar"))
-      auth = normalize(aRaw, "ar", "auth")
-      val hRaw = nodes
-        .join(edges.join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
-          .groupBy(col("src").as("node")).agg(sum(col("auth")).as("hr")),
-          Seq("node"), "left")
-        .select(col("node"), coalesce(col("hr"), lit(0L)).as("hr"))
-      hub = normalize(hRaw, "hr", "hub")
-    }
-    val out = hub.join(auth, Seq("node"))
+        .select(col("node"), col(in), coalesce(col("raw"), lit(0L)).as("raw"))
+      raw.crossJoin(raw.agg(max(col("raw")).as("__mx")))
+        .select(col("node"), col(in),
+          when(col("__mx") > 0, expr(s"(raw * $scale) DIV __mx"))
+            .otherwise(lit(0L)).as(updated))
+    }.select("node", "hub", "auth")
     edges.unpersist()
     out
   }

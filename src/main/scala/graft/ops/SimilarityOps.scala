@@ -393,9 +393,9 @@ object SimilarityOps {
     * persisted; per iteration the centroid table (k·d rows) BROADCASTS
     * into a map-side join, distances partial-aggregate on (id, cid), the
     * argmin is a hash agg (`min(struct(d2, cid))` — no per-id window),
-    * and the update is a payload-free (cid, dim) aggregation. Centroids
-    * eager-localCheckpoint per round (the connectedComponents lesson);
-    * nothing ever sorts or shuffles the corpus itself. Returns
+    * and the update is a payload-free (cid, dim) aggregation, one
+    * [[Rounds]] round per iteration; nothing ever sorts or shuffles the
+    * corpus itself. Returns
     * (id, cluster) for every input row. */
   def kmeansLloyd(df: DataFrame, idCol: String, vecCol: String,
       k: Int = 8, iters: Int = 2, scale: Long = 1000000L,
@@ -424,22 +424,22 @@ object SimilarityOps {
         m.select(col("id"), col("m.cid").as("cluster"), col("m.d2").as("d2"))
       else m.select(col("id"), col("m.cid").as("cluster"))
     }
-    var cents = expl.join(broadcast(initIds), Seq("id"))
+    val init = expl.join(broadcast(initIds), Seq("id"))
       .select(col("cid"), col("dim"), col("v").as("cv"))
       .localCheckpoint(true)
-    for (it <- 0 until iters) {
-      val assign = assignTo(cents)
-      cents = expl.join(assign.withColumnRenamed("cluster", "cid"), Seq("id"))
+    val (cents, _) = Rounds.run(init, iters) { (cents, _) =>
+      Some(expl.join(assignTo(cents).withColumnRenamed("cluster", "cid"), Seq("id"))
         .groupBy("cid", "dim")
-        .agg(expr("sum(v) DIV count(1)").as("cv"))
-        .localCheckpoint(true)
+        .agg(expr("sum(v) DIV count(1)").as("cv")))
+    } { (cents, round) =>
       // an empty cluster silently drops out of the centroid table (Lloyd's
       // standard degeneracy) — log it instead of shrinking k unannounced.
       // One count() on the just-checkpointed k·d-row table: O(k·d), free.
       val kNow = cents.select("cid").distinct().count()
       if (kNow < k)
-        System.err.println(s"[kmeans] iteration ${it + 1}: $kNow of $k clusters " +
+        System.err.println(s"[kmeans] iteration $round: $kNow of $k clusters " +
           "non-empty — empty clusters dropped out and k shrank")
+      false
     }
     // materialize the FINAL assignment before unpersisting expl: the
     // returned plan references expl, and unpersisting first would make

@@ -1020,8 +1020,7 @@ object TextOps {
     * global sort), the apply is map-only codegen, and the per-round
     * 1-row collect is the IVF-codebook O(k) driver discipline — each
     * merge is inherently sequential in BPE, so k driver round-trips is
-    * the algorithm, not a shortcut. Per-round eager localCheckpoint
-    * keeps lineage linear (the CC/PageRank ladder discipline).
+    * the algorithm, not a shortcut; [[Rounds]] drives the rounds.
     * symbols_after headroom: 10^13 corpus tokens × avg length ≪ 2^63.
     * Stops early (fewer than `rounds` rows) if no pair remains. */
   def bpeTrain(df: DataFrame, idCol: String, textCol: String,
@@ -1033,7 +1032,7 @@ object TextOps {
     val SEP2 = SEP + SEP
     def syms(seq: Column): Column =
       split(seq.substr(lit(2), length(seq) - 2), SEP2)
-    var vocab = vocabStats(df, idCol, textCol)
+    val vocab0 = vocabStats(df, idCol, textCol)
       .filter(!col("token").contains(SEP))
       .select(col("tf"),
         concat(lit(SEP),
@@ -1042,9 +1041,8 @@ object TextOps {
           lit(SEP)).as("seq"))
       .localCheckpoint(true)
     val merges = Vector.newBuilder[(Long, String, String, Long, Long)]
-    var r = 1
-    var done = false
-    while (r <= rounds && !done) {
+    var picked = ("", "", 0L) // this round's (lhs, rhs, pair count)
+    Rounds.run(vocab0, rounds) { (vocab, _) =>
       val pairs = vocab
         .select(col("tf"), syms(col("seq")).as("s"))
         .filter(size(col("s")) > 1)
@@ -1053,22 +1051,20 @@ object TextOps {
             element_at(col("s"), i + 1).as("rhs")))).as("p"))
         .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
         .agg(sum(col("tf")).as("cnt"))
-      val top = pairs.orderBy(col("cnt").desc, col("lhs"), col("rhs"))
-        .limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val (lhs, rhs, cnt) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        vocab = vocab.withColumn("seq",
+      pairs.orderBy(col("cnt").desc, col("lhs"), col("rhs"))
+        .limit(1).collect().headOption.map { top =>
+          val (lhs, rhs) = (top.getString(0), top.getString(1))
+          picked = (lhs, rhs, top.getLong(2))
+          vocab.withColumn("seq",
             replace(col("seq"), lit(SEP + lhs + SEP2 + rhs + SEP),
               lit(SEP + lhs + rhs + SEP)))
-          .localCheckpoint(true)
-        val symbolsAfter = vocab
-          .select(sum(col("tf") * size(syms(col("seq"))).cast("long")))
-          .as[Long].collect()(0)
-        merges += ((r.toLong, lhs, rhs, cnt, symbolsAfter))
-        r += 1
-      }
+        }
+    } { (vocab, round) =>
+      val symbolsAfter = vocab
+        .select(sum(col("tf") * size(syms(col("seq"))).cast("long")))
+        .as[Long].collect()(0)
+      merges += ((round.toLong, picked._1, picked._2, picked._3, symbolsAfter))
+      false
     }
     merges.result()
       .toDF("round", "lhs", "rhs", "pair_count", "symbols_after")
@@ -1517,9 +1513,8 @@ object TextOps {
       .groupBy("id", "y", "f").agg(count(lit(1)).as("x"))
       .localCheckpoint(true)
     // weights as a relation (f, w); absent f ≡ 0 via left join + coalesce
-    var weights = feats.sparkSession.range(0)
-      .select(col("id").as("f"), col("id").as("w"))
-    for (_ <- 1 to rounds) {
+    val weights = Rounds.fixed(feats.sparkSession.range(0)
+        .select(col("id").as("f"), col("id").as("w")), rounds) { (weights, _) =>
       val miscl = feats.join(broadcast(weights), Seq("f"), "left")
         .groupBy("id", "y")
         .agg(sum(col("x") * coalesce(col("w"), lit(0L))).as("margin"))
@@ -1527,10 +1522,9 @@ object TextOps {
         .select("id")
       val delta = feats.join(miscl, Seq("id"), "left_semi")
         .groupBy("f").agg(sum(col("y") * col("x")).as("d"))
-      weights = weights.join(delta, Seq("f"), "full_outer")
+      weights.join(delta, Seq("f"), "full_outer") // ≤ nFeatures rows
         .select(col("f"),
           (coalesce(col("w"), lit(0L)) + coalesce(col("d"), lit(0L))).as("w"))
-        .localCheckpoint(true) // ≤ nFeatures rows; keeps the lineage flat
     }
     weights.filter(col("w") =!= 0L)
   }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Dedupe-on-arrival for continuously-ingested crawl drops.
   *
@@ -96,17 +96,8 @@ object StreamingDedup {
       outputDir: String,
       checkpointDir: String,
       byNearIdentity: Boolean = false): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(StreamingExtract.inputSchema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(inputDir)
-    dedupStream(stream, byNearIdentity).toDF()
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", outputDir)
-      .start()
+    StreamingExtract.appendParquet(
+      dedupStream(StreamingExtract.inputStream(spark, inputDir), byNearIdentity).toDF(),
+      outputDir, checkpointDir)
   }
 }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import graft.core.PromptMode
 import graft.pipeline.ExtractPipeline
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Incremental ingest variant of the extraction pipeline.
@@ -35,20 +35,37 @@ object StreamingExtract {
     StructField("text", StringType),
     StructField("lang", StringType)))
 
+  /** The file source every streaming job here reads: north-rule parquet
+    * drops arriving under `inputDir`, at most 64 files per micro-batch. */
+  private[streaming] def inputStream(spark: SparkSession, inputDir: String): DataFrame =
+    spark.readStream
+      .schema(inputSchema)
+      .option("maxFilesPerTrigger", "64")
+      .parquet(inputDir)
+
+  /** Append-mode parquet sink at `outputDir` that processes everything
+    * available now, then stops; restart with the same `checkpointDir` to
+    * resume. */
+  private[streaming] def appendParquet(rows: DataFrame, outputDir: String,
+      checkpointDir: String): StreamingQuery =
+    rows.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .outputMode(OutputMode.Append())
+      .format("parquet")
+      .option("path", outputDir)
+      .start()
+
   def start(
       spark: SparkSession,
       inputDir: String,
       outputDir: String,
       checkpointDir: String,
       mode: PromptMode = PromptMode.LayoutAll): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(inputSchema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(inputDir)
-    stream.writeStream
+    inputStream(spark, inputDir).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // idempotent per-batch commit: overwrite THIS batch's partition
         // only (replays of an uncommitted batch are self-overwriting)
         ExtractPipeline.run(batch, mode)
@@ -59,6 +76,6 @@ object StreamingExtract {
 
   /** Read everything committed by [[start]]; `batch_id` appears as a
     * partition column. */
-  def output(spark: SparkSession, outputDir: String): org.apache.spark.sql.DataFrame =
+  def output(spark: SparkSession, outputDir: String): DataFrame =
     spark.read.option("basePath", outputDir).parquet(s"$outputDir/batch_id=*")
 }

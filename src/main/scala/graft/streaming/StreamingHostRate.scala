@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.LinkOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Watermarked per-host fetch-rate monitoring over a continuously-ingested
   * crawl stream — the event-time windowed aggregation a crawl operator
@@ -57,17 +57,8 @@ object StreamingHostRate {
       checkpointDir: String,
       windowDur: String = "1 hour",
       watermarkDelay: String = "2 hours"): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(StreamingExtract.inputSchema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(inputDir)
-    hostRate(stream, windowDur, watermarkDelay)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", outputDir)
-      .start()
+    StreamingExtract.appendParquet(
+      hostRate(StreamingExtract.inputStream(spark, inputDir), windowDur, watermarkDelay),
+      outputDir, checkpointDir)
   }
 }

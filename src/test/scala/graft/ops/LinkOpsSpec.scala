@@ -278,6 +278,25 @@ class LinkOpsSpec extends AnyFunSuite {
     assert(r2("d") == 0L && r2("e") == 0L && r2("a") == 150000L)
   }
 
+  test("trustRank seeded with every node equals pageRank row for row") {
+    val graphs = Seq(
+      Seq(("a", "b"), ("b", "a"), ("a", "c"), ("a", "b"), ("c", "c")),
+      Seq(("a", "b")),
+      Seq(("a", "b"), ("b", "c"), ("d", "e"), ("e", "d")),
+      Seq(("a", "b"), ("a", "c"), ("b", "c"), ("a", "b"), ("c", "c")))
+    for (g <- graphs; iterations <- Seq(1, 3)) {
+      val edges = g.toDF("src_host", "dst_host")
+      val everyNode = edges.select(col("src_host").as("node"))
+        .union(edges.select(col("dst_host").as("node")))
+      val pr = LinkOps.pageRank(edges, iterations = iterations).orderBy("node")
+        .collect().map(x => (x.getString(0), x.getLong(1))).toSeq
+      val tr = LinkOps.trustRank(edges, everyNode, iterations = iterations)
+        .select(col("node"), col("trust").as("rank")).orderBy("node")
+        .collect().map(x => (x.getString(0), x.getLong(1))).toSeq
+      assert(tr == pr, s"graph $g, $iterations iterations")
+    }
+  }
+
   test("hits: hand-computed integral hub/authority ladder on a 3-node graph") {
     // a->b, a->c, b->c (+ a duplicate and a self-loop that must be dropped)
     val edges = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("a", "b"), ("c", "c"))
